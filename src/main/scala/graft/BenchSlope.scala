@@ -118,12 +118,8 @@ object BenchSlope {
     }
   }
 
-  private def evictAll(s: SparkSession): Unit = {
-    graft.operators.DupClusters.evictSession(s)
-    graft.operators.LexIndex.evictSession(s)
-    graft.operators.Similarity.IvfIndex.evictSession(s)
-    graft.operators.MmIvf.evictSession(s)
-  }
+  private def evictAll(s: SparkSession): Unit =
+    graft.core.Artifact.kinds.foreach(_.evictSession(s))
 
   def main(args: Array[String]): Unit = {
     val small = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")

@@ -846,20 +846,10 @@ private[core] final class ExpireIndexesProcedure
     val olderMs = Some(input.getLong(3)).filter(_ >= 0)
     val gates = input.getUTF8String(4).toString
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val swept = kind match {
-      case "ivf" => graft.operators.Similarity.IvfIndex
-        .expireStale(dirs, keepN, olderMs)
-      case "dup" => graft.operators.DupClusters.expireStale(dirs, keepN, olderMs)
-      case "lex" => graft.operators.LexIndex.expireStale(dirs, keepN, olderMs)
-      case "mm"  => graft.operators.MmIvf.expireStale(dirs, keepN, olderMs, gates)
-      case "all" =>
-        graft.operators.Similarity.IvfIndex.expireStale(dirs, keepN, olderMs) ++
-          graft.operators.DupClusters.expireStale(dirs, keepN, olderMs) ++
-          graft.operators.LexIndex.expireStale(dirs, keepN, olderMs) ++
-          graft.operators.MmIvf.expireStale(dirs, keepN, olderMs, gates)
-      case other => throw new IllegalArgumentException(
-        s"expire_indexes: unknown kind '$other' (ivf | dup | lex | mm | all)")
-    }
+    val families = Artifact.kinds.filter(f => kind == "all" || f.kind == kind)
+    if (families.isEmpty) throw new IllegalArgumentException(
+      s"expire_indexes: unknown kind '$kind' (ivf | dup | lex | mm | all)")
+    val swept = families.flatMap(_.expireStale(dirs, keepN, olderMs, gates))
     val schema = StructType(Seq(
       StructField("kind", StringType, nullable = false),
       StructField("name", StringType, nullable = false),

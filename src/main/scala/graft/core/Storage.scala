@@ -107,7 +107,7 @@ trait Storage {
     * any rewrite perturbs. NOT a full-content hash and not adversarial —
     * it is a change detector for the append guards, not an integrity
     * proof. Formatted `t<hex>` so listing entries carrying it are
-    * self-describing (see `LexIndex.corpusEntries`). */
+    * self-describing (see `Artifact.corpusEntries`). */
   def contentToken(p: String): String
 }
 

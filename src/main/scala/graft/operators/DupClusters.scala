@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
+import graft.core.Artifact.sub
 import graft.functions.GraftFunctions
 
 /** DURABLE dup-cluster index over the SimHash near-dup graph — the artifact
@@ -15,13 +16,12 @@ import graft.functions.GraftFunctions
   * per invocation; with it, the graph is mined ONCE per corpus state and
   * every consumer afterwards reads graph-sized parquet.
   *
-  * Same durability pattern as [[Similarity.IvfIndex]] (the template this
-  * deliberately mirrors): corpus-fingerprint-keyed directory under
-  * `graft.dupindex.root`, staged build published by ONE atomic rename with
-  * the metadata marker written last, all mutation under the shared
-  * stale-safe index lock, and an in-process memo so a session pays the
-  * parquet read once. A changed corpus hashes to a different directory, so
-  * load-on-miss can never serve a stale graph.
+  * Durability is the [[Artifact]] protocol (family [[Artifact.Dup]]):
+  * corpus-fingerprint-keyed directory under `graft.dupindex.root`, staged
+  * build published by ONE atomic rename with `meta.tsv` written last, all
+  * mutation under the shared index lock, and a session handle cache so a
+  * session pays the parquet read once. A changed corpus hashes to a
+  * different directory, so load-on-miss can never serve a stale graph.
   *
   * On-disk layout (`v1-<fp>-p<iters>/`):
   *   - `sigs/`     (doc_id, simhash)            — node-sized; what appends
@@ -73,20 +73,9 @@ object DupClusters {
   final case class DupIndex(path: String, nDocs: Long, sigs: DataFrame,
                             pairs: DataFrame, clusters: DataFrame,
                             severed: DataFrame, refuted: DataFrame,
-                            verdicts: DataFrame)
-
-  private val cache = new graft.core.SessionCache[DupIndex](i => {
-    i.pairs.unpersist(); i.clusters.unpersist()
-    i.severed.unpersist(); i.refuted.unpersist(); ()
-  })
-
-  private lazy val store: graft.core.Storage = graft.core.Storage.hadoop
-
-  /** Root for durable dup-cluster indexes (`graft.dupindex.root` overrides;
-    * any Hadoop URI on a rename-capable store — the same coordination
-    * contract [[Similarity.IvfIndex]] enforces through the shared lock). */
-  private def indexRoot: String =
-    sys.props.getOrElse("graft.dupindex.root", "target/dup-index")
+                            verdicts: DataFrame) extends Artifact.Handle {
+    def persistedFrames: Seq[DataFrame] = Seq(pairs, clusters, severed, refuted)
+  }
 
   /** Bump when the graph recipe (banding, Hamming bound, iteration counts)
     * or the layout changes — an index built by an older recipe must not be
@@ -100,66 +89,37 @@ object DupClusters {
     * never-verified weak edges pay the fetch+DP). */
   private val FormatVersion = 4
 
-  private def sub(base: String, child: String): String =
-    new org.apache.hadoop.fs.Path(base, child).toString
+  private val Marker = "meta.tsv"
 
-  private def corpusPath(dir: String): String =
-    new org.apache.hadoop.fs.Path(dir, "documents.parquet").toString
-
+  /** `<graft.dupindex.root>/v<ver>-<fp>-p<iters>` ([[Artifact.Dup]]). */
   private def indexPath(dir: String): String =
-    new org.apache.hadoop.fs.Path(indexRoot,
-      s"v$FormatVersion-" +
-        Similarity.IvfIndex.fileFingerprint(corpusPath(dir)) +
-        s"-p${Dedup.PageRankIters}").toString
+    Artifact.Dup.dirFor(dir, FormatVersion, s"-p${Dedup.PageRankIters}")
 
   /** Corpus doc count from parquet metadata — a driver-cheap reconciliation
     * handle ([[append]] refuses a delta that doesn't add up). */
   private def corpusCount(s: SparkSession, dir: String): Long =
     Tables.documents(s, dir).count()
 
-  /** Retention sweep over this root: drop superseded fingerprint dirs
-    * (never a listed corpus's live fingerprint, never a lock-held build)
-    * outside the newest `keepLastN` and older than `olderThanMs`. `dirs`
-    * must list EVERY corpus served from this root — an unlisted corpus's
-    * live index is indistinguishable from a superseded one. See
-    * [[IndexRetention]] and `CALL graft.system.expire_indexes`. */
-  def expireStale(dirs: Seq[String], keepLastN: Option[Int],
-                  olderThanMs: Option[Long]): Seq[IndexRetention.Swept] =
-    IndexRetention.sweep(store, indexRoot, "dup",
-      dirs.flatMap(d =>
-        IndexRetention.liveCorpusFile(store, d, corpusPath(d))
-          .map(Similarity.IvfIndex.fileFingerprint)).toSet,
-      keepLastN, olderThanMs)
-
   /** Build (or fetch) the index for `dir`: in-process memo, then the
     * durable on-disk copy, and only on a true miss the one-pass corpus
     * build — staged and atomically renamed into place under the shared
     * mutation lock (two racing JVMs: one rename wins, the loser loads). */
   def build(s: SparkSession, dir: String): DupIndex =
-    cache.getOrCompute(s, indexPath(dir))(loadOrBuild(s, dir))
+    Artifact.Dup.cached(s, indexPath(dir))(loadOrBuild(s, dir))
 
   private def loadOrBuild(s: SparkSession, dir: String): DupIndex = {
     val path = indexPath(dir)
-    val marker = sub(path, "meta.tsv")
-    if (!store.exists(marker)) {
-      store.mkdirs(indexRoot)
-      Similarity.IvfIndex.withIndexLock(path + ".lock") {
-        if (!store.exists(marker)) {
-          // a marker-less directory is a crashed pre-publish leftover —
-          // safe to clear under the lock
-          if (store.exists(path)) store.deleteRecursive(path)
-          val entries = LexIndex.corpusEntries(corpusPath(dir))
-          val sigs = Dedup.simhash(s, dir)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val pairs = Dedup.pairsOfSigs(sigs)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try stageAndPublish(s, path, sigs, pairs, corpusCount(s, dir),
-              entries, Tables.documents(s, dir), None)
-            finally { pairs.unpersist(); () }
-          } finally { sigs.unpersist(); () }
-        }
-      }
+    Artifact.publishOnce(path, Marker) { staging =>
+      val entries = Artifact.corpusEntries(Artifact.Dup.corpusFile(dir))
+      val sigs = Dedup.simhash(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val pairs = Dedup.pairsOfSigs(sigs)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try stage(s, staging, sigs, pairs, corpusCount(s, dir),
+          entries, Tables.documents(s, dir), None)
+        finally { pairs.unpersist(); () }
+      } finally { sigs.unpersist(); () }
     }
     load(s, path)
   }
@@ -179,19 +139,18 @@ object DupClusters {
     prior.select("a_id", "b_id", "refuted")
       .join(pairs.select("a_id", "b_id"), Seq("a_id", "b_id"), "left_semi")
 
-  /** Stage the six frames + marker into `<path>.tmp-*`, publish by ONE
-    * atomic rename. `pairs` must be persisted by the caller — components,
+  /** Stage the six frames + marker into `staging` ([[Artifact.publishOnce]]
+    * publishes it). `pairs` must be persisted by the caller — components,
     * PageRank, the severing, and the parquet write all read it. `docs` is
     * the post-state corpus reader — the severing's edit-distance
     * re-verification ([[Dedup.refutedWeakEdges]]) fetches endpoint text
     * for the weak cut-set through it: a map-only broadcast-pruned scan,
     * the one place the build touches text beyond the signature pass. */
-  private def stageAndPublish(s: SparkSession, path: String, sigs: DataFrame,
-                              pairs: DataFrame, nDocs: Long,
-                              entries: Seq[String], docs: DataFrame,
-                              priorVerdicts: Option[DataFrame]): Unit = {
+  private def stage(s: SparkSession, staging: String, sigs: DataFrame,
+                    pairs: DataFrame, nDocs: Long,
+                    entries: Seq[String], docs: DataFrame,
+                    priorVerdicts: Option[DataFrame]): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val staging = path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
     val edges = pairs.select("a_id", "b_id")
     val comp = Dedup.componentsOfPairs(s, edges, Dedup.MaxDriverPairs)
     val ranks = Dedup.pageRank(edges, Dedup.PageRankIters)
@@ -240,36 +199,18 @@ object DupClusters {
         } finally { refuted.unpersist(); () }
       } finally { verdicts.unpersist(); () }
     } finally { weak.unpersist(); () }
-    store.writeString(sub(staging, "corpus_files.tsv"),
-      entries.mkString("", "\n", "\n"))
-    store.writeString(sub(staging, "meta.tsv"),
-      s"nDocs\t$nDocs\npageRankIters\t${Dedup.PageRankIters}\n")
-    if (!(store.rename(staging, path) && store.exists(sub(path, "meta.tsv")))) {
-      store.deleteRecursive(staging)
-      throw new IllegalStateException(
-        s"dup-cluster index: publishing $staging -> $path failed")
-    }
+    Artifact.writeCorpusEntries(staging, entries)
+    Artifact.writeMeta(staging,
+      "nDocs" -> nDocs, "pageRankIters" -> Dedup.PageRankIters)
   }
 
   private def load(s: SparkSession, path: String): DupIndex = {
-    val meta = store.readString(sub(path, "meta.tsv"))
-      .linesIterator.map(_.split("\t")).collect { case Array(k, v) => k -> v }
-      .toMap
-    val pairs = s.read.parquet(sub(path, "pairs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // materialize: consumers must not re-read per branch
-    val clusters = s.read.parquet(sub(path, "clusters"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    clusters.count()
-    val severed = s.read.parquet(sub(path, "severed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    severed.count()
-    val refuted = s.read.parquet(sub(path, "refuted"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    refuted.count()
-    DupIndex(path, meta("nDocs").toLong,
-      s.read.parquet(sub(path, "sigs")), pairs, clusters, severed, refuted,
-      s.read.parquet(sub(path, "verdicts")))
+    def frame(child: String) = s.read.parquet(sub(path, child))
+    DupIndex(path, Artifact.readMeta(path)("nDocs").toLong, frame("sigs"),
+      Artifact.persistCounted(frame("pairs")),
+      Artifact.persistCounted(frame("clusters")),
+      Artifact.persistCounted(frame("severed")),
+      Artifact.persistCounted(frame("refuted")), frame("verdicts"))
   }
 
   /** Incremental maintenance — the ingestion-side contract that keeps the
@@ -302,28 +243,15 @@ object DupClusters {
     * an in-place edit can keep the count unchanged) a per-file check that
     * every corpus file recorded at the prior build is still unchanged
     * (size + mtime + content token, `corpus_files.tsv` — ADVICE r11: the
-    * token catches same-size preserved-mtime rewrites; shared with
-    * [[LexIndex.changedPriorFiles]]) — an append only ADDS files. */
+    * token catches same-size preserved-mtime rewrites —
+    * [[Artifact.Family.appendGuard]]) — an append only ADDS files. */
   def append(s: SparkSession, dir: String, prior: DupIndex,
              newDocs: DataFrame): DupIndex = {
     GraftFunctions.register(s)
     val newPath = indexPath(dir)
-    require(newPath != prior.path,
-      "dup-cluster append: corpus fingerprint unchanged — the delta is not " +
-        "in the corpus yet (append AFTER the new files land)")
-    val priorEntries = store.readString(sub(prior.path, "corpus_files.tsv"))
-      .linesIterator.filter(_.nonEmpty).toSeq
-    val nowEntries = LexIndex.corpusEntries(corpusPath(dir))
-    val changed = LexIndex.changedPriorFiles(priorEntries, nowEntries)
-    require(changed.isEmpty,
-      s"dup-cluster append: ${changed.size} pre-existing corpus file(s) " +
-        s"changed out-of-band (${changed.take(3).mkString(", ")}) — " +
-        "rebuild instead of appending onto a stale base")
-    val now = corpusCount(s, dir)
-    val nNew = newDocs.count()
-    require(prior.nDocs + nNew == now,
-      s"dup-cluster append: prior ${prior.nDocs} docs + delta $nNew != " +
-        s"corpus $now — out-of-band change detected, rebuild instead")
+    val (nowEntries, now) = Artifact.Dup.appendGuard("dup-cluster append",
+      prior.path, newPath, dir, prior.nDocs, corpusCount(s, dir),
+      newDocs.count())
     val dSigs = newDocs.selectExpr("doc_id", "simhash32(text) AS simhash")
       .where(col("simhash").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -355,27 +283,18 @@ object DupClusters {
         val pairs = prior.pairs.unionByName(newPairs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          Similarity.IvfIndex.withIndexLock(newPath + ".lock") {
-            if (!store.exists(sub(newPath, "meta.tsv"))) {
-              if (store.exists(newPath)) store.deleteRecursive(newPath)
-              stageAndPublish(s, newPath, allSigs, pairs, now, nowEntries,
-                Tables.documents(s, dir), Some(prior.verdicts))
-            }
+          Artifact.publishOnce(newPath, Marker) { staging =>
+            stage(s, staging, allSigs, pairs, now, nowEntries,
+              Tables.documents(s, dir), Some(prior.verdicts))
           }
         } finally { pairs.unpersist(); () }
       } finally { allSigs.unpersist(); () }
     } finally { dSigs.unpersist(); () }
-    // the superseded handle's persisted frames must not pin the
-    // CacheManager until context stop — a long-running advanceIndex gate
-    // appends every micro-batch (the IvfIndex.append discipline; review
-    // r11: evictSession's release never fires on this production path)
-    prior.pairs.unpersist(); prior.clusters.unpersist()
-    prior.severed.unpersist(); prior.refuted.unpersist()
-    cache.getOrCompute(s, newPath)(load(s, newPath))
+    Artifact.Dup.supersede(s, prior, newPath)(load(s, newPath))
   }
 
   /** Test/maintenance hook: drop this session's memoized frames so a fresh
     * [[build]] exercises the durable load path. */
   private[graft] def evictSession(s: SparkSession): Unit =
-    cache.evictSession(s)
+    Artifact.Dup.evictSession(s)
 }

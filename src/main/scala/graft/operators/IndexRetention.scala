@@ -1,7 +1,8 @@
 package graft.operators
 
 /** Retention sweep for the durable index artifacts ([[Similarity.IvfIndex]],
-  * [[DupClusters]], [[LexIndex]]). Each of those publishes a NEW
+  * [[DupClusters]], [[LexIndex]], [[MmIvf]]), run per family by
+  * [[graft.core.Artifact.Family.expireStale]]. Each of those publishes a NEW
   * corpus-fingerprint-keyed directory whenever the corpus changes and never
   * deletes superseded ones — correct (fingerprint keying is exactly what
   * makes stale serving impossible) but unbounded storage under daily corpus

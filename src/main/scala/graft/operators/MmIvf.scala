@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
+import graft.core.Artifact.sub
 
 /** DURABLE IVF index over MULTIMODAL asset features — the bridge between
   * the decode-kernel families ([[Multimodal.qMm11]] tiles, [[Multimodal
@@ -31,11 +32,11 @@ import graft.core.Tables
   * squared-L2 in BIGINT. The whole index replays arithmetically in the
   * DuckDB oracle from the closed-form canvas (`pngGray`).
   *
-  * DURABILITY: same contract as [[Similarity.IvfIndex]] / [[DupClusters]]
-  * — root `graft.mmivf.root` (default `target/mm-index`), directory keyed
-  * by the corpus fingerprint (documents.parquet metadata, the pngAssets
-  * source), staged build published by ONE atomic rename under the shared
-  * mutation lock, in-process memo per session. Layout:
+  * DURABILITY: the [[Artifact]] protocol (family [[Artifact.Mm]]) — root
+  * `graft.mmivf.root` (default `target/mm-index`), directory keyed by the
+  * corpus fingerprint (documents.parquet metadata, the pngAssets source),
+  * staged build published by ONE atomic rename under the shared mutation
+  * lock, session handle cache. Layout:
   *   - `features/` (asset_id, f array<bigint>, cell) — cell-partitioned,
   *     so a probe reads only its cells' files (parquet partition pruning)
   *   - `centroids.tsv` — seed centroids, Double.toString round-trip exact;
@@ -59,7 +60,7 @@ import graft.core.Tables
   * a frozen-centroid append and a crash-replay rebuild must publish
   * identical content under the same fingerprint. The ST-9 gate's
   * `advanceMm` advances BOTH lanes under the batch's `_commits` marker;
-  * retention is shared (`expire_indexes(kind => 'mm')`, [[expireStale]]).
+  * retention is shared (`expire_indexes(kind => 'mm')`, [[Artifact.Mm]]).
   */
 object MmIvf {
 
@@ -72,34 +73,25 @@ object MmIvf {
 
   final case class Index(path: String, fn: String, cellIds: Array[Long],
                          cents: Array[Array[Double]], feats: DataFrame)
-
-  private val cache = new graft.core.SessionCache[Index](i => {
-    i.feats.unpersist(); ()
-  })
+      extends Artifact.Handle {
+    def persistedFrames: Seq[DataFrame] = Seq(feats)
+  }
 
   private[graft] def evictSession(s: SparkSession): Unit =
-    cache.evictSession(s)
+    Artifact.Mm.evictSession(s)
 
   private lazy val store: graft.core.Storage = graft.core.Storage.hadoop
-
-  private def indexRoot: String =
-    sys.props.getOrElse("graft.mmivf.root", "target/mm-index")
 
   /** Bump when the feature recipe, quantizer, or layout changes. */
   private val FormatVersion = 1
 
-  private def sub(base: String, child: String): String =
-    new org.apache.hadoop.fs.Path(base, child).toString
+  private val Marker = "centroids.tsv"
 
-  private def indexPath(dir: String, lane: String = "img"): String = {
-    val fp = Similarity.IvfIndex.fileFingerprint(
-      new org.apache.hadoop.fs.Path(dir, "documents.parquet").toString)
+  private def indexPath(dir: String, lane: String = "img"): String =
     // the image lane keeps its original (unsuffixed) dir name, so an
     // index published before the audio lane existed still warm-loads
-    val suffix = if (lane == "img") "" else s"-$lane"
-    new org.apache.hadoop.fs.Path(indexRoot,
-      s"v$FormatVersion-$fp-k$Cells$suffix").toString
-  }
+    Artifact.Mm.dirFor(dir, FormatVersion,
+      s"-k$Cells" + (if (lane == "img") "" else s"-$lane"))
 
   private def fnName(path: String): String =
     "mmivf_cells_" + java.security.MessageDigest.getInstance("MD5")
@@ -144,22 +136,6 @@ object MmIvf {
       }.toDF("asset_id", "f")
   }
 
-  /** Retention sweep over this root ([[Similarity.IvfIndex.expireStale]]'s
-    * contract, kind `mm`): drop superseded fingerprint dirs — never a
-    * listed corpus's live fingerprint, never a lock-held build. `dirs`
-    * must list EVERY corpus served from this root. */
-  def expireStale(dirs: Seq[String], keepLastN: Option[Int],
-                  olderThanMs: Option[Long],
-                  gateStoreDirs: Seq[String] = Nil): Seq[IndexRetention.Swept] =
-    IndexRetention.sweep(store, indexRoot, "mm",
-      dirs.flatMap { d =>
-        val corpus =
-          new org.apache.hadoop.fs.Path(d, "documents.parquet").toString
-        IndexRetention.liveCorpusFile(store, d, corpus)
-          .map(_ => Similarity.IvfIndex.fileFingerprint(corpus))
-      }.toSet, keepLastN, olderThanMs,
-      protectedNames = extPriorPins(gateStoreDirs))
-
   /** Generations a live gate's crash replay still needs (ADVICE r17):
     * every staged `_commits/<id>.delta/_extprior` under the listed gate
     * store dirs names the pre-delta ext index whose [[loadAt]] finishes
@@ -167,7 +143,8 @@ object MmIvf {
     * (re-seed is the only recovery). The sweep pins those exact dir
     * names. List every gate store dir that feeds a swept corpus; the
     * gate's own upkeep passes its own automatically. Pointer-file reads
-    * only — staged-delta-count-sized, no data touched. */
+    * only — staged-delta-count-sized, no data touched. The mm family's
+    * retention pins ([[Artifact.Mm]]). */
   private[graft] def extPriorPins(gateStoreDirs: Seq[String]): Set[String] =
     gateStoreDirs.flatMap { sd =>
       val commits = s"$sd/_commits"
@@ -247,14 +224,14 @@ object MmIvf {
     * staged one-pass build under the shared lock (the [[DupClusters]]
     * recipe). */
   def build(s: SparkSession, dir: String): Index =
-    cache.getOrCompute(s, indexPath(dir))(loadOrBuild(s, dir, "img"))
+    Artifact.Mm.cached(s, indexPath(dir))(loadOrBuild(s, dir, "img"))
 
   /** The AUDIO lane of the same index family: frame-energy vectors under
     * their own fingerprint-keyed dir (`…-aud`), same staging/lock/load
     * machinery, swept by the same `mm` retention kind (the dir name
     * carries the corpus fingerprint, which is what the sweep matches). */
   def buildAudio(s: SparkSession, dir: String): Index =
-    cache.getOrCompute(s, indexPath(dir, "aud"))(loadOrBuild(s, dir, "aud"))
+    Artifact.Mm.cached(s, indexPath(dir, "aud"))(loadOrBuild(s, dir, "aud"))
 
   /** The EXTERNAL-ENCODER lane (VERDICT r15 missing #3): when the assets
     * carry learned per-asset embeddings, index THOSE through the same
@@ -273,7 +250,7 @@ object MmIvf {
     * here with the full frame. */
   def buildExternal(s: SparkSession, dir: String,
                     vectors: Option[DataFrame] = None): Index =
-    cache.getOrCompute(s, indexPath(dir, "ext"))(
+    Artifact.Mm.cached(s, indexPath(dir, "ext"))(
       loadOrBuild(s, dir, "ext", vectors))
 
   /** Is an external-lane index PUBLISHED at `dir`'s current corpus
@@ -283,18 +260,18 @@ object MmIvf {
     * silently mix vector spaces ([[appendExternal]]'s one-encoder-one-
     * lane contract). Metadata-only probe — one marker existence check. */
   private[graft] def hasExternal(dir: String): Boolean =
-    store.exists(sub(indexPath(dir, "ext"), "centroids.tsv"))
+    Artifact.isPublished(indexPath(dir, "ext"), Marker)
 
   /** Warm-load an index by its PUBLISHED path — the gate's crash-replay
     * hook: the staged `_extprior` pointer names the pre-delta ext index,
     * and finishing the interrupted [[appendExternal]] needs that handle
     * back without recomputing a fingerprint the corpus no longer has. */
   private[graft] def loadAt(s: SparkSession, path: String): Index = {
-    require(store.exists(sub(path, "centroids.tsv")),
+    require(Artifact.isPublished(path, Marker),
       s"mm-ivf loadAt: no published index at $path (expired out from " +
         "under a staged gate delta? expire_indexes must keep at least " +
         "the latest superseded generation while a gate is live)")
-    cache.getOrCompute(s, path)(load(s, path))
+    Artifact.Mm.cached(s, path)(load(s, path))
   }
 
   /** Delta-append for a lane (VERDICT r15 task 3 — the [[Similarity
@@ -324,27 +301,20 @@ object MmIvf {
         "delta's vectors; the external lane appends caller-supplied " +
         "delta vectors via appendExternal, or rebuilds via buildExternal")
     val path = indexPath(dir, lane)
-    val marker = sub(path, "centroids.tsv")
-    require(path != prior.path,
-      "mm-ivf append: corpus fingerprint unchanged — the delta is not in " +
-        "the corpus yet (append AFTER the new files land)")
-    val seedRaising = !store.exists(marker) &&
+    Artifact.requireAdvanced("mm-ivf append", prior.path, path)
+    val seedRaising = !Artifact.isPublished(path, Marker) &&
       !newAssetIds.where(col("asset_id") < Cells).isEmpty
     if (seedRaising) System.err.println(
       s"mm-ivf append ($lane): delta contains seed-range asset ids " +
         s"(< $Cells) — routing to a full rebuild so the published " +
         "centroids match a from-scratch build")
-    if (!store.exists(marker) && !seedRaising) {
+    if (!seedRaising) {
       val dAssets = deltaAssets(s, newAssetIds, lane)
       publishAppended(s, path, prior,
         if (lane == "aud") audioFeaturesOf(dAssets)
         else imageFeaturesOf(s, dAssets))
     }
-    // the superseded handle's persisted frame must not pin the
-    // CacheManager under a long-running gate (the DupClusters.append
-    // discipline); the fresh load below re-persists the new state
-    prior.feats.unpersist()
-    cache.getOrCompute(s, path)(loadOrBuild(s, dir, lane))
+    Artifact.Mm.supersede(s, prior, path)(loadOrBuild(s, dir, lane))
   }
 
   /** Delta-append for the EXTERNAL lane ([[buildExternal]]): the caller
@@ -360,19 +330,14 @@ object MmIvf {
   def appendExternal(s: SparkSession, dir: String, prior: Index,
                      newVecs: DataFrame): Index = {
     val path = indexPath(dir, "ext")
-    val marker = sub(path, "centroids.tsv")
-    require(path != prior.path,
-      "mm-ivf append: corpus fingerprint unchanged — the delta is not in " +
-        "the corpus yet (append AFTER the new files land)")
-    require(store.exists(marker) ||
+    Artifact.requireAdvanced("mm-ivf append", prior.path, path)
+    require(Artifact.isPublished(path, Marker) ||
       newVecs.where(col("asset_id") < Cells).isEmpty,
       s"mm-ivf external append: delta contains seed-range asset ids " +
         s"(< $Cells) — a frozen-centroid append would diverge from a " +
         "rebuild; rebuild via buildExternal with the full vector frame")
-    if (!store.exists(marker))
-      publishAppended(s, path, prior, newVecs.select("asset_id", "f"))
-    prior.feats.unpersist()
-    cache.getOrCompute(s, path)(loadOrBuild(s, dir, "ext",
+    publishAppended(s, path, prior, newVecs.select("asset_id", "f"))
+    Artifact.Mm.supersede(s, prior, path)(loadOrBuild(s, dir, "ext",
       // belt-and-braces: the publish above makes this a warm load; a
       // racing JVM's publish also loads — the fixture fallback never runs
       None))
@@ -380,106 +345,63 @@ object MmIvf {
 
   /** The shared append publish: assign `dFeats` against the PRIOR's
     * frozen centroids, union with the prior's cell-partitioned features,
-    * stage, and rename into the (post-delta-fingerprint) `path`. */
+    * stage, and publish at the (post-delta-fingerprint) `path` — a no-op
+    * when `path` is already published. */
   private def publishAppended(s: SparkSession, path: String, prior: Index,
-                              dFeats: DataFrame): Unit = {
-    store.mkdirs(indexRoot)
-    Similarity.IvfIndex.withIndexLock(path + ".lock") {
-      if (!store.exists(sub(path, "centroids.tsv"))) {
-        if (store.exists(path)) store.deleteRecursive(path)
-        val staging = path + ".tmp-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        val fn = fnName(staging)
-        graft.functions.IvfRankCells.register(s, fn,
-          prior.cellIds, prior.cents)
-        // ids already indexed in the prior must not re-enter (ADVICE
-        // r16): the gate path is disjoint by the _commits marker, but an
-        // out-of-band caller replaying a delta against a STALE prior
-        // handle at a new fingerprint would otherwise publish duplicate
-        // feature rows. Anti-join is delta-sized against the id column
-        // of the cell-partitioned prior — one broadcast-able projection.
-        val fresh = dFeats.join(prior.feats.select("asset_id"),
-          Seq("asset_id"), "left_anti")
-        prior.feats
-          .selectExpr("asset_id", "f", "CAST(cell AS BIGINT) AS cell")
-          .unionByName(fresh.selectExpr("asset_id", "f",
-            s"CAST(element_at($fn(transform(f, x -> CAST(x AS DOUBLE)), " +
-              "1), 1) AS BIGINT) AS cell"))
-          .write.partitionBy("cell").parquet(sub(staging, "features"))
-        store.writeString(sub(staging, "centroids.tsv"),
-          prior.cellIds.zip(prior.cents)
-            .map { case (cid, c) => s"$cid\t${c.mkString(",")}" }
-            .mkString("", "\n", "\n"))
-        if (!(store.rename(staging, path) &&
-              store.exists(sub(path, "centroids.tsv")))) {
-          store.deleteRecursive(staging)
-          throw new IllegalStateException(
-            s"mm-ivf index: publishing $staging -> $path failed")
-        }
-      }
+                              dFeats: DataFrame): Unit =
+    Artifact.publishOnce(path, Marker) { staging =>
+      val fn = fnName(staging)
+      graft.functions.IvfRankCells.register(s, fn,
+        prior.cellIds, prior.cents)
+      // ids already indexed in the prior must not re-enter (ADVICE
+      // r16): the gate path is disjoint by the _commits marker, but an
+      // out-of-band caller replaying a delta against a STALE prior
+      // handle at a new fingerprint would otherwise publish duplicate
+      // feature rows. Anti-join is delta-sized against the id column
+      // of the cell-partitioned prior — one broadcast-able projection.
+      val fresh = dFeats.join(prior.feats.select("asset_id"),
+        Seq("asset_id"), "left_anti")
+      prior.feats
+        .selectExpr("asset_id", "f", "CAST(cell AS BIGINT) AS cell")
+        .unionByName(fresh.selectExpr("asset_id", "f",
+          s"CAST(element_at($fn(transform(f, x -> CAST(x AS DOUBLE)), " +
+            "1), 1) AS BIGINT) AS cell"))
+        .write.partitionBy("cell").parquet(sub(staging, "features"))
+      Artifact.writeCentroids(staging, prior.cellIds, prior.cents)
     }
-  }
 
   private def loadOrBuild(s: SparkSession, dir: String, lane: String,
                           ext: Option[DataFrame] = None): Index = {
     val path = indexPath(dir, lane)
-    val marker = sub(path, "centroids.tsv")
-    if (!store.exists(marker)) {
-      store.mkdirs(indexRoot)
-      Similarity.IvfIndex.withIndexLock(path + ".lock") {
-        if (!store.exists(marker)) {
-          if (store.exists(path)) store.deleteRecursive(path)
-          stageAndPublish(s, dir, path, lane, ext)
-        }
-      }
+    Artifact.publishOnce(path, Marker) { staging =>
+      val fr = ext.getOrElse(featuresOf(s, dir, lane))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // K bounded seed rows to the driver; integer features widen to
+        // double EXACTLY (every value < 2^53)
+        val seeds = fr.where(col("asset_id") < Cells).orderBy("asset_id")
+          .collect()
+          .map(r => (r.getLong(0), r.getSeq[Long](1).map(_.toDouble).toArray))
+        require(seeds.nonEmpty, s"mm-ivf: no decodable assets under $dir")
+        val ids = seeds.map(_._1)
+        val cents = seeds.map(_._2)
+        val fn = fnName(staging) // temp name; re-registered on load
+        graft.functions.IvfRankCells.register(s, fn, ids, cents)
+        fr.selectExpr("asset_id", "f",
+            s"element_at($fn(transform(f, x -> CAST(x AS DOUBLE)), 1), 1) AS cell")
+          .write.partitionBy("cell").parquet(sub(staging, "features"))
+        Artifact.writeCentroids(staging, ids, cents)
+      } finally { fr.unpersist(); () }
     }
     load(s, path)
   }
 
-  private def stageAndPublish(s: SparkSession, dir: String,
-                              path: String, lane: String = "img",
-                              ext: Option[DataFrame] = None): Unit = {
-    val staging = path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
-    val fr = ext.getOrElse(featuresOf(s, dir, lane))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // K bounded seed rows to the driver; integer features widen to
-      // double EXACTLY (every value < 2^53)
-      val seeds = fr.where(col("asset_id") < Cells).orderBy("asset_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1).map(_.toDouble).toArray))
-      require(seeds.nonEmpty, s"mm-ivf: no decodable assets under $dir")
-      val ids = seeds.map(_._1)
-      val cents = seeds.map(_._2)
-      val fn = fnName(staging) // temp name; re-registered on load
-      graft.functions.IvfRankCells.register(s, fn, ids, cents)
-      fr.selectExpr("asset_id", "f",
-          s"element_at($fn(transform(f, x -> CAST(x AS DOUBLE)), 1), 1) AS cell")
-        .write.partitionBy("cell").parquet(sub(staging, "features"))
-      store.writeString(sub(staging, "centroids.tsv"),
-        ids.zip(cents).map { case (cid, c) => s"$cid\t${c.mkString(",")}" }
-          .mkString("", "\n", "\n"))
-      if (!(store.rename(staging, path) &&
-            store.exists(sub(path, "centroids.tsv")))) {
-        store.deleteRecursive(staging)
-        throw new IllegalStateException(
-          s"mm-ivf index: publishing $staging -> $path failed")
-      }
-    } finally { fr.unpersist(); () }
-  }
-
   private def load(s: SparkSession, path: String): Index = {
-    val lines = store.readString(sub(path, "centroids.tsv"))
-      .split("\n").filter(_.nonEmpty).map { line =>
-        val Array(cid, vs) = line.split("\t", 2)
-        (cid.toLong, vs.split(",").map(_.toDouble))
-      }
+    val (ids, cents) = Artifact.readCentroids(path)
     val fn = fnName(path)
-    graft.functions.IvfRankCells.register(s, fn, lines.map(_._1), lines.map(_._2))
-    val feats = s.read.parquet(sub(path, "features"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    feats.count() // materialize once per session
-    Index(path, fn, lines.map(_._1), lines.map(_._2), feats)
+    graft.functions.IvfRankCells.register(s, fn, ids, cents)
+    Index(path, fn, ids, cents,
+      Artifact.persistCounted(s.read.parquet(sub(path, "features"))))
   }
 
   /** Q-MM19 — SERVED IMAGE SIMILARITY SEARCH: top-5 nearest images per
@@ -692,10 +614,10 @@ object MmIvf {
                         lane: String): DataFrame = {
     require(lane == "img" || lane == "aud" || lane == "ext",
       s"mm-ivf nprobe curve: unknown lane '$lane' (img | aud | ext)")
-    // by-name sweep block: a WARM call reads the published parquet and
-    // never builds/loads the lane index at all (review r18); the cold
-    // path builds the lane first, so the sidecar's parent dir exists
-    Similarity.IvfIndex.publishSidecarOnce(s, nprobeCurvePath(dir, lane)) {
+    // the stage block runs only on a miss: a WARM call reads the
+    // published parquet and never builds/loads the lane index at all
+    // (review r18)
+    Artifact.publishOnce(nprobeCurvePath(dir, lane), "_SUCCESS") { staging =>
       val idx = lane match {
         case "img" => build(s, dir)
         case "aud" => buildAudio(s, dir)
@@ -707,7 +629,8 @@ object MmIvf {
               "must not fixture-build an encoder lane)")
           buildExternal(s, dir)
       }
-      nprobeCurve(s, idx)
+      nprobeCurve(s, idx).write.parquet(staging)
     }
+    s.read.parquet(nprobeCurvePath(dir, lane))
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
+import graft.core.Artifact.sub
 import graft.functions.GraftFunctions
 
 /** Similarity search over the `embeddings` table (SURVEY.md Q-X2 + ANN
@@ -131,7 +132,9 @@ object Similarity {
       * cell-partitioned assignment. */
     final case class Index(fn: String, cellIds: Array[Long],
                            cents: Array[Array[Double]], assigned: DataFrame,
-                           scale: Double, qassigned: DataFrame) {
+                           scale: Double, qassigned: DataFrame)
+        extends Artifact.Handle {
+      def persistedFrames: Seq[DataFrame] = Seq(assigned, qassigned)
       /** PQ codebook: the 16 int8 seed vectors of the SERVED lane —
         * bounded driver metadata, derived from the immutable published
         * index state, so memoized as a lazy val on the session-cached
@@ -145,155 +148,11 @@ object Similarity {
           .map(_.getSeq[Byte](0).map(_.toLong).toArray)
     }
 
-    private val cache = new graft.core.SessionCache[Index](i => {
-      i.assigned.unpersist(); i.qassigned.unpersist(); ()
-    })
-
     /** Test/bench hook ([[DupClusters.evictSession]]'s contract): drop the
       * session's memo so the next [[build]] exercises the durable load
       * path instead of returning the in-process handle. */
     private[graft] def evictSession(s: SparkSession): Unit =
-      cache.evictSession(s)
-
-    private lazy val store: graft.core.Storage = graft.core.Storage.hadoop
-
-    /** One mutation lock per index (`<indexPath>.lock`, exclusive create):
-      * builds and appends both take it, so a build can never rename onto a
-      * half-appended directory and two appends can never interleave
-      * partition files.
-      *
-      * Crash recovery: a holder that died without releasing is TAKEN OVER
-      * once the lock is older than the staleness bound (default 30 min,
-      * `graft.ivf.lockStaleMs` overrides it — set it ABOVE the longest
-      * expected build/append, there is no heartbeat renewal). Takeover is
-      * single-winner: the taker RENAMES the stale lock to a unique reap
-      * name (only one rename of a given file succeeds), then verifies the
-      * reaped content is the stale token it observed — if a fresh lock
-      * slipped in between, it is restored untouched. Release deletes the
-      * lock only when it still carries this holder's own token, so a
-      * usurped holder can never delete its successor's lock. These are
-      * crash-recovery semantics, not a distributed lock service: with the
-      * staleness bound set honestly, two LIVE holders are excluded. */
-    private def lockStaleMs: Long =
-      sys.props.get("graft.ivf.lockStaleMs").map(_.toLong).getOrElse(30 * 60 * 1000L)
-
-    /** ENFORCED coordination contract (not just documented): every index
-      * mutation path acquires the lock through here, and the lock + the
-      * atomic-rename publish are only sound on a store that actually has
-      * create-exclusive and atomic rename. On one that doesn't (s3a & co),
-      * refuse with a clear error unless the caller explicitly accepts
-      * single-writer-by-convention via `-Dgraft.ivf.singleWriter=true`. */
-    private[graft] def requireCoordinationCapable(path: String): Unit =
-      if (!sys.props.get("graft.ivf.singleWriter").contains("true"))
-        require(store.supportsAtomicRename(path) && store.supportsExclusiveCreate(path),
-          s"IVF index root '$path' is on a filesystem without atomic rename / " +
-            "exclusive create (object stores like s3a give neither), so " +
-            "concurrent index builds/appends cannot be coordinated there. " +
-            "Point graft.ivf.root at a rename-capable store (HDFS, local, " +
-            "abfs) or accept single-writer mode with " +
-            "-Dgraft.ivf.singleWriter=true (YOU then guarantee at most one " +
-            "writing process).")
-
-    private[graft] def withIndexLock[T](lock: String)(body: => T): T = {
-      requireCoordinationCapable(lock)
-      val token = s"${java.util.UUID.randomUUID()}@${System.currentTimeMillis()}"
-      def tsOf(content: String): Long =
-        content.trim.split("@").last.toLong
-      // A waiter must outwait any LEGITIMATE holder: a corpus-sized build can
-      // hold the lock for minutes, and a holder older than lockStaleMs is
-      // reaped rather than waited on — so the give-up bound is the staleness
-      // bound plus a margin, never a fixed short spin. It also bounds the
-      // reap path itself (a store whose rename always fails must not loop
-      // forever).
-      val waitStart = System.currentTimeMillis()
-      val giveUpMs = lockStaleMs + 60 * 1000L
-      while (!store.createExclusive(lock, token)) {
-        require(System.currentTimeMillis() - waitStart < giveUpMs,
-          s"IVF lock $lock not acquired within ${giveUpMs}ms " +
-            s"(staleness bound ${lockStaleMs}ms + 60s margin)")
-        val observed =
-          try Some(store.readString(lock))
-          catch { case scala.util.control.NonFatal(_) => None }
-        val stale = observed.exists(c =>
-          try System.currentTimeMillis() - tsOf(c) > lockStaleMs
-          catch { case scala.util.control.NonFatal(_) => true })
-        if (stale) {
-          val reap = lock + ".reap-" + java.util.UUID.randomUUID().toString.take(8)
-          if (store.rename(lock, reap)) {
-            val reaped = try Some(store.readString(reap))
-                         catch { case scala.util.control.NonFatal(_) => None }
-            if (reaped == observed) store.delete(reap) // confirmed stale: reaped
-            else if (!store.rename(reap, lock)) {
-              // a fresh lock appeared mid-reap and restore lost a further
-              // race — put the token back as a deletable file so the live
-              // holder's verified release still works. If even that fails
-              // (a third process created the lock), the reap file is the
-              // ONLY copy of the live holder's token: leave it in place —
-              // deleting it would hand two live holders the lock at once.
-              if (store.createExclusive(lock, reaped.getOrElse("")))
-                store.delete(reap)
-              else
-                System.err.println(
-                  s"[graft] IVF lock $lock: restore after reap race failed; " +
-                    s"usurped holder's token preserved at $reap")
-            }
-          }
-        } else {
-          Thread.sleep(50)
-        }
-      }
-      try body finally {
-        // verified release: only the token we wrote may be deleted — a
-        // holder that was (wrongly or rightly) usurped must not delete its
-        // successor's lock
-        val mine = try store.readString(lock) == token
-                   catch { case scala.util.control.NonFatal(_) => false }
-        if (mine) store.delete(lock)
-      }
-    }
-
-    /** Root directory for DURABLE indexes (override with the
-      * `graft.ivf.root` system property) — any Hadoop URI. An ANN index
-      * outlives the session that built it: the assignment is written
-      * cell-partitioned (the IVF analogue of the merge sink's bucket layout)
-      * and a fresh session reloads it instead of re-running the corpus
-      * passes. */
-    private def indexRoot: String =
-      sys.props.getOrElse("graft.ivf.root", "target/ivf-index")
-
-    /** Corpus fingerprint from driver-side file metadata (names/sizes/mtimes
-      * of the embeddings parquet) — a changed corpus hashes to a different
-      * index directory, so load-on-miss can never serve a stale index. */
-    private def corpusFingerprint(dir: String): String =
-      fileFingerprint(new org.apache.hadoop.fs.Path(dir, "embeddings.parquet").toString)
-
-    /** Shared driver-metadata fingerprint of one file/dir tree (names,
-      * sizes, mtimes) — also keys [[graft.operators.DupClusters]]'
-      * artifact over `documents.parquet`. */
-    private[graft] def fileFingerprint(p: String): String = {
-      val walked = store.walk(p)
-      val parts =
-        if (walked.nonEmpty) walked.map(f => s"${f.relPath}:${f.size}:${f.mtimeMs}").sorted
-        else store.fileMeta(p).map(f => s"${f.size}:${f.mtimeMs}").toSeq
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(parts.mkString(";").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-    }
-
-    /** Retention sweep over this root: drop superseded fingerprint dirs
-      * (never a listed corpus's live fingerprint, never a lock-held build)
-      * outside the newest `keepLastN` and older than `olderThanMs`. `dirs`
-      * must list EVERY corpus served from this root — an unlisted corpus's
-      * live index is indistinguishable from a superseded one. See
-      * [[IndexRetention]] and `CALL graft.system.expire_indexes`. */
-    def expireStale(dirs: Seq[String], keepLastN: Option[Int],
-                    olderThanMs: Option[Long]): Seq[IndexRetention.Swept] =
-      IndexRetention.sweep(store, indexRoot, "ivf",
-        dirs.flatMap { d =>
-          IndexRetention.liveCorpusFile(store, d,
-              new org.apache.hadoop.fs.Path(d, "embeddings.parquet").toString)
-            .map(_ => corpusFingerprint(d))
-        }.toSet, keepLastN, olderThanMs)
+      Artifact.Ivf.evictSession(s)
 
     /** Bump when the build algorithm or on-disk format changes — a stale
       * on-disk index from an older build must not be served for the same
@@ -305,33 +164,22 @@ object Similarity {
       * max |component|, Double.toString round-trip-exact). */
     private val FormatVersion = 3
 
-    private def indexPath(dir: String, lloydIters: Int, cells: Int): String =
-      new org.apache.hadoop.fs.Path(indexRoot,
-        s"v$FormatVersion-${corpusFingerprint(dir)}-i$lloydIters-k$cells").toString
+    private val Marker = "centroids.tsv"
 
-    private def sub(base: String, child: String): String =
-      new org.apache.hadoop.fs.Path(base, child).toString
+    private lazy val store: graft.core.Storage = graft.core.Storage.hadoop
+
+    /** `<graft.ivf.root>/v<ver>-<fp>-i<iters>-k<cells>`, keyed by the
+      * embeddings file's fingerprint ([[Artifact.Ivf]]) — an ANN index
+      * outlives the session that built it, and a changed corpus hashes to
+      * a different dir, so load-on-miss can never serve a stale index. */
+    private def indexPath(dir: String, lloydIters: Int, cells: Int): String =
+      Artifact.Ivf.dirFor(dir, FormatVersion, s"-i$lloydIters-k$cells")
 
     /** Deterministic per-index function name (the plan references the index
       * by identity, never by centroid values). */
     private def fnName(path: String): String =
       "ivf_cells_" + java.security.MessageDigest.getInstance("MD5")
         .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-
-    /** Marker serialization: one `cid\tv,v,...` line per centroid.
-      * Double.toString round-trips exactly, so a reloaded quantizer is
-      * bit-identical to the one that built the assignment. */
-    private def fmtCents(ids: Array[Long], cents: Array[Array[Double]]): String =
-      ids.zip(cents).map { case (cid, c) => s"$cid\t${c.mkString(",")}" }
-        .mkString("", "\n", "\n")
-
-    private def parseCents(text: String): (Array[Long], Array[Array[Double]]) = {
-      val rows = text.split("\n").filter(_.nonEmpty).map { line =>
-        val Array(cid, vs) = line.split("\t", 2)
-        (cid.toLong, vs.split(",").map(_.toDouble))
-      }
-      (rows.map(_._1), rows.map(_._2))
-    }
 
     /** K seed / trained centroids via bounded driver collects; every Lloyd
       * round is one map-only assignment pass (the ranking expression) plus
@@ -379,7 +227,7 @@ object Similarity {
       * discards its staging dir and loads the winner's index. */
     def build(s: SparkSession, dir: String, lloydIters: Int,
               cells: Int = IvfCells): Index =
-      cache.getOrCompute(s, indexPath(dir, lloydIters, cells))(
+      Artifact.Ivf.cached(s, indexPath(dir, lloydIters, cells))(
         loadOrBuild(s, dir, lloydIters, cells))
 
     /** CACHED q_sim22 recall/scan curve under the SERVING index's
@@ -397,44 +245,13 @@ object Similarity {
     private[graft] def nprobeCurvePath(dir: String): String =
       sub(indexPath(dir, 0, IvfCells), "nprobe_curve")
 
-    def cachedNprobeCurve(s: SparkSession, dir: String): DataFrame =
-      // qSim22 builds/warm-loads the index itself, so the dir exists
-      // before the sidecar stages inside it
-      publishSidecarOnce(s, nprobeCurvePath(dir))(qSim22(s, dir))
-
-    /** Publish a small sidecar parquet ONCE under the house protocol
-      * (shared by the text and mm curve caches — review r18 dedupe):
-      * lock, leftover-staging hygiene (ADVICE r17: a crash between a
-      * previous attempt's write and its rename leaks `<base>.tmp-*`
-      * INSIDE the published index dir, where the index-root .tmp- sweep
-      * never looks), stage, atomic rename; a racing JVM's loser discards
-      * its staging and serves the winner's copy. `frame` is by-name —
-      * a warm call never computes it (nor builds anything it closes
-      * over). Returns the published parquet. */
-    private[graft] def publishSidecarOnce(s: SparkSession, p: String)(
-        frame: => DataFrame): DataFrame = {
-      if (!store.exists(p)) {
-        withIndexLock(p + ".lock") {
-          if (!store.exists(p)) {
-            val parent = p.substring(0, p.lastIndexOf('/'))
-            val base = p.substring(p.lastIndexOf('/') + 1)
-            store.listDirNames(parent)
-              .filter(_.startsWith(base + ".tmp-"))
-              .foreach(n => store.deleteRecursive(s"$parent/$n"))
-            val staging = p + ".tmp-" +
-              java.util.UUID.randomUUID().toString.take(8)
-            frame.write.mode("overwrite").parquet(staging)
-            if (!store.rename(staging, p)) {
-              store.deleteRecursive(staging)
-              // a racing JVM published first: serve its copy below
-              if (!store.exists(p))
-                throw new IllegalStateException(
-                  s"publishing the sidecar at $p failed")
-            }
-          }
-        }
+    def cachedNprobeCurve(s: SparkSession, dir: String): DataFrame = {
+      // qSim22 builds/warm-loads the index itself; the stage block runs
+      // only on a miss, so a warm call never computes the sweep
+      Artifact.publishOnce(nprobeCurvePath(dir), "_SUCCESS") { staging =>
+        qSim22(s, dir).write.parquet(staging)
       }
-      s.read.parquet(p)
+      s.read.parquet(nprobeCurvePath(dir))
     }
 
     /** Incremental index maintenance: assign NEW vectors (`vec_id`,
@@ -446,8 +263,8 @@ object Similarity {
       * quantizer (standard IVF practice: retrain on drift, not per
       * insert); a drift-driven rebuild is a new index directory.
       * The read-modify-write on the shared assignment directory is guarded
-      * by an exclusive lock file (`_append.lock`, atomic create), so two
-      * processes cannot interleave partition files. Returns the refreshed
+      * by the artifact lock ([[Artifact.withIndexLock]]), so two processes
+      * cannot interleave partition files. Returns the refreshed
       * Index; the previous in-memory assignment is unpersisted.
       *
       * IDEMPOTENT per vec_id (round 13 — closes ST-8's replay gap): each
@@ -475,7 +292,7 @@ object Similarity {
           .select("vec_id").distinct()
         newVecs.join(broadcast(already), Seq("vec_id"), "left_anti")
       }
-      withIndexLock(path + ".lock") {
+      Artifact.withIndexLock(path + ".lock") {
         freshFor(prior.assigned).selectExpr("vec_id", "embedding",
             s"element_at(${prior.fn}(embedding, 1), 1) AS cell")
           .write.mode("append").partitionBy("cell").parquet(asgPath)
@@ -486,18 +303,10 @@ object Similarity {
             s"element_at(${prior.fn}(embedding, 1), 1) AS cell")
           .write.mode("append").partitionBy("cell").parquet(qasgPath)
       }
-      prior.assigned.unpersist()
-      prior.qassigned.unpersist()
-      val asg = s.read.parquet(asgPath)
-        .withColumn("cell", col("cell").cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      asg.count()
-      val qasg = s.read.parquet(qasgPath)
-        .withColumn("cell", col("cell").cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      qasg.count()
-      val updated = prior.copy(assigned = asg, qassigned = qasg)
-      cache.put(s, indexPath(dir, lloydIters, cells), updated)
+      prior.release()
+      val updated = prior.copy(assigned = loadLane(s, asgPath),
+        qassigned = loadLane(s, qasgPath))
+      Artifact.Ivf.put(s, path, updated)
       updated
     }
 
@@ -534,14 +343,12 @@ object Similarity {
                   cells: Int = IvfCells): Index = {
       GraftFunctions.register(s)
       val path = indexPath(dir, lloydIters, cells) // POST-delta fingerprint
-      val marker = sub(path, "centroids.tsv")
       // delta-sized agg, only on the publish path: a component beyond the
       // frozen scale means the append-published int8 lane (saturating at
       // prior.scale) and a crash-replay rebuild (fresh scale) would
       // diverge under the same fingerprint — route to the rebuild instead
-      // (the `if` below then falls through to loadOrBuild's corpus build,
-      // outside this method's lock scope)
-      val scaleRaising = !store.exists(marker) && {
+      // (loadOrBuild's corpus build below)
+      val scaleRaising = !Artifact.isPublished(path, Marker) && {
         val r = newVecs.selectExpr(
           "max(aggregate(embedding, CAST(0.0 AS DOUBLE), " +
             "(a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))) AS mx").head()
@@ -554,117 +361,75 @@ object Similarity {
             "identical content (consider retraining with lloydIters > 0)")
         raising
       }
-      if (!store.exists(marker) && !scaleRaising) {
-        store.mkdirs(indexRoot)
-        withIndexLock(path + ".lock") {
-          if (!store.exists(marker)) {
-            if (store.exists(path)) store.deleteRecursive(path)
-            graft.functions.IvfRankCells.register(s, prior.fn,
-              prior.cellIds, prior.cents)
-            val staging = path + ".tmp-" +
-              java.util.UUID.randomUUID().toString.take(8)
-            prior.assigned.select("vec_id", "embedding", "cell")
-              .unionByName(newVecs.selectExpr("vec_id", "embedding",
-                s"element_at(${prior.fn}(embedding, 1), 1) AS cell"))
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(sub(staging, "assignment"))
-            prior.qassigned.select("vec_id", "qv", "cell")
-              .unionByName(newVecs.selectExpr("vec_id",
-                quantizeExpr("embedding", prior.scale) + " AS qv",
-                s"element_at(${prior.fn}(embedding, 1), 1) AS cell"))
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(sub(staging, "assignment_int8"))
-            store.writeString(sub(staging, "scale.txt"),
-              java.lang.Double.toString(prior.scale) + "\n")
-            store.writeString(sub(staging, "centroids.tsv"),
-              fmtCents(prior.cellIds, prior.cents))
-            val published = store.rename(staging, path) && store.exists(marker)
-            if (!published) {
-              store.deleteRecursive(staging)
-              throw new IllegalStateException(
-                s"IVF appendFor: publishing $staging -> $path failed")
-            }
-          }
-        }
+      if (!scaleRaising) Artifact.publishOnce(path, Marker) { staging =>
+        graft.functions.IvfRankCells.register(s, prior.fn,
+          prior.cellIds, prior.cents)
+        prior.assigned.select("vec_id", "embedding", "cell")
+          .unionByName(newVecs.selectExpr("vec_id", "embedding",
+            s"element_at(${prior.fn}(embedding, 1), 1) AS cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(sub(staging, "assignment"))
+        prior.qassigned.select("vec_id", "qv", "cell")
+          .unionByName(newVecs.selectExpr("vec_id",
+            quantizeExpr("embedding", prior.scale) + " AS qv",
+            s"element_at(${prior.fn}(embedding, 1), 1) AS cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(sub(staging, "assignment_int8"))
+        store.writeString(sub(staging, "scale.txt"),
+          java.lang.Double.toString(prior.scale) + "\n")
+        Artifact.writeCentroids(staging, prior.cellIds, prior.cents)
       }
-      // release the superseded handle's persisted frames (the
-      // DupClusters/LexIndex append discipline), then load the new state
-      prior.assigned.unpersist(); prior.qassigned.unpersist()
-      cache.getOrCompute(s, path)(loadOrBuild(s, dir, lloydIters, cells))
+      Artifact.Ivf.supersede(s, prior, path)(
+        loadOrBuild(s, dir, lloydIters, cells))
     }
 
     private def loadOrBuild(s: SparkSession, dir: String, lloydIters: Int,
                             k: Int): Index = {
       val path = indexPath(dir, lloydIters, k)
-      val marker = sub(path, "centroids.tsv")
-      if (!store.exists(marker)) {
-        store.mkdirs(indexRoot)
-        // the whole miss-path runs under the index mutation lock: without
-        // it, Hadoop rename-onto-existing-dir NESTS the staging dir inside
-        // the winner's index instead of failing, and the "clear crashed
-        // leftover" delete below could destroy an index another process
-        // published between our marker check and the delete (TOCTOU). With
-        // the lock, the re-check makes the loser a pure loader.
-        withIndexLock(path + ".lock") {
-          if (!store.exists(marker)) {
-            // a directory without its marker is a crashed pre-publish
-            // leftover — safe to clear under the lock (nobody else mutates)
-            if (store.exists(path)) store.deleteRecursive(path)
-            val (ids, cents) = doBuild(s, dir, lloydIters, k)
-            // stage the full index — one corpus pass writes the
-            // cell-partitioned assignment (the durable form; probes in ANY
-            // session hereafter read only these files), marker last — then
-            // publish by atomic rename
-            val staging = path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
-            GraftFunctions.register(s)
-            val stageFn = fnName(path) // the final name: the load below re-registers the same matrix
-            graft.functions.IvfRankCells.register(s, stageFn, ids, cents)
-            Tables.embeddings(s, dir)
-              .selectExpr("vec_id", "embedding",
-                s"element_at($stageFn(embedding, 1), 1) AS cell")
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(sub(staging, "assignment"))
-            // the int8 SERVING lane: one global symmetric scale (corpus
-            // max |component| — qSim9's scheme, priced there in recall
-            // points), vectors stored as TINYINT so a probe moves 1/4 of
-            // the float lane's bytes; scale written Double.toString-exact
-            val mx = Tables.embeddings(s, dir).selectExpr(
-              "max(aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-                "(a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))) AS mx")
-              .head().getDouble(0)
-            Tables.embeddings(s, dir)
-              .selectExpr("vec_id",
-                quantizeExpr("embedding", mx) + " AS qv",
-                s"element_at($stageFn(embedding, 1), 1) AS cell")
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(sub(staging, "assignment_int8"))
-            store.writeString(sub(staging, "scale.txt"),
-              java.lang.Double.toString(mx) + "\n")
-            store.writeString(sub(staging, "centroids.tsv"), fmtCents(ids, cents))
-            val published = store.rename(staging, path) && store.exists(marker)
-            if (!published) {
-              // don't leak a corpus-sized staging tree on a failed publish
-              store.deleteRecursive(staging)
-              throw new IllegalStateException(
-                s"IVF build: publishing $staging -> $path failed")
-            }
-          }
-        }
+      Artifact.publishOnce(path, Marker) { staging =>
+        val (ids, cents) = doBuild(s, dir, lloydIters, k)
+        // stage the full index — one corpus pass writes the
+        // cell-partitioned assignment (the durable form; probes in ANY
+        // session hereafter read only these files), marker last
+        GraftFunctions.register(s)
+        val stageFn = fnName(path) // the final name: the load below re-registers the same matrix
+        graft.functions.IvfRankCells.register(s, stageFn, ids, cents)
+        Tables.embeddings(s, dir)
+          .selectExpr("vec_id", "embedding",
+            s"element_at($stageFn(embedding, 1), 1) AS cell")
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(sub(staging, "assignment"))
+        // the int8 SERVING lane: one global symmetric scale (corpus
+        // max |component| — qSim9's scheme, priced there in recall
+        // points), vectors stored as TINYINT so a probe moves 1/4 of
+        // the float lane's bytes; scale written Double.toString-exact
+        val mx = Tables.embeddings(s, dir).selectExpr(
+          "max(aggregate(embedding, CAST(0.0 AS DOUBLE), " +
+            "(a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))) AS mx")
+          .head().getDouble(0)
+        Tables.embeddings(s, dir)
+          .selectExpr("vec_id",
+            quantizeExpr("embedding", mx) + " AS qv",
+            s"element_at($stageFn(embedding, 1), 1) AS cell")
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(sub(staging, "assignment_int8"))
+        store.writeString(sub(staging, "scale.txt"),
+          java.lang.Double.toString(mx) + "\n")
+        Artifact.writeCentroids(staging, ids, cents)
       }
-      val (ids, cents) = parseCents(store.readString(marker))
+      val (ids, cents) = Artifact.readCentroids(path)
       val fn = fnName(path)
       graft.functions.IvfRankCells.register(s, fn, ids, cents)
-      val asg = s.read.parquet(sub(path, "assignment"))
-        .withColumn("cell", col("cell").cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      asg.count() // materialize: probes must not re-read even the index files
       val scale = store.readString(sub(path, "scale.txt")).trim.toDouble
-      val qasg = s.read.parquet(sub(path, "assignment_int8"))
-        .withColumn("cell", col("cell").cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      qasg.count()
-      Index(fn, ids, cents, asg, scale, qasg)
+      Index(fn, ids, cents, loadLane(s, sub(path, "assignment")), scale,
+        loadLane(s, sub(path, "assignment_int8")))
     }
+
+    /** One cell-partitioned lane, persisted and materialized: probes must
+      * not re-read even the index files. */
+    private def loadLane(s: SparkSession, p: String): DataFrame =
+      Artifact.persistCounted(
+        s.read.parquet(p).withColumn("cell", col("cell").cast("long")))
 
     /** The symmetric int8 quantization expression over a float-array
       * column: `floor(x·127/scale + 0.5)` is deterministic IEEE double

@@ -881,22 +881,14 @@ object Streams {
     // commit site so a gate that only ever replays/admits-zero still keeps
     // its metadata bounded
     def upkeep(): Unit = {
-      for (n <- autoExpireKeepLast; d <- corpusDir if advanceIndex) {
-        graft.operators.DupClusters.expireStale(Seq(d), Some(n), None)
-        if (advanceLex) {
-          graft.operators.LexIndex.expireStale(Seq(d), Some(n), None); ()
-        }
-        if (advanceAnn) {
-          graft.operators.Similarity.IvfIndex
-            .expireStale(Seq(d), Some(n), None); ()
-        }
-        if (advanceMm) {
-          // the gate pins its OWN staged _extprior generations (ADVICE
-          // r17): self-upkeep must never sweep a generation a concurrent
-          // crash replay of this gate still needs
-          graft.operators.MmIvf.expireStale(Seq(d), Some(n), None,
-            gateStoreDirs = Seq(storeDir)); ()
-        }
+      val advanced = Map("dup" -> true, "lex" -> advanceLex,
+        "ivf" -> advanceAnn, "mm" -> advanceMm)
+      for (n <- autoExpireKeepLast; d <- corpusDir if advanceIndex;
+           f <- graft.core.Artifact.kinds if advanced(f.kind)) {
+        // the gate pins its OWN staged _extprior generations (ADVICE
+        // r17): self-upkeep must never sweep a generation a concurrent
+        // crash replay of this gate still needs
+        f.expireStale(Seq(d), Some(n), None, gateStoreDirs = Seq(storeDir))
       }
       vacuumCommitsBelow.foreach(f => vacuumGateCommits(storeDir, f))
     }
@@ -1189,7 +1181,7 @@ object Streams {
     * lingering beside an existing target can only be a non-atomic store's
     * partial, and is dropped rather than landed twice). Hidden files
     * (`_SUCCESS`, checksum sidecars) never move — corpus readers ignore
-    * them by convention and [[graft.operators.LexIndex.corpusEntries]]
+    * them by convention and [[graft.core.Artifact.corpusEntries]]
     * excludes them from fingerprints. */
   private def publishDelta(st: graft.core.Storage, deltaDir: String,
                            corpusDir: String, batchId: Long): Unit = {

@@ -201,27 +201,6 @@ class LexIndexSpec extends AnyFunSuite {
       s"guard must name the out-of-band change: ${e.getMessage}")
   }
 
-  test("changedPriorFiles flags edited and removed files, ignores additions") {
-    val prior = Seq("a.parquet:100:1:tdeadbeef", "b.parquet:200:2:tcafe0001")
-    assert(LexIndex.changedPriorFiles(prior,
-      Seq("a.parquet:100:1:tdeadbeef", "b.parquet:200:2:tcafe0001",
-        "c.parquet:50:3:t00000001")).isEmpty)
-    // same size+mtime, different CONTENT token (the ADVICE r11 case)
-    assert(LexIndex.changedPriorFiles(prior,
-      Seq("a.parquet:100:1:t12345678", "b.parquet:200:2:tcafe0001")) ==
-      Seq("a.parquet:100:1:tdeadbeef"))
-    assert(LexIndex.changedPriorFiles(prior,
-      Seq("b.parquet:200:2:tcafe0001")) == Seq("a.parquet:100:1:tdeadbeef"))
-    // v1 prior listings (pre-token) compare on their own fields — the
-    // one-time migration path: never refused by the token they lack
-    val v1 = Seq("a.parquet:100:1", "b.parquet:200:2")
-    assert(LexIndex.changedPriorFiles(v1,
-      Seq("a.parquet:100:1:tdeadbeef", "b.parquet:200:2:tcafe0001")).isEmpty)
-    assert(LexIndex.changedPriorFiles(v1,
-      Seq("a.parquet:100:9:tdeadbeef", "b.parquet:200:2:tcafe0001")) ==
-      Seq("a.parquet:100:1"))
-  }
-
   test("append refuses an in-place same-size edit with preserved mtime (content token)") {
     val root = Files.createTempDirectory("graft-lextok").toString
     val corpus = s"$root/documents.parquet"

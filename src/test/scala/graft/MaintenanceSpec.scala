@@ -583,7 +583,7 @@ class MaintenanceSpec extends AnyFunSuite {
       // a stale fingerprint (name does NOT contain the live corpus fp)
       st.mkdirs(s"$ivfRoot/v2-deadbeef00-l0-c16")
       st.writeString(s"$ivfRoot/v2-deadbeef00-l0-c16/centroids.tsv", "x\n")
-      val swept = graft.operators.Similarity.IvfIndex
+      val swept = graft.core.Artifact.Ivf
         .expireStale(Seq(dir), Some(0), None)
       assert(swept.map(_.name) == Seq("v2-deadbeef00-l0-c16"),
         swept.mkString(", "))
@@ -610,7 +610,7 @@ class MaintenanceSpec extends AnyFunSuite {
       val idx = graft.operators.DupClusters.build(spark, dir)
       st.mkdirs(s"$dupRoot/v2-feedface00")
       st.writeString(s"$dupRoot/v2-feedface00/meta.tsv", "nDocs\t1\n")
-      val swept = graft.operators.DupClusters.expireStale(Seq(dir), Some(0), None)
+      val swept = graft.core.Artifact.Dup.expireStale(Seq(dir), Some(0), None)
       assert(swept.map(_.name) == Seq("v2-feedface00"), swept.mkString(", "))
       // the real index survived; a fresh session warm-loads it and the
       // graph family still serves (q_g3 reads only artifact frames)
@@ -820,7 +820,7 @@ class MaintenanceSpec extends AnyFunSuite {
         graft.operators.MmIvf.Cells.toLong &&
         re.getAs[Long]("rec_recall_pm") == 1000L, s"$re")
       // the mm kind's retention sweep protects BOTH lanes' live dirs
-      val swept = graft.operators.MmIvf.expireStale(Seq(dir), Some(0), None)
+      val swept = graft.core.Artifact.Mm.expireStale(Seq(dir), Some(0), None)
       assert(swept.isEmpty, s"live mm index must survive a keep-0 sweep: $swept")
       assert(graft.operators.MmIvf.qMm19(spark, dir).count() > 0,
         "image lane still serves after the sweep")

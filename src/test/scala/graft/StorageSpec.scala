@@ -244,14 +244,14 @@ class StorageSpec extends AnyFunSuite {
     sys.props("graft.ivf.root") = "s3a://bucket/ivf"
     try {
       val ex = intercept[IllegalArgumentException] {
-        graft.operators.Similarity.IvfIndex
+        graft.core.Artifact
           .requireCoordinationCapable("s3a://bucket/ivf/idx.lock")
       }
       assert(ex.getMessage.contains("atomic rename"))
       assert(ex.getMessage.contains("graft.ivf.singleWriter"))
       // the explicit opt-in accepts the same root (caller owns exclusivity)
       sys.props("graft.ivf.singleWriter") = "true"
-      graft.operators.Similarity.IvfIndex
+      graft.core.Artifact
         .requireCoordinationCapable("s3a://bucket/ivf/idx.lock")
     } finally {
       sys.props.remove("graft.ivf.singleWriter")
