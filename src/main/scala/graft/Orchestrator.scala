@@ -5,13 +5,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.FileAccount
+import graft.core.{ContainerMerge, FileAccount}
 import graft.operators.RawMerge
 
 /** Account-level migration orchestration — the reference's `main.py` loop
   * (A26: account → database → container, with `--database`/`--container`
   * narrowing) re-expressed as driver-side Scala over [[FileAccount]]s, with
-  * the per-container work delegated to the distributed [[RawMerge]] plan.
+  * the per-container merge planned by [[ContainerMerge.plan]], the one
+  * merge pipeline SQL INSERT and the streaming sync also run.
   *
   * Per container (reference E3, SURVEY.md §3): read source RAW (schemaless —
   * unknown fields round-trip byte-exactly, no inference), classify against
@@ -26,6 +27,10 @@ import graft.operators.RawMerge
   * many before the container aborts. Verification fixes the reference's B5
   * wart: count parity AND an order-independent content hash, not counts
   * alone.
+  *
+  * Duplicate keys: Cosmos holds one document per `(id, pk)`, so of several
+  * source lines for one merge key ONE is merged — the line from the
+  * lexicographically last source file, then the highest content hash.
   */
 object Orchestrator {
 
@@ -53,7 +58,10 @@ object Orchestrator {
     parallelism: Int = 1,
     incremental: Option[Boolean] = None)
 
-  /** `verifyMode` documents what `verified` actually covered:
+  /** `inserted`/`updated`/`skipped` count merged keys and `errors` invalid
+    * lines; `sourceCount` counts every line read, duplicates included.
+    *
+    * `verifyMode` documents what `verified` actually covered:
     *  - `"full"`: count + order-independent content hash over the ENTIRE
     *    post-merge target vs the expected merged state.
     *  - `"incremental"`: count + content hash over the AFFECTED buckets only,
@@ -92,28 +100,14 @@ object Orchestrator {
     target.createContainerIfAbsent(db, container, props)
     assertPkAligned(props.pkPaths,
       target.containerProperties(db, container).pkPaths, db, container)
-
-    val srcRaw = source.readRaw(spark, db, container)
     val pkPaths = props.pkPaths
-    val keyCols = "__id" +: pkPaths.indices.map(i => s"__pk$i")
 
     // Incremental mode (the point-read analogue): when the source delta is
     // small against a large target, read — and canonical-hash, and verify —
     // only the bucket directories the source keys hash to. Classification is
     // unaffected: a matching target row always lives in its key's bucket.
-    val hasTgt = target.hasData(db, container)
-    val incremental = hasTgt && cfg.incremental.getOrElse(
+    val incremental = target.hasData(db, container) && cfg.incremental.getOrElse(
       source.dataBytes(db, container) * 4 <= target.dataBytes(db, container))
-    val (tgtRaw, affectedOpt) =
-      if (!hasTgt) (srcRaw.limit(0), None)
-      else if (incremental) {
-        val srcKeys = RawMerge.srcKeyed(spark, srcRaw, pkPaths)
-          .filter(RawMerge.validCol(pkPaths))
-          .select(keyCols.map(col): _*)
-        val (df, buckets) =
-          target.readRawBucketsFor(spark, db, container, srcKeys, keyCols)
-        (df, Some(buckets))
-      } else (target.readRaw(spark, db, container), None)
     // incremental mode: capture the pre-merge listing signatures (driver
     // metadata, no data read) so verification can prove the unaffected
     // buckets were untouched — this replaces the full-container line count
@@ -123,10 +117,18 @@ object Orchestrator {
     // ONE full-outer src⋈tgt join for the whole container run: counters,
     // dead-letter, the sink input, AND the expected post-merge state all
     // derive from this cached frame (a second merge join for verification
-    // would be ~2 extra container passes at scale)
-    val classified = RawMerge.classifyAll(spark, srcRaw, tgtRaw, pkPaths).cache()
-    val counts = classified.groupBy("action").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+    // would be ~2 extra container passes at scale). The source file name
+    // feeds the merge's duplicate-key rule.
+    val keyed = ContainerMerge.key(spark, source.readRaw(spark, db, container)
+      .withColumn("__f", input_file_name()), pkPaths, Some("__f"))
+    val plan = ContainerMerge.plan(spark, target, db, container, keyed,
+      pkPaths, Some("__f"), prune = incremental, fullOuter = true,
+      sanitize = cfg.sanitize)
+    val classified = plan.classified.cache()
+    val tally = classified.groupBy("action")
+      .agg(count(lit(1)), coalesce(sum("__n"), lit(0L))).collect()
+    val counts = tally.map(r => r.getString(0) -> r.getLong(1)).toMap
+      .withDefaultValue(0L)
 
     // A13 dead-letter: corrupt/invalid documents land next to the data, and
     // the run aborts only past the configured bound
@@ -137,20 +139,11 @@ object Orchestrator {
     require(counts("error") <= cfg.maxErrors,
       s"$db/$container: ${counts("error")} error documents exceed maxErrors=${cfg.maxErrors}")
 
-    // A11/A12: only inserts/updates reach the sink (write elision for skips);
-    // masking applies to written rows only (migration.py:131-136)
-    val changedRows = classified
-      .filter(col("action").isin("insert", "update"))
-      .select((("raw" +: keyCols).map(col)): _*)
-    val changed =
-      if (cfg.sanitize) changedRows.withColumn("raw", expr("mask_json(raw)"))
-      else changedRows
-
     // A15 + B5 fix: count parity and content-hash parity of what landed vs
     // the intended merged state (byte-level: the raw lines themselves).
     // Expected-state metrics are materialized BEFORE the sink mutates the
-    // target: the upsert may absorb/delete stray files that `tgtRaw`'s
-    // lineage still references (the cache above bounds that exposure too).
+    // target: the upsert may absorb/delete stray files that the target
+    // side's lineage still references (the cache above bounds that exposure too).
     // Count and hash come from ONE aggregation — each stateStats call is a
     // single pass over its frame, which matters when the frame is a
     // container re-read. bit_xor, not sum: ANSI mode errors on 64-bit
@@ -163,10 +156,12 @@ object Orchestrator {
     val expected = RawMerge.mergedStateOf(classified, pkPaths, cfg.sanitize)
     val (expectedCount, expectedHash) = stateStats(expected)
 
-    target.upsertRaw(spark, db, container, changed, keyCols, pkPaths)
+    // A11/A12: only inserts/updates reach the sink (write elision for skips)
+    target.upsertRaw(spark, db, container, plan.changed,
+      RawMerge.keyCols(pkPaths), pkPaths)
     classified.unpersist()
 
-    val (verified, targetCount, verifyMode) = affectedOpt match {
+    val (verified, targetCount, verifyMode) = plan.pruned match {
       case Some(buckets) =>
         // incremental verify, O(delta + affected buckets) — no full scan:
         //  (1) count + content-hash parity of the affected buckets vs the
@@ -195,13 +190,11 @@ object Orchestrator {
         (ok, writtenCount, "full")
     }
 
-    // every source row classifies into exactly one action, so the source
-    // count is free — no extra scan
-    val sourceCount =
-      counts("insert") + counts("update") + counts("skip") + counts("error")
+    // every source line stands behind exactly one classified row (`__n`),
+    // so the source count is free — no extra scan
     ContainerResult(db, container,
       counts("insert"), counts("update"), counts("skip"), counts("error"),
-      sourceCount, targetCount, verified, verifyMode)
+      tally.map(_.getLong(2)).sum, targetCount, verified, verifyMode)
   }
 
   /** A26 top loop with scoping; `--container` requires `--database`
@@ -238,33 +231,40 @@ object Orchestrator {
     Summary(results, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** CLI surface (A28, main.py:10-28 minus Cosmos secrets):
-    * {{{
-    * runMain graft.Orchestrator <sourceDir> <targetDir>
-    *   [--database D] [--container C] [--sanitize] [--summary path]
-    * }}}
+  private val Usage =
+    "usage: graft.Orchestrator <sourceDir> <targetDir> [--database D] " +
+      "[--container C] [--sanitize] [--max-errors N] [--parallelism N] " +
+      "[--summary path]"
+
+  /** CLI surface (A28, main.py:10-28 minus Cosmos secrets), see [[Usage]].
     * `--sanitize` is a plain flag (B3 fix: the reference's `type=bool` parses
     * any non-empty string, including "false", as true). Returns the process
-    * exit code (0 = all containers verified, 1 = failure; main.py:163-167). */
+    * exit code (0 = all containers verified, 1 = failure, or bad arguments
+    * with the usage line on stderr; main.py:163-167). */
   def run(args: Array[String]): Int = {
     var pos = Vector.empty[String]
     var cfg = Config()
     var summaryPath: Option[String] = None
     var i = 0
-    while (i < args.length) {
-      args(i) match {
-        case "--database"  => cfg = cfg.copy(scopeDatabase = Some(args(i + 1))); i += 2
-        case "--container" => cfg = cfg.copy(scopeContainer = Some(args(i + 1))); i += 2
-        case "--sanitize"  => cfg = cfg.copy(sanitize = true); i += 1
-        case "--max-errors" => cfg = cfg.copy(maxErrors = args(i + 1).toLong); i += 2
-        case "--parallelism" => cfg = cfg.copy(parallelism = args(i + 1).toInt); i += 2
-        case "--summary"   => summaryPath = Some(args(i + 1)); i += 2
-        case p             => pos = pos :+ p; i += 1
+    try {
+      while (i < args.length) {
+        args(i) match {
+          case "--database"  => cfg = cfg.copy(scopeDatabase = Some(args(i + 1))); i += 2
+          case "--container" => cfg = cfg.copy(scopeContainer = Some(args(i + 1))); i += 2
+          case "--sanitize"  => cfg = cfg.copy(sanitize = true); i += 1
+          case "--max-errors" => cfg = cfg.copy(maxErrors = args(i + 1).toLong); i += 2
+          case "--parallelism" => cfg = cfg.copy(parallelism = args(i + 1).toInt); i += 2
+          case "--summary"   => summaryPath = Some(args(i + 1)); i += 2
+          case p             => pos = pos :+ p; i += 1
+        }
       }
+      require(pos.length == 2, s"expected <sourceDir> <targetDir>, got $pos")
+    } catch {
+      // a NumberFormatException is an IllegalArgumentException
+      case e @ (_: IllegalArgumentException | _: IndexOutOfBoundsException) =>
+        System.err.println(s"bad arguments (${e.getMessage})\n$Usage")
+        return 1
     }
-    require(pos.length == 2,
-      s"usage: graft.Orchestrator <sourceDir> <targetDir> [--database D] " +
-        s"[--container C] [--sanitize] [--summary path]; got $pos")
     val spark = graft.core.Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-migrate")
     try {
@@ -283,10 +283,13 @@ object Orchestrator {
 
   def main(args: Array[String]): Unit = sys.exit(run(args))
 
-  /** A25: nested JSON run report (main.py:154-160). */
+  private def jsonString(v: String): String = "\"" + new String(
+    com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
+
+  /** A25: nested JSON run report (main.py:154-160); names are escaped. */
   def writeSummary(s: Summary, path: String): Unit = {
     val rows = s.results.map { r =>
-      s"""    {"database": "${r.database}", "container": "${r.container}",
+      s"""    {"database": ${jsonString(r.database)}, "container": ${jsonString(r.container)},
          |     "inserted": ${r.inserted}, "updated": ${r.updated},
          |     "skipped": ${r.skipped}, "errors": ${r.errors},
          |     "source_count": ${r.sourceCount}, "target_count": ${r.targetCount},

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.operators.RawMerge
 
 /** Container metadata the engine acts on (A20/A21). The reference also
   * carries indexing policy and dedicated throughput (containers.py:16-24);
@@ -189,7 +190,6 @@ case class FileAccount(root: String) {
     if (keys.isEmpty || !hasData(db, container)) return 0L
     val props = containerProperties(db, container)
     val pkPaths = props.pkPaths
-    val keyCols = "__id" +: pkPaths.indices.map(i => s"__pk$i")
     val nb = props.buckets
     val keySet = keys.toSet
     val keyBuckets: Set[Long] =
@@ -198,9 +198,8 @@ case class FileAccount(root: String) {
 
     def keyed(paths: Seq[String]): DataFrame =
       keyedRows(spark.read.option("recursiveFileLookup", "true")
-          .text(paths: _*).select(col("value").as("raw")),
-        pkPaths, keyCols, nb)
-        .withColumn("__k", concat_ws("", keyCols.map(col): _*))
+          .text(paths: _*).select(col("value").as("raw")), pkPaths, nb)
+        .withColumn("__k", concat_ws("", RawMerge.keyCols(pkPaths).map(col): _*))
 
     val candidateDirs = keyBuckets.toSeq.sorted
       .map(bucketDir(db, container, _)).filter(store.isDirectory(_))
@@ -288,7 +287,6 @@ case class FileAccount(root: String) {
     if (!hasData(db, container))
       return CompactionStats(Set.empty, 0L, 0L, 0L, 0L)
     val props = containerProperties(db, container)
-    val keyCols = "__id" +: props.pkPaths.indices.map(i => s"__pk$i")
     val nb = props.buckets
     val strays = strayFiles(db, container)
 
@@ -306,7 +304,7 @@ case class FileAccount(root: String) {
     val strayRows =
       if (strays.isEmpty) None
       else Some(keyedRows(spark.read.text(strays: _*)
-          .select(col("value").as("raw")), props.pkPaths, keyCols, nb)
+          .select(col("value").as("raw")), props.pkPaths, nb)
         .select(col("raw"), col("__b")))
     val strayBuckets: Set[Long] = strayRows.fold(Set.empty[Long])(
       _.select("__b").distinct().collect().map(_.getLong(0)).toSet)
@@ -408,7 +406,6 @@ case class FileAccount(root: String) {
     GraftFunctions.register(spark)
     val props = containerProperties(db, container)
     val pkPaths = props.pkPaths
-    val keyCols = "__id" +: pkPaths.indices.map(i => s"__pk$i")
     val staging = p(db, container, "_rebucket")
     store.deleteRecursive(staging)
     if (!hasData(db, container)) {
@@ -418,7 +415,7 @@ case class FileAccount(root: String) {
     // one distributed pass: key every stored row (malformed rows key to
     // null → pmod(xxhash64(""), n)-style stable bucket, they stay stored
     // like the upsert path stores them), write the NEW layout to staging
-    keyedRows(readRaw(spark, db, container), pkPaths, keyCols, newBuckets)
+    keyedRows(readRaw(spark, db, container), pkPaths, newBuckets)
       .select(col("raw"), col("__b").as("b"))
       .write.partitionBy("b").mode(SaveMode.Overwrite).text(staging)
     // per-bucket counts off the STAGED files (a second pass over the new
@@ -962,12 +959,10 @@ case class FileAccount(root: String) {
                    container: String): DistinctStats = {
     GraftFunctions.register(spark)
     val props = containerProperties(db, container)
-    val csv = props.pkPaths.map(_.stripPrefix("/")).mkString(",")
-    val keyExpr = "concat_ws('', __m.id" +
-      props.pkPaths.indices.map(i => s", __m.pk$i").mkString + ")"
     def sketchOf(df: DataFrame): DataFrame =
-      df.selectExpr("__b", s"json_doc_keys(raw, '$csv', 'false') AS __m")
-        .selectExpr("__b", s"$keyExpr AS __k")
+      RawMerge.storedKeyed(df, props.pkPaths, carry = Seq("__b"))
+        .select(col("__b"),
+          concat_ws("", RawMerge.keyCols(props.pkPaths).map(col): _*).as("__k"))
         .groupBy("__b").agg(expr("hll_sketch_agg(__k)").as("sk"))
 
     val sidecar = readBucketSketches(db, container)
@@ -1073,7 +1068,7 @@ case class FileAccount(root: String) {
     val strayBuckets: Set[Long] =
       if (strays.isEmpty) Set.empty
       else keyedRows(spark.read.text(strays: _*)
-          .select(col("value").as("raw")), props.pkPaths, keyCols, nb)
+          .select(col("value").as("raw")), props.pkPaths, nb)
         .select("__b").distinct().collect().map(_.getLong(0)).toSet
     val affected = srcBuckets ++ strayBuckets
     (readRawBuckets(spark, db, container, affected), affected)
@@ -1141,18 +1136,12 @@ case class FileAccount(root: String) {
   private def bucketDir(db: String, container: String, b: Long): String =
     new HPath(dataDir(db, container), s"b=$b").toString
 
-  /** Key + bucket extraction for stored rows — mirrors the merge's key
-    * derivation (parse-once struct kernel, no injection: the stored form is
-    * keyed as-is). */
+  /** Key + bucket extraction for stored rows ([[RawMerge.storedKeyed]]:
+    * the stored form is keyed as-is). */
   private def keyedRows(rawDf: DataFrame, pkPaths: Seq[String],
-                        keyCols: Seq[String], nb: Int): DataFrame = {
-    val csv = pkPaths.map(_.stripPrefix("/")).mkString(",")
-    rawDf.selectExpr("raw", s"json_doc_keys(raw, '$csv', 'false') AS __m")
-      .selectExpr(
-        Seq("raw", "__m.id AS __id") ++
-          pkPaths.indices.map(i => s"__m.pk$i AS __pk$i"): _*)
-      .withColumn("__b", bucketCol(keyCols, nb))
-  }
+                        nb: Int): DataFrame =
+    RawMerge.storedKeyed(rawDf, pkPaths)
+      .withColumn("__b", bucketCol(RawMerge.keyCols(pkPaths), nb))
 
   /** Incremental upsert: land `changed` documents (columns: `raw` + the key
     * columns `keyCols`, already extracted) into the container, rewriting ONLY
@@ -1185,7 +1174,7 @@ case class FileAccount(root: String) {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val strays = strayFiles(db, container)
 
-    def keyed(rawDf: DataFrame): DataFrame = keyedRows(rawDf, pkPaths, keyCols, nb)
+    def keyed(rawDf: DataFrame): DataFrame = keyedRows(rawDf, pkPaths, nb)
 
     val strayRows =
       if (strays.isEmpty) None

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -58,52 +59,96 @@ object ContainerMerge {
   final case class Stats(srcRows: Long, mergedKeys: Long, errorRows: Long,
                          rewrittenBuckets: Set[Long])
 
-  /** Merge a raw-lines frame (single `raw` string column) into the
-    * container through classify → upsert. Shared by the batch and
-    * streaming commit paths; mirrors the foreachBatch merge in
-    * [[graft.streaming.Streams.syncContainers]] minus the source-file
-    * column (a SQL batch has no file order — intra-batch duplicate keys
-    * collapse by content-hash order, deterministic under replay). */
+  /** One planned merge (lazy frames): `classified` carries `__n`, the
+    * source lines behind each row; `changed` is the sink input; `pruned`
+    * and `targetFiles` are the buckets and files a pruned target side reads
+    * (`None`/empty for a whole-container or absent target). */
+  final case class Plan(classified: DataFrame, changed: DataFrame,
+                        pruned: Option[Set[Long]], targetFiles: Seq[String])
+
+  /** Key a raw-lines source once ([[RawMerge.srcKeyed]]); `fileCol`, when
+    * the caller has one, rides along for the duplicate rule. */
+  def key(s: SparkSession, src: DataFrame, pkPaths: Seq[String],
+          fileCol: Option[String] = None): DataFrame =
+    RawMerge.srcKeyed(s, src, pkPaths, carry = fileCol.toSeq)
+
+  /** The merge policy — the reference's per-document loop
+    * (migration.py:91-150) as one distributed plan over a [[key]]ed source:
+    *  1. invalid lines (unparseable, empty id or pk) split off as errors;
+    *  2. duplicate merge keys collapse to ONE row: the lexicographically
+    *     last source file (when the caller has a file column), then the
+    *     highest content hash, then the bytes — deterministic under replay;
+    *  3. the rows classify against the target side: with `prune` only the
+    *     buckets their keys hash to ([[FileAccount.readRawBucketsFor]], the
+    *     point-read of migration.py:119-122), else the whole container.
+    *     `fullOuter` adds the target-only rows an expected-state check
+    *     needs; the left-outer join is the one AQE can broadcast and split;
+    *  4. inserts/updates are the changed rows, masked when `sanitize`. */
+  def plan(s: SparkSession, target: FileAccount, db: String, container: String,
+           keyed: DataFrame, pkPaths: Seq[String], fileCol: Option[String],
+           prune: Boolean, fullOuter: Boolean, sanitize: Boolean): Plan = {
+    val keys = RawMerge.keyCols(pkPaths)
+    val valid = RawMerge.validCol(pkPaths)
+    // the window's key shuffle and sort are the ones the join needs anyway
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy((fileCol.toSeq :+ "__ch" :+ "__w").map(col(_).desc): _*)
+    val one = keyed.filter(valid)
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("__n", count(lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .filter(col("__rn") === 1)
+    val invalid = keyed.filter(!valid).withColumn("__n", lit(1L))
+    val (tgt, pruned) =
+      if (!target.hasData(db, container))
+        (s.range(0).select(lit(null).cast("string").as("raw")), None)
+      else if (prune) {
+        val (df, buckets) = target.readRawBucketsFor(s, db, container,
+          keyed.filter(valid).select(keys.map(col): _*), keys)
+        (df, Some(buckets))
+      } else (target.readRaw(s, db, container), None)
+    val classified = RawMerge.classifyKeyed(one, invalid, tgt, pkPaths,
+      if (fullOuter) "full_outer" else "left_outer", carry = Seq("__n"))
+    val changed = classified.filter(col("action").isin("insert", "update"))
+      .select(((if (sanitize) expr("mask_json(raw)") else col("raw")).as("raw") +:
+        keys.map(col)): _*)
+    Plan(classified, changed, pruned,
+      if (pruned.isDefined) tgt.inputFiles.toSeq else Nil)
+  }
+
+  /** A13 dead-letter: append invalid lines to the container's `_errors`. */
+  private def deadLetter(account: FileAccount, db: String, container: String,
+                         keyed: DataFrame, pkPaths: Seq[String]): Unit =
+    keyed.filter(!RawMerge.validCol(pkPaths)).select("raw")
+      .write.mode("append").text(account.errorsPath(db, container))
+
+  /** Merge a raw-lines frame (a `raw` string column, plus `fileCol` when
+    * the caller has one) into the container through [[plan]] → upsert,
+    * against the pruned target: the SQL batch and streaming commits and
+    * [[graft.streaming.Streams.syncContainers]]. The counters come from ONE
+    * aggregation over the keyed source. Returns them with the buckets the
+    * upsert REWROTE, and the plan with the target side it READ. */
   def mergeRaw(s: SparkSession, account: FileAccount, db: String,
-               container: String, src: DataFrame): Stats = {
-    graft.functions.GraftFunctions.register(s)
-    val props = account.containerProperties(db, container)
-    val pkPaths = props.pkPaths
-    val keyCols = "__id" +: pkPaths.indices.map(i => s"__pk$i")
-    val sk = RawMerge.srcKeyed(s, src, pkPaths)
+               container: String, src: DataFrame,
+               fileCol: Option[String] = None,
+               sanitize: Boolean = false): (Stats, Plan) = {
+    val pkPaths = account.containerProperties(db, container).pkPaths
+    val keys = RawMerge.keyCols(pkPaths)
+    val keyed = key(s, src, pkPaths, fileCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val valid = RawMerge.validCol(pkPaths)
-      // one aggregation for all three counters (the orchestrator pattern)
-      val stats = sk.agg(
+      val stats = keyed.agg(
         count(lit(1)).as("n"),
         count(when(!valid, lit(1))).as("e"),
-        count_distinct(when(valid,
-          struct(keyCols.map(col): _*))).as("m")).head()
+        count_distinct(when(valid, struct(keys.map(col): _*))).as("m")).head()
       val (srcRows, errorRows, mergedKeys) =
         (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-      if (errorRows > 0)
-        sk.filter(!valid).select("raw").write.mode("append")
-          .text(account.errorsPath(db, container))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyCols.map(col): _*).orderBy(col("__ch").desc)
-      val srcOne = sk.filter(valid)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-      val hasTgt = account.hasData(db, container)
-      val (tgt, _) =
-        if (hasTgt)
-          account.readRawBucketsFor(s, db, container,
-            srcOne.select(keyCols.map(col): _*), keyCols)
-        else
-          (s.range(0).select(lit(null).cast("string").as("raw")),
-            Set.empty[Long])
-      val changed = RawMerge.classify(s, srcOne.select("raw"), tgt, pkPaths)
-        .filter(col("action").isin("insert", "update"))
-        .select(("raw" +: keyCols).map(col): _*)
-      val rewritten = account.upsertRaw(s, db, container, changed, keyCols, pkPaths)
-      Stats(srcRows, mergedKeys, errorRows, rewritten)
-    } finally { sk.unpersist(); () }
+      if (errorRows > 0) deadLetter(account, db, container, keyed, pkPaths)
+      val p = plan(s, account, db, container, keyed, pkPaths, fileCol,
+        prune = true, fullOuter = false, sanitize = sanitize)
+      val rewritten = account.upsertRaw(s, db, container, p.changed, keys, pkPaths)
+      (Stats(srcRows, mergedKeys, errorRows, rewritten), p)
+    } finally { keyed.unpersist(); () }
   }
 
   /** Commit of a group-based row-level rewrite (MERGE INTO / UPDATE /
@@ -122,23 +167,19 @@ object ContainerMerge {
   def replaceGroups(s: SparkSession, account: FileAccount, db: String,
                     container: String, readFiles: Seq[String],
                     src: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val props = account.containerProperties(db, container)
     val pkPaths = props.pkPaths
-    val keyCols = "__id" +: pkPaths.indices.map(i => s"__pk$i")
-    val sk = RawMerge.srcKeyed(s, src, pkPaths)
+    val keyed = key(s, src, pkPaths)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val valid = RawMerge.validCol(pkPaths)
-      val nErr = sk.filter(!valid).count()
-      if (nErr > 0)
-        sk.filter(!valid).select("raw").write.mode("append")
-          .text(account.errorsPath(db, container))
+      if (!keyed.filter(!valid).isEmpty)
+        deadLetter(account, db, container, keyed, pkPaths)
       // write form + layout bucket; materialized BEFORE the group delete
       // (the lineage reads staged files, not container files, but the
       // checkpoint keeps the commit window's reads bounded regardless)
-      val out = sk.filter(valid)
-        .withColumn("b", account.bucketCol(keyCols, props.buckets))
+      val out = keyed.filter(valid)
+        .withColumn("b", account.bucketCol(RawMerge.keyCols(pkPaths), props.buckets))
         .select(col("__w").as("raw"), col("b"))
         .localCheckpoint()
       val outCounts: Map[Long, Long] = out.groupBy("b").count()
@@ -164,7 +205,7 @@ object ContainerMerge {
         account.compactContainer(s, db, container,
           only = Some(touched), fileThreshold = thr)
       }
-    } finally { sk.unpersist(); () }
+    } finally { keyed.unpersist(); () }
   }
 }
 
@@ -293,6 +334,20 @@ final class ContainerWrite(account: FileAccount, db: String, container: String,
     s"graft container merge-write $db.$container" +
       (if (truncateFirst) " (overwrite)" else "")
 
+  /** Merge ONLY the staged files the task commit messages name, then drop
+    * the staging tree `dir`. */
+  private def commitStaged(messages: Array[WriterCommitMessage], dir: String,
+                           truncate: Boolean): Unit = {
+    val spark = SparkSession.active
+    try {
+      if (truncate) account.truncateData(db, container)
+      val files = messages.collect { case StagedFileMessage(p) if p != null => p }
+      if (files.nonEmpty)
+        ContainerMerge.mergeRaw(spark, account, db, container,
+          spark.read.text(files: _*).select(col("value").as("raw")))
+    } finally { Storage.hadoop.deleteRecursive(dir); () }
+  }
+
   override def toBatch: BatchWrite = new BatchWrite {
     private val staging = account.stagingPath(db, container, queryId)
 
@@ -305,17 +360,8 @@ final class ContainerWrite(account: FileAccount, db: String, container: String,
       }
     }
 
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val spark = SparkSession.active
-      try {
-        if (truncateFirst) account.truncateData(db, container)
-        val files = messages.collect {
-          case StagedFileMessage(p) if p != null => p }
-        if (files.nonEmpty)
-          ContainerMerge.mergeRaw(spark, account, db, container,
-            spark.read.text(files: _*).select(col("value").as("raw")))
-      } finally { Storage.hadoop.deleteRecursive(staging); () }
-    }
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      commitStaged(messages, staging, truncateFirst)
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
       Storage.hadoop.deleteRecursive(staging); ()
@@ -343,17 +389,8 @@ final class ContainerWrite(account: FileAccount, db: String, container: String,
     // re-merges the same documents: canonical-diff classifies them as
     // skips, so the replay converges without rewriting a bucket —
     // at-least-once delivery into an idempotent sink
-    override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-      val spark = SparkSession.active
-      val dir = epochDir(epochId)
-      try {
-        val files = messages.collect {
-          case StagedFileMessage(p) if p != null => p }
-        if (files.nonEmpty)
-          ContainerMerge.mergeRaw(spark, account, db, container,
-            spark.read.text(files: _*).select(col("value").as("raw")))
-      } finally { Storage.hadoop.deleteRecursive(dir); () }
-    }
+    override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+      commitStaged(messages, epochDir(epochId), truncate = false)
 
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
       Storage.hadoop.deleteRecursive(epochDir(epochId)); ()

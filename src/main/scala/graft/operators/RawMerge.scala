@@ -32,15 +32,28 @@ import graft.functions.Hashing.md5h32
   */
 object RawMerge {
 
-  /** Classification action column values, reference branch order
-    * (migration.py:92-146): error → insert → skip → update. */
-  private def actionCol: Column =
-    when(col("__t_id").isNull, lit("insert"))
-      .when(col("__ch") === col("__t_ch"), lit("skip"))
-      .otherwise(lit("update"))
+  /** The merge-key columns of a keyed frame: `__id` then one `__pk<i>` per
+    * partition-key path, in path order. Source, stored and target-side
+    * keying, the bucket layout and the upsert sink all use this layout. */
+  private[graft] def keyCols(pkPaths: Seq[String]): Seq[String] =
+    "__id" +: pkPaths.indices.map(i => s"__pk$i")
 
-  private def pkNames(pkPaths: Seq[String]): Seq[String] =
-    pkPaths.indices.map(i => s"__pk$i")
+  /** The target side's names for [[keyCols]] (`__t_id`, `__t_pk<i>`). */
+  private def tgtKeyCols(pkPaths: Seq[String]): Seq[String] =
+    keyCols(pkPaths).map(k => "__t_" + k.drop(2))
+
+  /** `json_doc_keys` over `doc`: `raw` + `carry` + `__w` (with `inject`)
+    * + [[keyCols]]. */
+  private def keyedBy(src: DataFrame, doc: String, pkPaths: Seq[String],
+                      inject: Boolean, carry: Seq[String]): DataFrame = {
+    GraftFunctions.register(src.sparkSession)
+    val csv = pkPaths.map(_.stripPrefix("/")).mkString(",")
+    src.selectExpr(s"$doc AS raw" +: carry :+
+        s"json_doc_keys($doc, '$csv', '$inject') AS __m": _*)
+      .selectExpr(Seq("raw") ++ carry ++ (if (inject) Seq("__m.w AS __w") else Nil) ++
+        keyCols(pkPaths).zip("__m.id" +: pkPaths.indices.map(i => s"__m.pk$i"))
+          .map { case (k, e) => s"$e AS $k" }: _*)
+  }
 
   /** Source side: raw + injected write-form + merge keys from ONE parse via
     * the [[graft.functions.JsonDocKeys]] struct kernel (codegen CSE
@@ -48,105 +61,105 @@ object RawMerge {
     * the validity predicates into the scan the document parses once per
     * operator, not once per derived column). The canonical hash rides in a
     * SECOND projection on purpose: it must not be part of the kernel the
-    * scan-pushed predicates evaluate (see [[graft.functions.JsonDocs.docKeys]]). */
-  /** `carry` columns of `src` pass through unchanged (e.g. a source-file
-    * column a streaming caller captured before this keying). */
+    * scan-pushed predicates evaluate (see [[graft.functions.JsonDocs.docKeys]]).
+    * `carry` columns of `src` pass through unchanged (e.g. a source-file
+    * column the caller captured before this keying). */
   private[graft] def srcKeyed(s: SparkSession, src: DataFrame,
                               pkPaths: Seq[String],
-                              carry: Seq[String] = Nil): DataFrame = {
-    GraftFunctions.register(s)
-    val paths = pkPaths.map(_.stripPrefix("/"))
-    val csv = paths.mkString(",")
-    src.selectExpr("raw" +: carry :+ s"json_doc_keys(raw, '$csv', 'true') AS __m": _*)
-      .selectExpr(
-        (Seq("raw") ++ carry ++ Seq("__m.w AS __w", "__m.id AS __id") ++
-          paths.indices.map(i => s"__m.pk$i AS __pk$i")): _*)
+                              carry: Seq[String] = Nil): DataFrame =
+    keyedBy(src, "raw", pkPaths, inject = true, carry)
       .withColumn("__ch", expr("md5(canonical_json(__w))"))
-  }
+
+  /** Stored-row keying: `raw` (the `doc` column) + `carry` + [[keyCols]] of
+    * each line exactly as stored — no injection. The target side of the
+    * merge, the container's bucket layout and the stream replay gate all
+    * key stored lines through this. */
+  private[graft] def storedKeyed(df: DataFrame, pkPaths: Seq[String],
+                                 carry: Seq[String] = Nil,
+                                 doc: String = "raw"): DataFrame =
+    keyedBy(df, doc, pkPaths, inject = false, carry)
 
   /** Target side: keys + canonical hash + original bytes (kept for the skip
     * branch: a skipped document's bytes are the TARGET's, which the
     * reference leaves untouched, migration.py:124-130). No injection — the
     * target is compared exactly as stored, like the reference's read-back
     * document. */
-  private def tgtKeyed(s: SparkSession, tgt: DataFrame,
-                       pkPaths: Seq[String]): DataFrame = {
-    GraftFunctions.register(s)
-    val paths = pkPaths.map(_.stripPrefix("/"))
-    val csv = paths.mkString(",")
-    tgt.selectExpr("raw", s"json_doc_keys(raw, '$csv', 'false') AS __m")
-      .selectExpr(
-        Seq("raw AS __t_raw", "__m.id AS __t_id") ++
-          paths.indices.map(i => s"__m.pk$i AS __t_pk$i"): _*)
+  private def tgtKeyed(tgt: DataFrame, pkPaths: Seq[String]): DataFrame =
+    storedKeyed(tgt, pkPaths)
+      .select(col("raw").as("__t_raw") +: keyCols(pkPaths).zip(tgtKeyCols(pkPaths))
+        .map { case (k, t) => col(k).as(t) }: _*)
       .withColumn("__t_ch", expr("md5(canonical_json(__t_raw))"))
-  }
 
   /** Valid document predicate (migration.py:92-109): parseable, id present
     * and non-empty, every pk value a non-null non-empty scalar. */
   private[graft] def validCol(pkPaths: Seq[String]): Column =
-    (Seq(col("__w").isNotNull, col("__id").isNotNull, col("__id") =!= "") ++
-      pkNames(pkPaths).map(n => col(n).isNotNull && col(n) =!= ""))
+    (col("__w").isNotNull +: keyCols(pkPaths).map(k => col(k).isNotNull && col(k) =!= ""))
       .reduce(_ && _)
 
-  private def joinCond(pkPaths: Seq[String]): Column =
-    (Seq(col("__id") === col("__t_id")) ++
-      pkPaths.indices.map(i => col(s"__pk$i") === col(s"__t_pk$i")))
-      .reduce(_ && _)
-
-  /** Per-document action classification of raw `src` against raw `tgt` (both
-    * single-`raw`-column frames). Output: `raw` (the injected write form for
-    * valid rows, original bytes for error rows) + merge keys + `action`. */
-  def classify(s: SparkSession, src: DataFrame, tgt: DataFrame,
-               pkPaths: Seq[String]): DataFrame = {
-    val keys = "__id" +: pkNames(pkPaths)
-    val sk = srcKeyed(s, src, pkPaths)
-    val tk = tgtKeyed(s, tgt, pkPaths)
-    val valid = validCol(pkPaths)
-    val classified = sk.filter(valid)
-      .join(tk, joinCond(pkPaths), "left_outer")
-      .select(col("__w").as("raw") +: keys.map(col) :+ actionCol.as("action"): _*)
-    val errors = sk.filter(!valid)
-      .select(col("raw") +: keys.map(col) :+ lit("error").as("action"): _*)
-    classified.unionAll(errors)
-  }
-
-  /** Full-outer classification — ONE src⋈tgt shuffle that yields everything
-    * an orchestrated merge needs: every source row classified exactly as
-    * [[classify]] does, PLUS the target-only complement as `action =
-    * 'target'`. Counters, the changed-row sink input, and the expected
-    * post-merge state (verification) all derive from this single frame, so
-    * the orchestrator never runs a second merge join.
+  /** The one classification body. `valid` rows of a [[srcKeyed]] frame join
+    * the keyed target on the merge key; `invalid` rows become `error` rows.
+    * A left-outer join classifies the source rows alone; a full-outer join
+    * adds the target-only complement as `action = 'target'`. Actions follow
+    * the reference's branch order (migration.py:92-146): error → insert →
+    * skip → update.
     *
-    * The `raw` column is already state-correct per branch: insert/update
-    * rows carry the source's injected write form, skip and target-only rows
-    * carry the target's ORIGINAL bytes (the reference never rewrites an
-    * unchanged document), error rows carry the source's original bytes
-    * (dead-letter form). */
-  def classifyAll(s: SparkSession, src: DataFrame, tgt: DataFrame,
-                  pkPaths: Seq[String]): DataFrame = {
-    val keys = "__id" +: pkNames(pkPaths)
-    val sk = srcKeyed(s, src, pkPaths)
-    val tk = tgtKeyed(s, tgt, pkPaths)
-    val valid = validCol(pkPaths)
+    * `raw` is state-correct per branch: insert/update rows carry the
+    * source's injected write form, skip and target-only rows the target's
+    * ORIGINAL bytes (the reference never rewrites an unchanged document),
+    * error rows the source's original bytes (dead-letter form). Output:
+    * `raw` + [[keyCols]] + `carry` (columns of both `valid` and `invalid`)
+    * + `action`. */
+  private[graft] def classifyKeyed(valid: DataFrame, invalid: DataFrame,
+                                   tgt: DataFrame, pkPaths: Seq[String],
+                                   joinType: String,
+                                   carry: Seq[String] = Nil): DataFrame = {
+    val keys = keyCols(pkPaths)
+    val tkeys = tgtKeyCols(pkPaths)
     val action =
       when(col("__id").isNull, lit("target"))
         .when(col("__t_id").isNull, lit("insert"))
         .when(col("__ch") === col("__t_ch"), lit("skip"))
         .otherwise(lit("update"))
     val raw =
-      when(col("action") === "insert" || col("action") === "update", col("__w"))
+      when(col("action").isin("insert", "update"), col("__w"))
         .otherwise(col("__t_raw"))
-    val classified = sk.filter(valid)
-      .join(tk, joinCond(pkPaths), "full_outer")
+    val classified = valid
+      .join(tgtKeyed(tgt, pkPaths),
+        keys.zip(tkeys).map { case (k, t) => col(k) === col(t) }.reduce(_ && _),
+        joinType)
       .withColumn("action", action)
-      .select(raw.as("raw") +:
-        keys.zipWithIndex.map { case (k, i) =>
-          coalesce(col(k), col(if (i == 0) "__t_id" else s"__t_pk${i - 1}")).as(k)
-        } :+ col("action"): _*)
-    val errors = sk.filter(!valid)
-      .select(col("raw") +: keys.map(col) :+ lit("error").as("action"): _*)
+      .select((raw.as("raw") +:
+        keys.zip(tkeys).map { case (k, t) => coalesce(col(k), col(t)).as(k) }) ++
+        carry.map(col) :+ col("action"): _*)
+    val errors = invalid
+      .select((col("raw") +: keys.map(col)) ++ carry.map(col) :+
+        lit("error").as("action"): _*)
     classified.unionAll(errors)
   }
+
+  private def classifyWith(s: SparkSession, src: DataFrame, tgt: DataFrame,
+                           pkPaths: Seq[String], joinType: String): DataFrame = {
+    val sk = srcKeyed(s, src, pkPaths)
+    val valid = validCol(pkPaths)
+    classifyKeyed(sk.filter(valid), sk.filter(!valid), tgt, pkPaths, joinType)
+  }
+
+  /** Per-document action classification of raw `src` against raw `tgt` (both
+    * single-`raw`-column frames): one row per source line, `raw` + merge
+    * keys + `action` ([[classifyKeyed]] over a left-outer join). */
+  def classify(s: SparkSession, src: DataFrame, tgt: DataFrame,
+               pkPaths: Seq[String]): DataFrame =
+    classifyWith(s, src, tgt, pkPaths, "left_outer")
+
+  /** Full-outer classification — ONE src⋈tgt shuffle that yields everything
+    * an orchestrated merge needs: every source row classified exactly as
+    * [[classify]] does, PLUS the target-only complement as `action =
+    * 'target'`. Counters, the changed-row sink input, and the expected
+    * post-merge state (verification) all derive from this single frame, so
+    * the orchestrator never runs a second merge join. */
+  def classifyAll(s: SparkSession, src: DataFrame, tgt: DataFrame,
+                  pkPaths: Seq[String]): DataFrame =
+    classifyWith(s, src, tgt, pkPaths, "full_outer")
 
   /** Post-merge container state, byte-faithful: inserts/updates carry the
     * source's (injected, optionally masked) bytes; skips and target-only
@@ -163,7 +176,7 @@ object RawMerge {
     * joins. */
   def mergedStateOf(all: DataFrame, pkPaths: Seq[String],
                     sanitize: Boolean): DataFrame = {
-    val keys = "__id" +: pkNames(pkPaths)
+    val keys = keyCols(pkPaths)
     val written = if (sanitize) expr("mask_json(raw)") else col("raw")
     all.filter(col("action") =!= "error")
       .select(

@@ -226,10 +226,10 @@ object Streams {
     * The source container's data tree is a FileStreamSource (the streaming
     * generalization of the reference's continuation-token pagination, A2:
     * the checkpoint tracks which files are consumed, so a restart resumes
-    * exactly where the last run stopped); every micro-batch runs the raw
-    * merge against the CURRENT target and lands only inserts/updates
-    * through the bucketed upsert sink — skip-elision and byte fidelity
-    * identical to the batch path.
+    * exactly where the last run stopped); every micro-batch runs the one
+    * container merge ([[graft.core.ContainerMerge.mergeRaw]], the same
+    * policy as the orchestrator and SQL INSERT) against the CURRENT target
+    * and lands only inserts/updates through the bucketed upsert sink.
     *
     * The target side of each micro-batch is BUCKET-PRUNED
     * ([[graft.core.FileAccount.readRawBucketsFor]]): only the `data/b=<k>`
@@ -242,10 +242,10 @@ object Streams {
     * Within a batch, duplicate merge keys collapse to one row before the
     * merge (the reference's serial loop is last-write-wins per page; a
     * micro-batch has no defined intra-batch order, so the winner is the
-    * lexicographically LAST source file, content-hash tiebreak — a
-    * deterministic rule, stable under checkpoint replay). Invalid/corrupt
-    * documents append to the container's `_errors` dead-letter (A13,
-    * at-least-once under replay) and never reach the sink.
+    * lexicographically LAST source file, content-hash tiebreak — the
+    * [[graft.core.ContainerMerge.plan]] rule, stable under checkpoint
+    * replay). Invalid/corrupt documents append to the container's `_errors`
+    * dead-letter (A13, at-least-once under replay) and never reach the sink.
     *
     * Run with `Trigger.AvailableNow` for a catch-up-and-stop sync (the
     * reference's one-shot run) or a processing-time trigger for true
@@ -302,58 +302,14 @@ object Streams {
     target.createDatabaseIfAbsent(db)
     target.createContainerIfAbsent(db, container, props)
     val pkPaths = props.pkPaths
-    val keyCols = "__id" +: pkPaths.indices.map(i => s"__pk$i")
+    // the source-file column is captured in the stream (before any state
+    // gate) for the merge's last-file-wins duplicate rule
     val mergeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
-      // key the batch once (parse-once kernel); the source-file column was
-      // captured in the stream (before any state gate) for the deterministic
-      // last-file-wins duplicate rule
-      val sk = RawMerge.srcKeyed(s,
-          batch.select(col("value").as("raw"), col("__f")), pkPaths,
-          carry = Seq("__f"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val valid = RawMerge.validCol(pkPaths)
-        // A23/A24 counters from ONE aggregation over the keyed batch (the
-        // orchestrator's one-frame pattern): total rows, invalid rows, and
-        // distinct valid merge keys (= the deduped row count) in one action
-        val stats = sk.agg(
-          count(lit(1)).as("n"),
-          count(when(!valid, lit(1))).as("e"),
-          count_distinct(when(valid,
-            struct(keyCols.map(col): _*))).as("m")).head()
-        val (srcRows, errorRows, mergedRows) =
-          (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-        if (errorRows > 0)
-          sk.filter(!valid).select("raw").write.mode("append").text(
-            target.errorsPath(db, container))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyCols.map(col): _*)
-          .orderBy(col("__f").desc, col("__ch").desc)
-        val srcOne = sk.filter(valid)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-        // point-read analogue: only the buckets this batch touches
-        val hasTgt = target.hasData(db, container)
-        val (tgt, affected) =
-          if (hasTgt)
-            target.readRawBucketsFor(s, db, container,
-              srcOne.select(keyCols.map(col): _*), keyCols)
-          else (batch.limit(0).select(col("value").as("raw")), Set.empty[Long])
-        // capture the pruned file list before the upsert swaps bucket files
-        val tgtFiles = if (hasTgt) tgt.inputFiles.toSeq else Seq.empty
-        val changedRows = RawMerge.classify(s, srcOne.select("raw"), tgt, pkPaths)
-          .filter(col("action").isin("insert", "update"))
-          .select(("raw" +: keyCols).map(col): _*)
-        val changed =
-          if (sanitize) changedRows.withColumn("raw", expr("mask_json(raw)"))
-          else changedRows
-        target.upsertRaw(s, db, container, changed, keyCols, pkPaths)
-        onBatch(SyncBatchProgress(batchId, srcRows, mergedRows,
-          errorRows, affected, tgtFiles))
-      } finally sk.unpersist()
-      ()
+      val (st, p) = graft.core.ContainerMerge.mergeRaw(batch.sparkSession,
+        target, db, container, batch.select(col("value").as("raw"), col("__f")),
+        fileCol = Some("__f"), sanitize = sanitize)
+      onBatch(SyncBatchProgress(batchId, st.srcRows, st.mergedKeys,
+        st.errorRows, p.pruned.getOrElse(Set.empty), p.targetFiles))
     }
     // the source container may itself be bucket-laid-out (b=<k> dirs from
     // a prior upsert) with stray files at the data/ root — recursive
@@ -368,7 +324,6 @@ object Streams {
     val streamIn: DataFrame =
       if (!dedupeReplays) lines
       else {
-        graft.functions.GraftFunctions.register(spark)
         val rocksDb =
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -384,15 +339,13 @@ object Streams {
         }
         import spark.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        val csv = pkPaths.map(_.stripPrefix("/")).mkString(",")
-        val keyParts = col("__m.id") +: pkPaths.indices.map(i => col(s"__m.pk$i"))
+        val keyParts = RawMerge.keyCols(pkPaths).map(col)
         val validKey = keyParts.map(c => c.isNotNull && c =!= "").reduce(_ && _)
-        lines
-          .selectExpr("value", "__f", s"json_doc_keys(value, '$csv', 'false') AS __m")
+        RawMerge.storedKeyed(lines, pkPaths, carry = Seq("__f"), doc = "value")
           .withColumn("k",
             when(validKey, concat_ws("\u0001", lit("k") +: keyParts: _*))
-              .otherwise(concat(lit("e|"), md5(col("value")))))
-          .select(col("k"), col("__f").as("f"), col("value").as("raw"))
+              .otherwise(concat(lit("e|"), md5(col("raw")))))
+          .select(col("k"), col("__f").as("f"), col("raw"))
           .as[SyncRow]
           .groupByKey(_.k)
           .transformWithState(new FirstSeenKeys(dedupeTtl),

@@ -66,6 +66,33 @@ class CatalogSpec extends AnyFunSuite {
     // --container without --database (main.py:109-110) and bad paths -> 1
     assert(Orchestrator.run(Array(src.root, tgt.root, "--container", "x")) == 1)
     assert(Orchestrator.run(Array("target/nope-src", tgt.root)) == 1)
+    // malformed arguments -> 1 with the usage line on stderr, no exception
+    for (bad <- Seq(
+        Array(src.root, tgt.root, "--database"),
+        Array(src.root, tgt.root, "--max-errors", "x"),
+        Array(src.root, tgt.root, "--parallelism", "two"),
+        Array(src.root))) {
+      val err = new java.io.ByteArrayOutputStream
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val code = try Orchestrator.run(bad) finally System.setErr(saved)
+      assert(code == 1, s"${bad.toSeq} must exit 1")
+      val usage = err.toString.linesIterator.find(_.startsWith("usage: "))
+      assert(usage.exists(u => u.contains("--max-errors") && u.contains("--parallelism")),
+        s"${bad.toSeq} must print the usage line, got: $err")
+    }
+  }
+
+  test("summary file escapes database and container names") {
+    val summary = Files.createTempFile(Paths.get("target"), "esc-sum", ".json")
+    Orchestrator.writeSummary(Orchestrator.Summary(Seq(
+      Orchestrator.ContainerResult("d\\b", "a\"b", 1, 0, 0, 0, 1, 1,
+        verified = true)), 1.0), summary.toString)
+    val js = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(summary.toFile)
+    val c = js.get("containers").get(0)
+    assert(c.get("database").asText == "d\\b" && c.get("container").asText == "a\"b")
+    assert(js.get("ok").asBoolean)
   }
 
   test("catalog enumeration and idempotent creation (A17-A21)") {
@@ -268,6 +295,36 @@ class CatalogSpec extends AnyFunSuite {
       val k1 = tgt.readRaw(spark, "db", "c").collect().map(_.getString(0))
         .filter(_.contains("\"id\":\"k1\""))
       assert(k1.length == 1, s"duplicate must have collapsed: ${k1.toSeq}")
+    }
+  }
+
+  test("duplicate merge keys in the source merge ONE document, from the last file") {
+    // two lines for one (id, pk) in two source files: Cosmos could never
+    // hold both, so the merge keeps the lexicographically last file's line
+    // and the run verifies; the counters count merged keys, sourceCount
+    // every line read
+    val src = newAccount("cat-sdup-src")
+    seedContainer(src, "db", "c", Seq("/pk"), Seq(
+      """{"id":"k1","pk":"p","v":1}""", """{"id":"k2","pk":"p","v":2}"""))
+    Files.writeString(Paths.get(src.root, "db", "c", "data", "part-1.json"),
+      """{"id":"k1","pk":"p","v":3}""")
+    val seed = newAccount("cat-sdup-seed")
+    seedContainer(seed, "db", "c", Seq("/pk"), Seq("""{"id":"k1","pk":"p","v":0}"""))
+    for (mode <- Seq(Some(false), Some(true)); seeded <- Seq(false, true)) {
+      val tgt = newAccount(s"cat-sdup-tgt-$mode-$seeded")
+      if (seeded) assert(migrate(spark, seed, tgt).ok)
+      val r = migrate(spark, src, tgt, Config(incremental = mode)).results.head
+      val what = s"(incremental=$mode, seeded=$seeded): $r"
+      assert(r.verified, s"the merged state must verify $what")
+      assert(r.sourceCount == 3 && r.errors == 0, what)
+      assert(r.inserted + r.updated == 2 && r.updated == (if (seeded) 1 else 0), what)
+      val k1 = tgt.readRaw(spark, "db", "c").collect().map(_.getString(0))
+        .filter(_.contains("\"id\":\"k1\""))
+      assert(k1.length == 1 && k1.head.contains("\"v\":3"),
+        s"exactly the last file's k1 must land $what: ${k1.toSeq}")
+      val again = migrate(spark, src, tgt, Config(incremental = mode)).results.head
+      assert(again.verified && again.inserted == 0 && again.updated == 0,
+        s"a rerun must be all skips $what: $again")
     }
   }
 
