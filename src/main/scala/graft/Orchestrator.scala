@@ -6,7 +6,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.{ContainerMerge, FileAccount}
-import graft.operators.RawMerge
 
 /** Account-level migration orchestration — the reference's `main.py` loop
   * (A26: account → database → container, with `--database`/`--container`
@@ -16,12 +15,13 @@ import graft.operators.RawMerge
   *
   * Per container (reference E3, SURVEY.md §3): read source RAW (schemaless —
   * unknown fields round-trip byte-exactly, no inference), classify against
-  * the target, optionally mask PII on the written rows, land ONLY the
-  * inserts/updates through the bucketed upsert sink
-  * ([[FileAccount.upsertRaw]] — the skip branch costs zero writes, like the
-  * reference's RU-saving skip, migration.py:124-130), then verify. Counters
-  * come from one aggregation over the classified frame (the reference
-  * increments Python ints per document, migration.py:130-146). Corrupt or
+  * the target, optionally mask PII on the written rows, rewrite ONLY the
+  * buckets holding inserts/updates through the bucketed upsert sink
+  * ([[FileAccount.upsertRaw]], fed from the classified frame — the skip
+  * branch costs zero writes, like the reference's RU-saving skip,
+  * migration.py:124-130), then verify. Counters, the expected state and
+  * the rewrite set come from one aggregation over the classified frame (the
+  * reference increments Python ints per document, migration.py:130-146). Corrupt or
   * invalid documents land in the error counter and a per-container
   * dead-letter file (A13) — never a task failure; `maxErrors` bounds how
   * many before the container aborts. Verification fixes the reference's B5
@@ -30,7 +30,10 @@ import graft.operators.RawMerge
   *
   * Duplicate keys: Cosmos holds one document per `(id, pk)`, so of several
   * source lines for one merge key ONE is merged — the line from the
-  * lexicographically last source file, then the highest content hash.
+  * lexicographically last source file, then the highest content hash. A
+  * target holding one key twice (an external writer's corruption) keeps
+  * one copy when its bucket is rewritten, and that run reports
+  * `verified = false`; the rerun verifies.
   */
 object Orchestrator {
 
@@ -115,50 +118,43 @@ object Orchestrator {
     val preSigs: Map[Long, String] =
       if (incremental) target.bucketSignatures(db, container) else Map.empty
     // ONE full-outer src⋈tgt join for the whole container run: counters,
-    // dead-letter, the sink input, AND the expected post-merge state all
-    // derive from this cached frame (a second merge join for verification
-    // would be ~2 extra container passes at scale). The source file name
-    // feeds the merge's duplicate-key rule.
+    // dead-letter, the expected post-merge state AND the sink input all
+    // derive from this cached frame — it holds every target row of the
+    // buckets it read, so the sink rewrites them without reading them again.
+    // The source file name feeds the merge's duplicate-key rule.
     val keyed = ContainerMerge.key(spark, source.readRaw(spark, db, container)
       .withColumn("__f", input_file_name()), pkPaths, Some("__f"))
     val plan = ContainerMerge.plan(spark, target, db, container, keyed,
-      pkPaths, Some("__f"), prune = incremental, fullOuter = true,
-      sanitize = cfg.sanitize)
+      pkPaths, Some("__f"), prune = incremental, sanitize = cfg.sanitize)
     val classified = plan.classified.cache()
-    val tally = classified.groupBy("action")
-      .agg(count(lit(1)), coalesce(sum("__n"), lit(0L))).collect()
-    val counts = tally.map(r => r.getString(0) -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
+    // one collect: counters, source count, expected state, rewrite set and
+    // its sidecar counts
+    val tally = ContainerMerge.Tally.of(plan.tally.collect())
+    val counts = tally.actions
 
     // A13 dead-letter: corrupt/invalid documents land next to the data, and
     // the run aborts only past the configured bound
     if (counts("error") > 0)
-      classified.filter(col("action") === "error").select("raw")
-        .write.mode("overwrite")
-        .text(target.errorsPath(db, container))
+      plan.errors.write.mode("overwrite").text(target.errorsPath(db, container))
     require(counts("error") <= cfg.maxErrors,
       s"$db/$container: ${counts("error")} error documents exceed maxErrors=${cfg.maxErrors}")
 
     // A15 + B5 fix: count parity and content-hash parity of what landed vs
-    // the intended merged state (byte-level: the raw lines themselves).
-    // Expected-state metrics are materialized BEFORE the sink mutates the
-    // target: the upsert may absorb/delete stray files that the target
-    // side's lineage still references (the cache above bounds that exposure too).
-    // Count and hash come from ONE aggregation — each stateStats call is a
-    // single pass over its frame, which matters when the frame is a
-    // container re-read. bit_xor, not sum: ANSI mode errors on 64-bit
-    // hash-sum overflow
+    // the intended merged state (byte-level: the raw lines themselves). The
+    // expected side came with the tally, BEFORE the sink mutated the
+    // target; the landed side is one aggregation per check — a single pass
+    // over a container re-read. bit_xor, not sum: ANSI mode errors on
+    // 64-bit hash-sum overflow
     def stateStats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val r = df.select(xxhash64(col("raw")).as("h"))
         .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    val expected = RawMerge.mergedStateOf(classified, pkPaths, cfg.sanitize)
-    val (expectedCount, expectedHash) = stateStats(expected)
 
-    // A11/A12: only inserts/updates reach the sink (write elision for skips)
-    target.upsertRaw(spark, db, container, plan.changed,
-      RawMerge.keyCols(pkPaths), pkPaths)
+    // A11/A12: only buckets with an insert, an update, a stray or a
+    // duplicate key are rewritten (write elision for skips)
+    target.upsertRaw(spark, db, container, plan.rows(tally), tally.rewrite,
+      plan.strays)
     classified.unpersist()
 
     val (verified, targetCount, verifyMode) = plan.pruned match {
@@ -180,21 +176,22 @@ object Orchestrator {
           (postSigs.keySet -- buckets) == (preSigs.keySet -- buckets) &&
             (postSigs.keySet -- buckets).forall(b => postSigs(b) == preSigs(b))
         val (backCount, backHash) = stateStats(back)
-        val ok = backCount == expectedCount && backHash == expectedHash &&
-          untouched
+        val ok = backCount == tally.expectedCount &&
+          backHash == tally.expectedHash && untouched
         (ok, target.countRows(spark, db, container), "incremental")
       case None =>
         val (writtenCount, writtenHash) = stateStats(
           target.readRaw(spark, db, container))
-        val ok = writtenCount == expectedCount && writtenHash == expectedHash
+        val ok = writtenCount == tally.expectedCount &&
+          writtenHash == tally.expectedHash
         (ok, writtenCount, "full")
     }
 
-    // every source line stands behind exactly one classified row (`__n`),
-    // so the source count is free — no extra scan
+    // every source line stands behind exactly one first-ranked classified
+    // row (`__n`), so the source count is free — no extra scan
     ContainerResult(db, container,
       counts("insert"), counts("update"), counts("skip"), counts("error"),
-      tally.map(_.getLong(2)).sum, targetCount, verified, verifyMode)
+      tally.sourceCount, targetCount, verified, verifyMode)
   }
 
   /** A26 top loop with scoping; `--container` requires `--database`

@@ -227,28 +227,13 @@ case class FileAccount(root: String) {
       val scoped = all.filter(col("__b").isInCollection(rewrite))
       val survivors = scoped.filter(!isMatch)
       val deleted = scoped.filter(isMatch).count()
-      // same commit mechanics as upsertRaw: truncate lineage before the
-      // dynamic overwrite swaps the very files the plan reads
+      // truncate lineage before the dynamic overwrite swaps the very files
+      // the plan reads
       val out = survivors.select(col("raw"), col("__b").as("b")).localCheckpoint()
       val outCounts: Map[Long, Long] = out.groupBy("b").count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      if (outCounts.nonEmpty)
-        out.write.partitionBy("b")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode(SaveMode.Overwrite)
-          .text(dataDir(db, container))
-      // dynamic overwrite only touches partitions PRESENT in the output —
-      // a bucket whose every row was deleted must be removed explicitly
-      rewrite.filter(outCounts.getOrElse(_, 0L) == 0L)
-        .foreach(b => store.deleteRecursive(bucketDir(db, container, b)))
-      strays.foreach(store.delete(_))
-      val prior = readBucketCounts(db, container)
-      writeBucketCounts(db, container,
-        (prior -- rewrite) ++ rewrite.toSeq.sorted.flatMap { b =>
-          val n = outCounts.getOrElse(b, 0L)
-          if (n == 0L) None
-          else Some(b -> (n, dirSignature(bucketDir(db, container, b))))
-        })
+      rewriteBuckets(db, container, out,
+        rewrite.map(b => b -> outCounts.getOrElse(b, 0L)).toMap, strays)
       deleted
     } finally { cand.unpersist(); () }
   }
@@ -272,11 +257,11 @@ case class FileAccount(root: String) {
     * Selection is pure driver metadata (the bucket listing). The rewrite
     * reads ONLY the selected buckets (+ strays), splits each bucket's rows
     * into its target file count (hash of the raw line — size-balanced,
-    * content-independent of arrival order), and commits through the same
-    * dynamic-partition-overwrite + lineage-checkpoint + sidecar-resign
-    * mechanics as [[upsertRaw]]. Rows are never parsed (a stored row's
-    * bucket is its directory), except strays, which are keyed to find the
-    * bucket they belong in. Returns (compacted bucket ids, files before,
+    * content-independent of arrival order), checkpoints them (the write
+    * replaces the very files they were read from) and commits through the
+    * bucket-rewrite tail every rewrite shares ([[rewriteBuckets]]). Rows
+    * are never parsed (a stored row's bucket is its directory), except
+    * strays, which are keyed to find the bucket they belong in. Returns (compacted bucket ids, files before,
     * files after, bytes rewritten, strays absorbed). */
   def compactContainer(spark: SparkSession, db: String, container: String,
                        targetBytes: Long = 128L << 20,
@@ -354,8 +339,8 @@ case class FileAccount(root: String) {
     val sliceDf = sliceOf.toSeq.sorted.toDF("__b", "__nf")
 
     val union = (bucketRows.toSeq ++ strayRows.toSeq).reduce(_ unionAll _)
-    // same commit hazard as upsertRaw: the plan reads the very files the
-    // overwrite below replaces — truncate lineage before swapping
+    // the plan reads the very files the overwrite below replaces — truncate
+    // lineage before swapping
     val out = union
       .join(broadcast(sliceDf), Seq("__b"))
       .withColumn("__s", pmod(xxhash64(col("raw")), col("__nf")))
@@ -369,17 +354,8 @@ case class FileAccount(root: String) {
     val bytes = rewrite.toSeq.map(b =>
       listing.get(b).fold(0L)(_._2.map(_.size).sum)).sum +
       strays.flatMap(store.fileMeta).map(_.size).sum
-    if (outCounts.nonEmpty)
-      out.write.partitionBy("b")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite)
-        .text(dataDir(db, container))
-    // dynamic overwrite only touches partitions PRESENT in the output — a
-    // rewrite bucket holding only empty files must be removed explicitly
-    rewrite.filter(outCounts.getOrElse(_, 0L) == 0L)
-      .foreach(b => store.deleteRecursive(bucketDir(db, container, b)))
-    strays.foreach(store.delete(_))
-    resignBuckets(db, container, rewrite, outCounts)
+    rewriteBuckets(db, container, out,
+      rewrite.map(b => b -> outCounts.getOrElse(b, 0L)).toMap, strays)
     val filesAfter = rewrite.toSeq.sorted
       .map(b => dataFiles(bucketDir(db, container, b)).size).sum
     CompactionStats(rewrite, filesBefore, filesAfter, bytes, strays.size.toLong)
@@ -1143,107 +1119,115 @@ case class FileAccount(root: String) {
     RawMerge.storedKeyed(rawDf, pkPaths)
       .withColumn("__b", bucketCol(RawMerge.keyCols(pkPaths), nb))
 
-  /** Incremental upsert: land `changed` documents (columns: `raw` + the key
-    * columns `keyCols`, already extracted) into the container, rewriting ONLY
-    * the hash buckets that contain changed keys — the distributed analogue of
-    * the reference's per-document `replace_item`/`create_item`
-    * (migration.py:132-146), where unchanged documents cost nothing.
-    *
-    * Shape: affected buckets = distinct bucket ids of the changed keys (≤
-    * `buckets`, a metadata-sized collect); survivors = the affected buckets'
-    * EXISTING rows (read via explicit bucket-dir paths — physical pruning, no
-    * full-container scan) anti-joined on the merge key against the changed
-    * keys; output = survivors ∪ changed, written with dynamic partition
-    * overwrite so untouched bucket directories keep their files byte-for-byte.
-    * Stray files (out-of-layout external writes) are read, merged, and
-    * absorbed into the layout. At 100 TB with a 1% change rate and
-    * well-chosen bucket count this rewrites ~1% of the container instead of
-    * 100%. Returns the set of bucket ids rewritten. */
-  def upsertRaw(spark: SparkSession, db: String, container: String,
-                changed: DataFrame, keyCols: Seq[String],
-                pkPaths: Seq[String]): Set[Long] = {
-    GraftFunctions.register(spark)
-    val props = containerProperties(db, container)
-    val nb = props.buckets
-    val dir = dataDir(db, container)
-    store.mkdirs(dir)
-
-    // evaluated twice (bucket-id collect, then the bucket rewrite) — cache so
-    // callers' upstream joins don't recompute per action
-    val chg = changed.withColumn("__b", bucketCol(keyCols, nb))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val strays = strayFiles(db, container)
-
-    def keyed(rawDf: DataFrame): DataFrame = keyedRows(rawDf, pkPaths, nb)
-
-    val strayRows =
-      if (strays.isEmpty) None
-      else Some(keyed(spark.read.text(strays: _*)
-        .select(col("value").as("raw"))))
-
-    // bounded collects: ≤ nb bucket ids (+ stray bucket ids)
-    val affected: Set[Long] =
-      chg.select("__b").distinct().collect().map(_.getLong(0)).toSet ++
-        strayRows.toSeq.flatMap(_.select("__b").distinct().collect().map(_.getLong(0)))
-    if (affected.isEmpty) { chg.unpersist(); return Set.empty }
-
-    val existingDirs = affected.toSeq.sorted
-      .map(bucketDir(db, container, _))
-      .filter(store.isDirectory(_))
-    val existingRows =
-      if (existingDirs.isEmpty) None
-      else Some(keyed(spark.read
-        .option("recursiveFileLookup", "true")
-        .text(existingDirs: _*)
-        .select(col("value").as("raw"))))
-
-    val survivors = (existingRows.toSeq ++ strayRows.toSeq)
-      .map(_.join(chg.select(keyCols.map(col): _*), keyCols, "left_anti"))
-      .reduceOption(_ unionAll _)
-
-    // Materialize BEFORE the overwrite commits: survivors' lineage reads the
-    // very bucket files the write below replaces, so a lazy plan would
-    // depend on "all read tasks finish before any partition is swapped".
-    // localCheckpoint truncates the lineage — the write job reads stored
-    // blocks, and a lost block fails the job instead of silently recomputing
-    // against half-swapped files. The cost is one extra pass over the
-    // affected buckets' rows only (the data being rewritten anyway).
-    val out = (survivors.toSeq :+ chg).map(_.select(col("raw"), col("__b").as("b")))
-      .reduce(_ unionAll _)
-      .localCheckpoint()
-    // per-bucket row counts of the rewritten buckets, straight off the
-    // checkpointed blocks (affected rows only, ≤ nb result rows) — feeds the
-    // count sidecar so verification never needs a full-container scan
-    val outCounts: Map[Long, Long] = out.groupBy("b").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    out.write
-      .partitionBy("b")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite)
-      .text(dir)
-    chg.unpersist()
+  /** The commit tail every bucket rewrite shares: land `out` (`raw`, `b`)
+    * with one dynamic-partition-overwrite write (bucket dirs absent from it
+    * keep their files byte-for-byte), remove the rewritten buckets that
+    * ended empty (the overwrite only replaces partitions PRESENT in the
+    * output), delete the stray files whose rows `out` absorbed, and re-sign
+    * the sidecar. `counts` holds every rewritten bucket with its row count
+    * in `out`. */
+  private def rewriteBuckets(db: String, container: String, out: DataFrame,
+                             counts: Map[Long, Long],
+                             strays: Seq[String]): Unit = {
+    if (counts.values.exists(_ > 0L))
+      out.write.partitionBy("b")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode(SaveMode.Overwrite)
+        .text(dataDir(db, container))
+    counts.collect { case (b, 0L) => b }
+      .foreach(b => store.deleteRecursive(bucketDir(db, container, b)))
     strays.foreach(store.delete(_))
-    // sidecar update: rewritten buckets get fresh (count, signature); entries
-    // for untouched buckets carry over (their files are byte-identical)
-    val prior = readBucketCounts(db, container)
-    writeBucketCounts(db, container,
-      (prior -- affected) ++ affected.toSeq.sorted.map { b =>
-        b -> (outCounts.getOrElse(b, 0L), dirSignature(bucketDir(db, container, b)))
-      })
+    resignBuckets(db, container, counts.keySet, counts)
+  }
+
+  /** The merge sink (A11/A12): land the post-merge rows of the buckets a
+    * merge rewrites — the distributed analogue of the reference's
+    * per-document `replace_item`/`create_item` (migration.py:132-146),
+    * where unchanged documents cost nothing. `rows` (`raw`, `b`) holds
+    * every row those buckets keep, `counts` each rewritten bucket with its
+    * row count, `strays` the stray files the rows were read from
+    * ([[ContainerMerge.Plan.rows]], [[ContainerMerge.Tally]],
+    * [[ContainerMerge.Plan.strays]]). A stray that lands after the merge
+    * read it is not in `strays` and survives.
+    *
+    * Shape: one dynamic-partition-overwrite write job and the
+    * [[rewriteBuckets]] tail; no re-read, no re-count. With nothing to
+    * rewrite (an all-skip rerun) it returns before any Spark action. At
+    * 100 TB with a 1% change rate and a well-chosen bucket count this
+    * rewrites ~1% of the container instead of 100%.
+    *
+    * Commit safety: `rows` reads the bucket files the write replaces, and
+    * needs no lineage checkpoint. The write is ONE job whose commit (the
+    * partition swap) follows every task, so a recomputed cache block reads
+    * the files before the swap; the expected state and `counts` were
+    * aggregated before the write; and nothing reads the merge's frame
+    * after the commit — the caller unpersists it then. Returns the bucket
+    * ids rewritten. */
+  def upsertRaw(spark: SparkSession, db: String, container: String,
+                rows: DataFrame, counts: Map[Long, Long],
+                strays: Seq[String]): Set[Long] = {
+    store.mkdirs(dataDir(db, container))
+    if (counts.isEmpty) return Set.empty
+    rewriteBuckets(db, container, rows, counts, strays)
     // AUTO-COMPACTION (opt-in via the container's "autocompact" metadata /
-    // TBLPROPERTIES): every upsert writes fresh batch-sized part files into
-    // its affected buckets, so a container fed by many small merges grows
-    // its per-bucket file count without bound. With a threshold N set, any
+    // TBLPROPERTIES): every upsert writes fresh part files into its
+    // affected buckets, so a container fed by many small merges can grow
+    // its per-bucket file count. With a threshold N set, any
     // JUST-REWRITTEN bucket that ended with more than max(N, size-target)
     // files is compacted inline — upkeep stays O(affected buckets) per
     // write (the restriction bounds the metadata walk too), untouched
     // buckets are never examined, and the post-compaction sidecar re-sign
     // keeps verification metadata-only. Write amplification is bounded:
     // each upsert rewrites at most its own buckets one extra time.
-    props.autocompactFiles.foreach { thr =>
+    containerProperties(db, container).autocompactFiles.foreach { thr =>
       compactContainer(spark, db, container,
-        only = Some(affected), fileThreshold = thr)
+        only = Some(counts.keySet), fileThreshold = thr)
     }
-    affected
+    counts.keySet
+  }
+
+  /** Direct load: land `changed` documents (columns: `raw` + the key
+    * columns `keyCols`, already extracted) as given — no classification,
+    * no injection, no masking — replacing the stored rows with the same
+    * merge key. For seeding and tooling; merges go through
+    * [[ContainerMerge]] and the sink above. Reads the affected buckets'
+    * existing rows (plus strays), drops the replaced keys, checkpoints the
+    * result (the write replaces the files it was read from) and hands it to
+    * the sink. Returns the set of bucket ids rewritten. */
+  def upsertRaw(spark: SparkSession, db: String, container: String,
+                changed: DataFrame, keyCols: Seq[String],
+                pkPaths: Seq[String]): Set[Long] = {
+    GraftFunctions.register(spark)
+    store.mkdirs(dataDir(db, container))
+    val nb = containerProperties(db, container).buckets
+    val chg = changed.withColumn("__b", bucketCol(keyCols, nb))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val strays = strayFiles(db, container)
+      val strayRows =
+        if (strays.isEmpty) None
+        else Some(keyedRows(spark.read.text(strays: _*)
+          .select(col("value").as("raw")), pkPaths, nb))
+      // bounded collects: ≤ nb bucket ids (+ stray bucket ids)
+      val affected: Set[Long] =
+        chg.select("__b").distinct().collect().map(_.getLong(0)).toSet ++
+          strayRows.toSeq.flatMap(_.select("__b").distinct().collect().map(_.getLong(0)))
+      if (affected.isEmpty) return Set.empty
+      val existingDirs = affected.toSeq.sorted
+        .map(bucketDir(db, container, _)).filter(store.isDirectory(_))
+      val existingRows =
+        if (existingDirs.isEmpty) None
+        else Some(keyedRows(spark.read.option("recursiveFileLookup", "true")
+          .text(existingDirs: _*).select(col("value").as("raw")), pkPaths, nb))
+      val survivors = (existingRows.toSeq ++ strayRows.toSeq)
+        .map(_.join(chg.select(keyCols.map(col): _*), keyCols, "left_anti"))
+      val out = (survivors :+ chg).map(_.select(col("raw"), col("__b").as("b")))
+        .reduce(_ unionAll _)
+        .localCheckpoint()
+      val outCounts: Map[Long, Long] = out.groupBy("b").count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      upsertRaw(spark, db, container, out,
+        affected.map(b => b -> outCounts.getOrElse(b, 0L)).toMap, strays)
+    } finally { chg.unpersist(); () }
   }
 }

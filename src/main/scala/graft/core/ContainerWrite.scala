@@ -3,7 +3,7 @@ package graft.core
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
@@ -59,12 +59,85 @@ object ContainerMerge {
   final case class Stats(srcRows: Long, mergedKeys: Long, errorRows: Long,
                          rewrittenBuckets: Set[Long])
 
-  /** One planned merge (lazy frames): `classified` carries `__n`, the
-    * source lines behind each row; `changed` is the sink input; `pruned`
-    * and `targetFiles` are the buckets and files a pruned target side reads
-    * (`None`/empty for a whole-container or absent target). */
-  final case class Plan(classified: DataFrame, changed: DataFrame,
-                        pruned: Option[Set[Long]], targetFiles: Seq[String])
+  /** A stored file directly under `data/`, outside every `b=<k>` bucket
+    * directory: a stray an external writer placed there. */
+  private val StrayFile = "/data/[^/]+$"
+
+  /** One planned merge (lazy frames). `classified` is the full-outer
+    * classification: every source row with its action plus every target
+    * row the plan read, `raw` in post-merge form (masked on inserts and
+    * updates under `sanitize`), `__n` (source lines behind the row), `__b`
+    * (the row's bucket), `__t_rn` (rank of the target row within its merge
+    * key, null when no target row joined), `__t_stray` (read from a stray
+    * file). `pruned` is the bucket set a pruned target side reads (`None`
+    * for a whole-container or absent target); `targetFiles` are the files
+    * the target side reads. Callers persist `classified` for the [[tally]]
+    * collect and the sink write, and unpersist it after the sink. */
+  final case class Plan(classified: DataFrame, pruned: Option[Set[Long]],
+                        targetFiles: Seq[String]) {
+    /** Per merge key, the first target row (or the unmatched source row):
+      * what a key group leaves in the container. */
+    private def first = col("__t_rn").isNull || col("__t_rn") === 1
+
+    /** One row per (action, bucket) — collect it and read it with
+      * [[Tally.of]]: counters, expected state, rewrite set, sidecar counts. */
+    lazy val tally: DataFrame = classified.groupBy("action", "__b").agg(
+      count(lit(1)).as("n"),
+      coalesce(sum(when(first, col("__n"))), lit(0L)).as("src"),
+      coalesce(expr("bit_xor(xxhash64(raw))"), lit(0L)).as("h"),
+      count(when(first, lit(1))).as("kept"),
+      count(when(col("__t_stray"), lit(1))).as("stray"),
+      count(when(col("__t_rn") > 1, lit(1))).as("dup"))
+
+    /** The invalid source lines, for the dead-letter channel. */
+    def errors: DataFrame =
+      classified.filter(col("action") === "error").select("raw")
+
+    /** The post-merge rows of the buckets `t` rewrites: the sink's input
+      * (`raw`, `b`). A duplicate-key group keeps its first row only. */
+    def rows(t: Tally): DataFrame =
+      classified.filter(col("action") =!= "error" && first &&
+          col("__b").isInCollection(t.rewrite.keySet))
+        .select(col("raw"), col("__b").as("b"))
+
+    /** The stray files the target side reads: the sink deletes exactly
+      * these once their rows are rewritten into the layout. `targetFiles`
+      * are encoded URIs; the store takes plain path strings. */
+    def strays: Seq[String] =
+      targetFiles.filter(f => StrayFile.r.findFirstIn(f).isDefined)
+        .map(f => new HPath(java.net.URI.create(f)).toString)
+  }
+
+  /** A collected [[Plan.tally]]. `actions`: classified rows per action;
+    * `sourceCount`: source lines read; `mergedKeys`: distinct valid source
+    * keys; `expectedCount`/`expectedHash`: row count and
+    * `bit_xor(xxhash64(raw))` of the expected post-merge state (every
+    * non-error row, duplicate target keys NOT collapsed, so a duplicate-key
+    * target never verifies); `rewrite`: the buckets holding a changed,
+    * stray-file or duplicate-key row, each with the row count it keeps. */
+  final case class Tally(actions: Map[String, Long], sourceCount: Long,
+                         mergedKeys: Long, expectedCount: Long,
+                         expectedHash: Long, rewrite: Map[Long, Long])
+
+  object Tally {
+    def of(rows: Array[Row]): Tally = {
+      def n(r: Row, c: String): Long = r.getAs[Long](c)
+      val state = rows.filter(_.getAs[String]("action") != "error")
+      val rewrite = state.filter { r =>
+        Set("insert", "update")(r.getAs[String]("action")) ||
+          n(r, "stray") > 0 || n(r, "dup") > 0
+      }.map(n(_, "__b")).toSet
+      Tally(
+        rows.groupMapReduce(_.getAs[String]("action"))(n(_, "n"))(_ + _)
+          .withDefaultValue(0L),
+        rows.map(n(_, "src")).sum,
+        state.filter(_.getAs[String]("action") != "target").map(n(_, "kept")).sum,
+        state.map(n(_, "n")).sum,
+        state.map(n(_, "h")).foldLeft(0L)(_ ^ _),
+        state.filter(r => rewrite(n(r, "__b")))
+          .groupMapReduce(n(_, "__b"))(n(_, "kept"))(_ + _))
+    }
+  }
 
   /** Key a raw-lines source once ([[RawMerge.srcKeyed]]); `fileCol`, when
     * the caller has one, rides along for the duplicate rule. */
@@ -78,18 +151,23 @@ object ContainerMerge {
     *  2. duplicate merge keys collapse to ONE row: the lexicographically
     *     last source file (when the caller has a file column), then the
     *     highest content hash, then the bytes — deterministic under replay;
-    *  3. the rows classify against the target side: with `prune` only the
-    *     buckets their keys hash to ([[FileAccount.readRawBucketsFor]], the
-    *     point-read of migration.py:119-122), else the whole container.
-    *     `fullOuter` adds the target-only rows an expected-state check
-    *     needs; the left-outer join is the one AQE can broadcast and split;
-    *  4. inserts/updates are the changed rows, masked when `sanitize`. */
+    *  3. the rows classify against the target side in one full-outer join:
+    *     with `prune` only the buckets their keys hash to
+    *     ([[FileAccount.readRawBucketsFor]], the point-read of
+    *     migration.py:119-122), else the whole container. The target rows
+    *     of every bucket read ride along, so the sink rewrites a bucket
+    *     from this frame alone;
+    *  4. target rows rank within their merge key (content hash, then
+    *     bytes): a duplicate-key group, which Cosmos could never hold, keeps
+    *     its first row when its bucket is rewritten;
+    *  5. inserts/updates carry the write form, masked when `sanitize`. */
   def plan(s: SparkSession, target: FileAccount, db: String, container: String,
            keyed: DataFrame, pkPaths: Seq[String], fileCol: Option[String],
-           prune: Boolean, fullOuter: Boolean, sanitize: Boolean): Plan = {
+           prune: Boolean, sanitize: Boolean): Plan = {
     val keys = RawMerge.keyCols(pkPaths)
+    val tkeys = RawMerge.tgtKeyCols(pkPaths)
     val valid = RawMerge.validCol(pkPaths)
-    // the window's key shuffle and sort are the ones the join needs anyway
+    // the windows' key shuffles and sorts are the ones the join needs anyway
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy((fileCol.toSeq :+ "__ch" :+ "__w").map(col(_).desc): _*)
     val one = keyed.filter(valid)
@@ -106,49 +184,53 @@ object ContainerMerge {
           keyed.filter(valid).select(keys.map(col): _*), keys)
         (df, Some(buckets))
       } else (target.readRaw(s, db, container), None)
-    val classified = RawMerge.classifyKeyed(one, invalid, tgt, pkPaths,
-      if (fullOuter) "full_outer" else "left_outer", carry = Seq("__n"))
-    val changed = classified.filter(col("action").isin("insert", "update"))
-      .select(((if (sanitize) expr("mask_json(raw)") else col("raw")).as("raw") +:
-        keys.map(col)): _*)
-    Plan(classified, changed, pruned,
-      if (pruned.isDefined) tgt.inputFiles.toSeq else Nil)
+    val tw = Window.partitionBy(tkeys.map(col): _*)
+      .orderBy(col("__t_ch"), col("__t_raw"))
+    val tgtK = RawMerge.tgtKeyed(
+        tgt.withColumn("__t_stray", input_file_name().rlike(StrayFile)),
+        pkPaths, carry = Seq("__t_stray"))
+      // a stored row with a missing key part is no duplicate of anything
+      .withColumn("__t_rn", when(tkeys.map(col(_).isNotNull).reduce(_ && _),
+        row_number().over(tw)).otherwise(lit(1)))
+    val joined = RawMerge.classifyKeyed(one, invalid, tgtK, pkPaths,
+      "full_outer", carry = Seq("__n"), tgtCarry = Seq("__t_stray", "__t_rn"))
+    val masked =
+      if (!sanitize) joined
+      else joined.withColumn("raw", when(col("action").isin("insert", "update"),
+        expr("mask_json(raw)")).otherwise(col("raw")))
+    val classified = masked.withColumn("__b", target.bucketCol(keys,
+      target.containerProperties(db, container).buckets))
+    Plan(classified, pruned, tgt.inputFiles.toSeq)
   }
 
   /** A13 dead-letter: append invalid lines to the container's `_errors`. */
   private def deadLetter(account: FileAccount, db: String, container: String,
-                         keyed: DataFrame, pkPaths: Seq[String]): Unit =
-    keyed.filter(!RawMerge.validCol(pkPaths)).select("raw")
-      .write.mode("append").text(account.errorsPath(db, container))
+                         lines: DataFrame): Unit =
+    lines.write.mode("append").text(account.errorsPath(db, container))
 
   /** Merge a raw-lines frame (a `raw` string column, plus `fileCol` when
     * the caller has one) into the container through [[plan]] → upsert,
     * against the pruned target: the SQL batch and streaming commits and
-    * [[graft.streaming.Streams.syncContainers]]. The counters come from ONE
-    * aggregation over the keyed source. Returns them with the buckets the
-    * upsert REWROTE, and the plan with the target side it READ. */
+    * [[graft.streaming.Streams.syncContainers]]. The counters come from the
+    * plan's [[Plan.tally]], the same collect that sizes the sink. Returns
+    * them with the buckets the upsert REWROTE, and the plan with the target
+    * side it READ. */
   def mergeRaw(s: SparkSession, account: FileAccount, db: String,
                container: String, src: DataFrame,
                fileCol: Option[String] = None,
                sanitize: Boolean = false): (Stats, Plan) = {
     val pkPaths = account.containerProperties(db, container).pkPaths
-    val keys = RawMerge.keyCols(pkPaths)
-    val keyed = key(s, src, pkPaths, fileCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = plan(s, account, db, container, key(s, src, pkPaths, fileCol),
+      pkPaths, fileCol, prune = true, sanitize = sanitize)
+    p.classified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val valid = RawMerge.validCol(pkPaths)
-      val stats = keyed.agg(
-        count(lit(1)).as("n"),
-        count(when(!valid, lit(1))).as("e"),
-        count_distinct(when(valid, struct(keys.map(col): _*))).as("m")).head()
-      val (srcRows, errorRows, mergedKeys) =
-        (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-      if (errorRows > 0) deadLetter(account, db, container, keyed, pkPaths)
-      val p = plan(s, account, db, container, keyed, pkPaths, fileCol,
-        prune = true, fullOuter = false, sanitize = sanitize)
-      val rewritten = account.upsertRaw(s, db, container, p.changed, keys, pkPaths)
-      (Stats(srcRows, mergedKeys, errorRows, rewritten), p)
-    } finally { keyed.unpersist(); () }
+      val t = Tally.of(p.tally.collect())
+      val errorRows = t.actions("error")
+      if (errorRows > 0) deadLetter(account, db, container, p.errors)
+      val rewritten = account.upsertRaw(s, db, container, p.rows(t), t.rewrite,
+        p.strays)
+      (Stats(t.sourceCount, t.mergedKeys, errorRows, rewritten), p)
+    } finally { p.classified.unpersist(); () }
   }
 
   /** Commit of a group-based row-level rewrite (MERGE INTO / UPDATE /
@@ -174,7 +256,7 @@ object ContainerMerge {
     try {
       val valid = RawMerge.validCol(pkPaths)
       if (!keyed.filter(!valid).isEmpty)
-        deadLetter(account, db, container, keyed, pkPaths)
+        deadLetter(account, db, container, keyed.filter(!valid).select("raw"))
       // write form + layout bucket; materialized BEFORE the group delete
       // (the lineage reads staged files, not container files, but the
       // checkpoint keeps the commit window's reads bounded regardless)

@@ -39,7 +39,7 @@ object RawMerge {
     "__id" +: pkPaths.indices.map(i => s"__pk$i")
 
   /** The target side's names for [[keyCols]] (`__t_id`, `__t_pk<i>`). */
-  private def tgtKeyCols(pkPaths: Seq[String]): Seq[String] =
+  private[graft] def tgtKeyCols(pkPaths: Seq[String]): Seq[String] =
     keyCols(pkPaths).map(k => "__t_" + k.drop(2))
 
   /** `json_doc_keys` over `doc`: `raw` + `carry` + `__w` (with `inject`)
@@ -83,11 +83,12 @@ object RawMerge {
     * branch: a skipped document's bytes are the TARGET's, which the
     * reference leaves untouched, migration.py:124-130). No injection — the
     * target is compared exactly as stored, like the reference's read-back
-    * document. */
-  private def tgtKeyed(tgt: DataFrame, pkPaths: Seq[String]): DataFrame =
-    storedKeyed(tgt, pkPaths)
-      .select(col("raw").as("__t_raw") +: keyCols(pkPaths).zip(tgtKeyCols(pkPaths))
-        .map { case (k, t) => col(k).as(t) }: _*)
+    * document. `carry` columns of `tgt` pass through unchanged. */
+  private[graft] def tgtKeyed(tgt: DataFrame, pkPaths: Seq[String],
+                              carry: Seq[String] = Nil): DataFrame =
+    storedKeyed(tgt, pkPaths, carry)
+      .select((col("raw").as("__t_raw") +: keyCols(pkPaths).zip(tgtKeyCols(pkPaths))
+        .map { case (k, t) => col(k).as(t) }) ++ carry.map(col): _*)
       .withColumn("__t_ch", expr("md5(canonical_json(__t_raw))"))
 
   /** Valid document predicate (migration.py:92-109): parseable, id present
@@ -97,7 +98,8 @@ object RawMerge {
       .reduce(_ && _)
 
   /** The one classification body. `valid` rows of a [[srcKeyed]] frame join
-    * the keyed target on the merge key; `invalid` rows become `error` rows.
+    * the [[tgtKeyed]] target `tgtK` on the merge key; `invalid` rows become
+    * `error` rows.
     * A left-outer join classifies the source rows alone; a full-outer join
     * adds the target-only complement as `action = 'target'`. Actions follow
     * the reference's branch order (migration.py:92-146): error → insert →
@@ -108,11 +110,12 @@ object RawMerge {
     * ORIGINAL bytes (the reference never rewrites an unchanged document),
     * error rows the source's original bytes (dead-letter form). Output:
     * `raw` + [[keyCols]] + `carry` (columns of both `valid` and `invalid`)
-    * + `action`. */
+    * + `tgtCarry` (columns of `tgtK`, null on error rows) + `action`. */
   private[graft] def classifyKeyed(valid: DataFrame, invalid: DataFrame,
-                                   tgt: DataFrame, pkPaths: Seq[String],
+                                   tgtK: DataFrame, pkPaths: Seq[String],
                                    joinType: String,
-                                   carry: Seq[String] = Nil): DataFrame = {
+                                   carry: Seq[String] = Nil,
+                                   tgtCarry: Seq[String] = Nil): DataFrame = {
     val keys = keyCols(pkPaths)
     val tkeys = tgtKeyCols(pkPaths)
     val action =
@@ -124,15 +127,16 @@ object RawMerge {
       when(col("action").isin("insert", "update"), col("__w"))
         .otherwise(col("__t_raw"))
     val classified = valid
-      .join(tgtKeyed(tgt, pkPaths),
+      .join(tgtK,
         keys.zip(tkeys).map { case (k, t) => col(k) === col(t) }.reduce(_ && _),
         joinType)
       .withColumn("action", action)
       .select((raw.as("raw") +:
         keys.zip(tkeys).map { case (k, t) => coalesce(col(k), col(t)).as(k) }) ++
-        carry.map(col) :+ col("action"): _*)
+        (carry ++ tgtCarry).map(col) :+ col("action"): _*)
     val errors = invalid
-      .select((col("raw") +: keys.map(col)) ++ carry.map(col) :+
+      .select((col("raw") +: keys.map(col)) ++ carry.map(col) ++
+        tgtCarry.map(c => lit(null).cast(tgtK.schema(c).dataType).as(c)) :+
         lit("error").as("action"): _*)
     classified.unionAll(errors)
   }
@@ -141,7 +145,8 @@ object RawMerge {
                            pkPaths: Seq[String], joinType: String): DataFrame = {
     val sk = srcKeyed(s, src, pkPaths)
     val valid = validCol(pkPaths)
-    classifyKeyed(sk.filter(valid), sk.filter(!valid), tgt, pkPaths, joinType)
+    classifyKeyed(sk.filter(valid), sk.filter(!valid), tgtKeyed(tgt, pkPaths),
+      pkPaths, joinType)
   }
 
   /** Per-document action classification of raw `src` against raw `tgt` (both
@@ -151,12 +156,11 @@ object RawMerge {
                pkPaths: Seq[String]): DataFrame =
     classifyWith(s, src, tgt, pkPaths, "left_outer")
 
-  /** Full-outer classification — ONE src⋈tgt shuffle that yields everything
-    * an orchestrated merge needs: every source row classified exactly as
-    * [[classify]] does, PLUS the target-only complement as `action =
-    * 'target'`. Counters, the changed-row sink input, and the expected
-    * post-merge state (verification) all derive from this single frame, so
-    * the orchestrator never runs a second merge join. */
+  /** Full-outer classification — ONE src⋈tgt shuffle: every source row
+    * classified exactly as [[classify]] does, PLUS the target-only
+    * complement as `action = 'target'`, so counters and the expected
+    * post-merge state ([[mergedStateOf]]) derive from this single frame.
+    * [[graft.core.ContainerMerge.plan]] runs the same join body. */
   def classifyAll(s: SparkSession, src: DataFrame, tgt: DataFrame,
                   pkPaths: Seq[String]): DataFrame =
     classifyWith(s, src, tgt, pkPaths, "full_outer")

@@ -298,6 +298,91 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("two identical copies of one target document never verify silently") {
+    // both copies classify as skip; the run must still collapse them and
+    // report verified=false, and the rerun verifies with one copy left
+    val src = newAccount("cat-dupcopy-src")
+    seedContainer(src, "db", "c", Seq("/pk"), Seq(
+      """{"id":"k1","pk":"p","v":1}""",
+      """{"id":"k2","pk":"p","v":2}"""))
+    for (mode <- Seq(Some(false), Some(true))) {
+      val tgt = newAccount(s"cat-dupcopy-tgt-$mode")
+      assert(migrate(spark, src, tgt).ok)
+      val k1File = Files.walk(Paths.get(tgt.root, "db", "c", "data")).iterator().asScala
+        .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.startsWith("."))
+        .find(f => Files.readString(f).contains("\"id\":\"k1\"")).get
+      // an external writer lands a second, identical copy in k1's bucket dir
+      Files.writeString(k1File.resolveSibling("zz-copy.txt"),
+        """{"id":"k1","pk":"p","v":1}""" + "\n")
+      val r = migrate(spark, src, tgt, Config(incremental = mode)).results.head
+      assert(r.skipped >= 2 && r.inserted == 0 && !r.verified,
+        s"two copies of one key must not verify (incremental=$mode): $r")
+      val healed = migrate(spark, src, tgt, Config(incremental = mode)).results.head
+      assert(healed.verified && healed.targetCount == 2,
+        s"the rerun must verify clean (incremental=$mode): $healed")
+      val k1 = tgt.readRaw(spark, "db", "c").collect().map(_.getString(0))
+        .filter(_.contains("\"id\":\"k1\""))
+      assert(k1.toSeq == Seq("""{"id":"k1","pk":"p","v":1}"""),
+        s"one copy must be left (incremental=$mode): ${k1.toSeq}")
+    }
+  }
+
+  /** Call sites (long form) of every Spark job `body` starts: the SQL
+    * execution's site when the job belongs to one, plus its stages'. */
+  private def jobSites(body: => Unit): Seq[String] = {
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execSite.put(s.executionId, s.details)
+          case _ =>
+        }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val exec = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(x => Option(execSite.get(x.toLong)))
+        sites.add((exec.toSeq ++ e.stageInfos.map(_.details)).mkString("\n"))
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    def settle(): Unit = {
+      var prev = -1; var i = 0
+      while (prev != sites.size && i < 50) { prev = sites.size; Thread.sleep(200); i += 1 }
+    }
+    try { settle(); sites.clear(); body; settle(); sites.asScala.toSeq }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("an all-skip rerun starts no sink job and writes nothing") {
+    val src = freshSource()
+    for (mode <- Seq(Some(false), Some(true))) {
+      val tgt = newAccount(s"cat-rerun-$mode")
+      assert(migrate(spark, src, tgt).ok)
+      val data = Paths.get(tgt.root, "hr", "employees", "data")
+      def listing(): Map[String, (Long, Long)] =
+        Files.walk(data).iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => data.relativize(f).toString ->
+            (Files.size(f), Files.getLastModifiedTime(f).toMillis)).toMap
+      val before = listing()
+      var r: Orchestrator.ContainerResult = null
+      val sites = jobSites {
+        r = migrate(spark, src, tgt, Config(scopeDatabase = Some("hr"),
+          scopeContainer = Some("employees"), incremental = mode)).results.head
+      }
+      assert(r.verified && r.skipped == 3 && r.inserted + r.updated == 0, r.toString)
+      assert(sites.exists(_.contains("migrateContainer")),
+        s"the listener must see the run's jobs: $sites")
+      assert(!sites.exists(_.contains("upsertRaw")),
+        s"an all-skip rerun must start no sink job (incremental=$mode)")
+      assert(listing() == before, s"an all-skip rerun must write nothing (incremental=$mode)")
+    }
+    // the listener does see sink jobs when there is something to write
+    val tgt = newAccount("cat-rerun-write")
+    assert(jobSites(assert(migrate(spark, src, tgt).ok)).exists(_.contains("upsertRaw")))
+  }
+
   test("duplicate merge keys in the source merge ONE document, from the last file") {
     // two lines for one (id, pk) in two source files: Cosmos could never
     // hold both, so the merge keeps the lexicographically last file's line
