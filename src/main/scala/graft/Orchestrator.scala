@@ -126,18 +126,26 @@ object Orchestrator {
       .withColumn("__f", input_file_name()), pkPaths, Some("__f"))
     val plan = ContainerMerge.plan(spark, target, db, container, keyed,
       pkPaths, Some("__f"), prune = incremental, sanitize = cfg.sanitize)
-    val classified = plan.classified.cache()
+    plan.classified.cache()
     // one collect: counters, source count, expected state, rewrite set and
-    // its sidecar counts
-    val tally = ContainerMerge.Tally.of(plan.tally.collect())
-    val counts = tally.actions
+    // its sidecar counts; the frame is released however the span ends
+    val tally = try {
+      val t = ContainerMerge.Tally.of(plan.tally.collect())
+      val errors = t.actions("error")
 
-    // A13 dead-letter: corrupt/invalid documents land next to the data, and
-    // the run aborts only past the configured bound
-    if (counts("error") > 0)
-      plan.errors.write.mode("overwrite").text(target.errorsPath(db, container))
-    require(counts("error") <= cfg.maxErrors,
-      s"$db/$container: ${counts("error")} error documents exceed maxErrors=${cfg.maxErrors}")
+      // A13 dead-letter: corrupt/invalid documents land next to the data,
+      // and the run aborts only past the configured bound
+      if (errors > 0)
+        plan.errors.write.mode("overwrite").text(target.errorsPath(db, container))
+      require(errors <= cfg.maxErrors,
+        s"$db/$container: $errors error documents exceed maxErrors=${cfg.maxErrors}")
+
+      // A11/A12: only buckets with an insert, an update, a stray or a
+      // duplicate key are rewritten (write elision for skips)
+      target.upsertRaw(spark, db, container, plan.rows(t), t.rewrite, plan.strays)
+      t
+    } finally { plan.classified.unpersist(); () }
+    val counts = tally.actions
 
     // A15 + B5 fix: count parity and content-hash parity of what landed vs
     // the intended merged state (byte-level: the raw lines themselves). The
@@ -150,12 +158,6 @@ object Orchestrator {
         .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-
-    // A11/A12: only buckets with an insert, an update, a stray or a
-    // duplicate key are rewritten (write elision for skips)
-    target.upsertRaw(spark, db, container, plan.rows(tally), tally.rewrite,
-      plan.strays)
-    classified.unpersist()
 
     val (verified, targetCount, verifyMode) = plan.pruned match {
       case Some(buckets) =>

@@ -180,62 +180,44 @@ case class FileAccount(root: String) {
     * actually contain a matching key, the delete analogue of the
     * incremental upsert. Buckets a key hashes to but does not match in are
     * left byte-for-byte untouched (deleting an absent key is a no-op, not
-    * a rewrite). Stray files are scanned (they can hold any key) and, when
+    * a rewrite). Stray files are read (they can hold any key) and, when
     * a rewrite happens, absorbed into the layout like the upsert does.
     * `keys` is driver-bounded (it arrives from SQL IN-lists / equality
-    * literals). Returns the number of deleted documents. */
+    * literals). Shape: the key buckets (+ strays) read once, one per-bucket
+    * tally, the [[rewriteBuckets]] commit. Returns the number of deleted
+    * documents. */
   def deleteByMergeKeys(spark: SparkSession, db: String, container: String,
                         keys: Seq[String]): Long = {
     GraftFunctions.register(spark)
     if (keys.isEmpty || !hasData(db, container)) return 0L
     val props = containerProperties(db, container)
-    val pkPaths = props.pkPaths
-    val nb = props.buckets
     val keySet = keys.toSet
-    val keyBuckets: Set[Long] =
-      keySet.map(k => ContainerBuckets.bucketOf(k, nb))
-    val strays = strayFiles(db, container)
-
-    def keyed(paths: Seq[String]): DataFrame =
-      keyedRows(spark.read.option("recursiveFileLookup", "true")
-          .text(paths: _*).select(col("value").as("raw")), pkPaths, nb)
-        .withColumn("__k", concat_ws("", RawMerge.keyCols(pkPaths).map(col): _*))
-
-    val candidateDirs = keyBuckets.toSeq.sorted
-      .map(bucketDir(db, container, _)).filter(store.isDirectory(_))
-    if (candidateDirs.isEmpty && strays.isEmpty) return 0L
-    val cand = keyed(candidateDirs ++ strays)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val isMatch = col("__k").isInCollection(keySet)
-      // buckets that actually lose a row (bounded collect, <= nb)
-      val matchedBuckets: Set[Long] = cand.filter(isMatch)
-        .select("__b").distinct().collect().map(_.getLong(0)).toSet
-      if (matchedBuckets.isEmpty) return 0L
-      // rewrite set: matched buckets + (when rewriting anyway) the buckets
-      // stray rows hash to, so strays are absorbed exactly like upsertRaw
-      val strayBuckets: Set[Long] =
-        if (strays.isEmpty) Set.empty
-        else keyed(strays).select("__b").distinct()
-          .collect().map(_.getLong(0)).toSet
-      val rewrite = matchedBuckets ++ strayBuckets
-      val extraDirs = (rewrite -- keyBuckets).toSeq.sorted
-        .map(bucketDir(db, container, _)).filter(store.isDirectory(_))
-      val all =
-        if (extraDirs.isEmpty) cand
-        else cand.unionAll(keyed(extraDirs))
-      val scoped = all.filter(col("__b").isInCollection(rewrite))
-      val survivors = scoped.filter(!isMatch)
-      val deleted = scoped.filter(isMatch).count()
-      // truncate lineage before the dynamic overwrite swaps the very files
-      // the plan reads
-      val out = survivors.select(col("raw"), col("__b").as("b")).localCheckpoint()
-      val outCounts: Map[Long, Long] = out.groupBy("b").count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      rewriteBuckets(db, container, out,
-        rewrite.map(b => b -> outCounts.getOrElse(b, 0L)).toMap, strays)
-      deleted
-    } finally { cand.unpersist(); () }
+    val (read, _, strays) = readWithStrays(spark, db, container, props,
+      keySet.map(ContainerBuckets.bucketOf(_, props.buckets)))
+    read.fold(0L) { df =>
+      val rows = RawMerge.storedKeyed(df, props.pkPaths, carry = Seq("__b", "__stray"))
+        .withColumn("__del", concat_ws("", RawMerge.keyCols(props.pkPaths).map(col): _*)
+          .isInCollection(keySet))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // per bucket: rows deleted, rows kept, stray rows
+        val tally = rows.groupBy("__b").agg(count(when(col("__del"), lit(1))),
+            count(when(!col("__del"), lit(1))), count(when(col("__stray"), lit(1))))
+          .collect()
+        val deleted = tally.map(_.getLong(1)).sum
+        // rewrite set: the buckets that lose a row + (when rewriting anyway)
+        // the buckets stray rows key to, so strays are absorbed like upsertRaw
+        if (deleted > 0L) {
+          val rewrite = tally.filter(r => r.getLong(1) > 0L || r.getLong(3) > 0L)
+            .map(r => r.getLong(0) -> r.getLong(2)).toMap
+          rewriteBuckets(db, container,
+            rows.filter(!col("__del") && col("__b").isInCollection(rewrite.keySet))
+              .select(col("raw"), col("__b").as("b")),
+            rewrite, strays)
+        }
+        deleted
+      } finally { rows.unpersist(); () }
+    }
   }
 
   /** Total bytes under the container's data tree — driver-side file
@@ -255,25 +237,23 @@ case class FileAccount(root: String) {
     * is incremental and idempotent like the upsert it cleans up after.
     *
     * Selection is pure driver metadata (the bucket listing). The rewrite
-    * reads ONLY the selected buckets (+ strays), splits each bucket's rows
-    * into its target file count (hash of the raw line — size-balanced,
-    * content-independent of arrival order), checkpoints them (the write
-    * replaces the very files they were read from) and commits through the
-    * bucket-rewrite tail every rewrite shares ([[rewriteBuckets]]). Rows
-    * are never parsed (a stored row's bucket is its directory), except
-    * strays, which are keyed to find the bucket they belong in. Returns (compacted bucket ids, files before,
-    * files after, bytes rewritten, strays absorbed). */
+    * reads ONLY the selected buckets (+ strays and the buckets they key
+    * to) once, tallies each bucket's rows and landed bytes, splits each
+    * bucket's rows into the file count its bytes call for (hash of the raw
+    * line — size-balanced, content-independent of arrival order) and
+    * commits through the bucket-rewrite tail every rewrite shares
+    * ([[rewriteBuckets]]). Rows are never parsed (a stored row's bucket is
+    * its directory), except strays. Returns (compacted bucket ids, files
+    * before, files after, bytes rewritten, strays absorbed). */
   def compactContainer(spark: SparkSession, db: String, container: String,
                        targetBytes: Long = 128L << 20,
                        only: Option[Set[Long]] = None,
                        fileThreshold: Int = 1): CompactionStats = {
     GraftFunctions.register(spark)
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    if (!hasData(db, container))
-      return CompactionStats(Set.empty, 0L, 0L, 0L, 0L)
+    val noop = CompactionStats(Set.empty, 0L, 0L, 0L, 0L)
+    if (!hasData(db, container)) return noop
     val props = containerProperties(db, container)
-    val nb = props.buckets
-    val strays = strayFiles(db, container)
 
     def dataFiles(dir: String): Seq[FileMeta] =
       store.walk(dir).filterNot { f =>
@@ -283,82 +263,48 @@ case class FileAccount(root: String) {
     def targetFileCount(bytes: Long): Long =
       math.max(1L, (bytes + targetBytes - 1L) / targetBytes)
 
-    // strays can hold any key: key them to find the buckets they belong in
-    // (those buckets join the rewrite set so absorption is a real merge,
-    // not a blind append next to existing files)
-    val strayRows =
-      if (strays.isEmpty) None
-      else Some(keyedRows(spark.read.text(strays: _*)
-          .select(col("value").as("raw")), props.pkPaths, nb)
-        .select(col("raw"), col("__b")))
-    val strayBuckets: Set[Long] = strayRows.fold(Set.empty[Long])(
-      _.select("__b").distinct().collect().map(_.getLong(0)).toSet)
-
     // `only` bounds the METADATA walk too (the auto-compaction hook passes
     // the upsert's affected buckets, keeping per-write upkeep O(affected)
-    // rather than O(container)) — but a stray's bucket ALWAYS enters the
-    // listing: it joins the rewrite set below, and rewriting a bucket
-    // whose existing files were never read would drop its rows
-    val listing: Map[Long, (String, Seq[FileMeta])] =
-      bucketDirList(db, container)
-        .filter { case (b, _) =>
-          only.forall(_.contains(b)) || strayBuckets.contains(b) }
-        .map { case (b, dir) => b -> (dir, dataFiles(dir)) }.toMap
+    // rather than O(container)); the buckets strays key to join the
+    // rewrite set through the read below whatever `only` says
+    val listing: Map[Long, Seq[FileMeta]] = bucketDirList(db, container)
+      .filter { case (b, _) => only.forall(_.contains(b)) }
+      .map { case (b, dir) => b -> dataFiles(dir) }.toMap
     val oversubscribed: Set[Long] = listing.collect {
-      case (b, (_, fs)) if fs.nonEmpty && fs.size >
+      case (b, fs) if fs.nonEmpty && fs.size >
           math.max(targetFileCount(fs.map(_.size).sum), fileThreshold.toLong) => b
     }.toSet
-    if (oversubscribed.isEmpty && strays.isEmpty)
-      return CompactionStats(Set.empty, 0L, 0L, 0L, 0L)
-    val rewrite: Set[Long] = oversubscribed ++ strayBuckets
+    val (read, rewrite, strays) =
+      readWithStrays(spark, db, container, props, oversubscribed)
+    if (read.isEmpty) return noop
+    val filesBefore = rewrite.toSeq.map(b =>
+      listing.getOrElse(b, dataFiles(bucketDir(db, container, b))))
+    val strayBytes = strays.flatMap(store.fileMeta).map(_.size).sum
 
-    // bucketed rows need no parsing: the directory IS the bucket
-    val readDirs = rewrite.toSeq.sorted
-      .flatMap(b => listing.get(b).filter(_._2.nonEmpty).map(_._1))
-    val bucketRows =
-      if (readDirs.isEmpty) None
-      else Some(spark.read.option("recursiveFileLookup", "true")
-        .text(readDirs: _*)
-        .select(col("value").as("raw"),
-          regexp_extract(input_file_name(), "/b=(\\d+)/", 1)
-            .cast("long").as("__b")))
-
-    // per-bucket slice counts off the metadata listing (stray bytes fold
-    // into whichever bucket they key to — approximation is fine, the next
-    // compaction pass sees the true sizes). Shipped as a BROADCAST frame,
-    // not a plan literal: a full-container compaction of a many-bucket
-    // layout would otherwise embed an O(buckets) map in every task's
-    // expression tree
-    val sliceOf: Map[Long, Long] = rewrite.iterator.map { b =>
-      b -> targetFileCount(
-        listing.get(b).fold(0L)(_._2.map(_.size).sum) +
-          (if (strayBuckets(b)) strays.flatMap(store.fileMeta).map(_.size).sum else 0L))
-    }.toMap
-    val totalSlices = math.max(1L, sliceOf.values.sum).toInt
-    import spark.implicits._
-    val sliceDf = sliceOf.toSeq.sorted.toDF("__b", "__nf")
-
-    val union = (bucketRows.toSeq ++ strayRows.toSeq).reduce(_ unionAll _)
-    // the plan reads the very files the overwrite below replaces — truncate
-    // lineage before swapping
-    val out = union
-      .join(broadcast(sliceDf), Seq("__b"))
-      .withColumn("__s", pmod(xxhash64(col("raw")), col("__nf")))
-      .repartition(totalSlices, col("__b"), col("__s"))
-      .select(col("raw"), col("__b").as("b"))
-      .localCheckpoint()
-    val outCounts: Map[Long, Long] = out.groupBy("b").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val filesBefore =
-      rewrite.toSeq.map(b => listing.get(b).fold(0)(_._2.size)).sum + strays.size
-    val bytes = rewrite.toSeq.map(b =>
-      listing.get(b).fold(0L)(_._2.map(_.size).sum)).sum +
-      strays.flatMap(store.fileMeta).map(_.size).sum
-    rewriteBuckets(db, container, out,
-      rewrite.map(b => b -> outCounts.getOrElse(b, 0L)).toMap, strays)
+    val rows = read.get.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // per bucket: rows, and bytes exactly as the text writer lands them
+      val tally: Map[Long, (Long, Long)] = rows.groupBy("__b")
+        .agg(count(lit(1)), sum(octet_length(col("raw")) + 1))
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      // per-bucket slice counts, shipped as a BROADCAST frame, not a plan
+      // literal: a full-container compaction of a many-bucket layout would
+      // otherwise embed an O(buckets) map in every task's expression tree
+      val sliceOf = tally.map { case (b, (_, bytes)) => b -> targetFileCount(bytes) }
+      import spark.implicits._
+      val out = rows
+        .join(broadcast(sliceOf.toSeq.sorted.toDF("__b", "__nf")), Seq("__b"))
+        .withColumn("__s", pmod(xxhash64(col("raw")), col("__nf")))
+        .repartition(math.max(1L, sliceOf.values.sum).toInt, col("__b"), col("__s"))
+        .select(col("raw"), col("__b").as("b"))
+      rewriteBuckets(db, container, out,
+        rewrite.map(b => b -> tally.get(b).fold(0L)(_._1)).toMap, strays)
+    } finally { rows.unpersist(); () }
     val filesAfter = rewrite.toSeq.sorted
       .map(b => dataFiles(bucketDir(db, container, b)).size).sum
-    CompactionStats(rewrite, filesBefore, filesAfter, bytes, strays.size.toLong)
+    CompactionStats(rewrite, filesBefore.map(_.size).sum + strays.size.toLong,
+      filesAfter, filesBefore.flatten.map(_.size).sum + strayBytes,
+      strays.size.toLong)
   }
 
   /** Re-bucket a container: rewrite the WHOLE data tree into a new
@@ -813,11 +759,6 @@ case class FileAccount(root: String) {
         s"""{"b": $b, "n": $n, "sig": "$sig"}"""
       }.mkString("{\"buckets\": [\n  ", ",\n  ", "\n]}\n"))
 
-  /** Container row count in O(metadata + unvouched buckets): buckets whose
-    * current listing signature matches the sidecar contribute their recorded
-    * count for free; buckets the sidecar can't vouch for (external writes,
-    * missing sidecar) are scanned — and only those — plus any stray files.
-    * Self-healing: recounted buckets are written back to the sidecar. */
   /** Exact container row count from DRIVER METADATA ALONE — Some(n) iff
     * every bucket directory's current listing signature matches its count
     * sidecar entry and no stray out-of-layout files exist; None the moment
@@ -836,6 +777,11 @@ case class FileAccount(root: String) {
     else None
   }
 
+  /** Container row count in O(metadata + unvouched buckets): buckets whose
+    * current listing signature matches the sidecar contribute their recorded
+    * count for free; buckets the sidecar can't vouch for (external writes,
+    * missing sidecar) are scanned — and only those — plus any stray files.
+    * Self-healing: recounted buckets are written back to the sidecar. */
   def countRows(spark: SparkSession, db: String, container: String): Long = {
     val sidecar = readBucketCounts(db, container)
     val dirs = bucketDirList(db, container)
@@ -1036,18 +982,43 @@ case class FileAccount(root: String) {
                         keys: DataFrame, keyCols: Seq[String]): (DataFrame, Set[Long]) = {
     GraftFunctions.register(spark)
     val props = containerProperties(db, container)
-    val nb = props.buckets
     val srcBuckets: Set[Long] = keys
-      .select(bucketCol(keyCols, nb).as("__b")).distinct()
+      .select(bucketCol(keyCols, props.buckets).as("__b")).distinct()
       .collect().map(_.getLong(0)).toSet
+    val (read, affected, _) = readWithStrays(spark, db, container, props, srcBuckets)
+    (read.fold(spark.range(0).select(lit(null).cast("string").as("raw")))(
+      _.select("raw")), affected)
+  }
+
+  /** The one read behind every bucket rewrite and the pruned merge read:
+    * the `data/b=<k>` dirs of `buckets` plus every stray file, widened by
+    * the buckets the stray rows key to — a stray can hold any key, and a
+    * rewrite that absorbs it must read the bucket its rows land in. Rows:
+    * `raw`, `__b` (a bucketed row's directory, so stored rows are never
+    * parsed; a stray row's key bucket) and `__stray`. One bounded collect,
+    * only when strays exist. Returns (the rows, None when nothing is
+    * stored there; the buckets read; the strays read). */
+  private def readWithStrays(spark: SparkSession, db: String, container: String,
+                             props: ContainerProps, buckets: Set[Long])
+      : (Option[DataFrame], Set[Long], Seq[String]) = {
+    def lines(paths: Seq[String]): DataFrame =
+      spark.read.option("recursiveFileLookup", "true").text(paths: _*)
+        .select(col("value").as("raw"))
     val strays = strayFiles(db, container)
-    val strayBuckets: Set[Long] =
-      if (strays.isEmpty) Set.empty
-      else keyedRows(spark.read.text(strays: _*)
-          .select(col("value").as("raw")), props.pkPaths, nb)
-        .select("__b").distinct().collect().map(_.getLong(0)).toSet
-    val affected = srcBuckets ++ strayBuckets
-    (readRawBuckets(spark, db, container, affected), affected)
+    val strayRows =
+      if (strays.isEmpty) None
+      else Some(keyedRows(lines(strays), props.pkPaths, props.buckets)
+        .select(col("raw"), col("__b"), lit(true).as("__stray")))
+    val all = buckets ++ strayRows.fold(Set.empty[Long])(
+      _.select("__b").distinct().collect().map(_.getLong(0)).toSet)
+    val dirs = all.toSeq.sorted.map(bucketDir(db, container, _))
+      .filter(store.isDirectory(_))
+    val bucketRows =
+      if (dirs.isEmpty) None
+      else Some(lines(dirs).select(col("raw"),
+        regexp_extract(input_file_name(), "/b=(\\d+)/", 1).cast("long").as("__b"),
+        lit(false).as("__stray")))
+    ((bucketRows ++ strayRows).reduceOption(_ unionAll _), all, strays)
   }
 
   // ---- incremental upsert sink (A11/A12) ----
@@ -1125,7 +1096,15 @@ case class FileAccount(root: String) {
     * ended empty (the overwrite only replaces partitions PRESENT in the
     * output), delete the stray files whose rows `out` absorbed, and re-sign
     * the sidecar. `counts` holds every rewritten bucket with its row count
-    * in `out`. */
+    * in `out`.
+    *
+    * Commit safety: `out` may read the very bucket files the write
+    * replaces, and needs no lineage checkpoint, on one condition every
+    * caller keeps. The write is ONE job whose commit (the partition swap)
+    * follows every task, so a recomputed block of the caller's persisted
+    * input reads the files before the swap; `counts` (and any expected
+    * figure) were aggregated before the write; and nothing reads the input
+    * after the commit — the caller unpersists it then. */
   private def rewriteBuckets(db: String, container: String, out: DataFrame,
                              counts: Map[Long, Long],
                              strays: Seq[String]): Unit = {
@@ -1154,15 +1133,10 @@ case class FileAccount(root: String) {
     * [[rewriteBuckets]] tail; no re-read, no re-count. With nothing to
     * rewrite (an all-skip rerun) it returns before any Spark action. At
     * 100 TB with a 1% change rate and a well-chosen bucket count this
-    * rewrites ~1% of the container instead of 100%.
-    *
-    * Commit safety: `rows` reads the bucket files the write replaces, and
-    * needs no lineage checkpoint. The write is ONE job whose commit (the
-    * partition swap) follows every task, so a recomputed cache block reads
-    * the files before the swap; the expected state and `counts` were
-    * aggregated before the write; and nothing reads the merge's frame
-    * after the commit — the caller unpersists it then. Returns the bucket
-    * ids rewritten. */
+    * rewrites ~1% of the container instead of 100%. `rows` reads the
+    * bucket files the write replaces; the caller keeps the commit-safety
+    * condition [[rewriteBuckets]] states. Returns the bucket ids
+    * rewritten. */
   def upsertRaw(spark: SparkSession, db: String, container: String,
                 rows: DataFrame, counts: Map[Long, Long],
                 strays: Seq[String]): Set[Long] = {
@@ -1191,43 +1165,34 @@ case class FileAccount(root: String) {
     * no injection, no masking — replacing the stored rows with the same
     * merge key. For seeding and tooling; merges go through
     * [[ContainerMerge]] and the sink above. Reads the affected buckets'
-    * existing rows (plus strays), drops the replaced keys, checkpoints the
-    * result (the write replaces the files it was read from) and hands it to
-    * the sink. Returns the set of bucket ids rewritten. */
+    * stored rows (plus strays) once, drops the replaced keys, tallies the
+    * result per bucket and hands it to the sink. Returns the set of bucket
+    * ids rewritten. */
   def upsertRaw(spark: SparkSession, db: String, container: String,
                 changed: DataFrame, keyCols: Seq[String],
                 pkPaths: Seq[String]): Set[Long] = {
     GraftFunctions.register(spark)
     store.mkdirs(dataDir(db, container))
-    val nb = containerProperties(db, container).buckets
-    val chg = changed.withColumn("__b", bucketCol(keyCols, nb))
+    val props = containerProperties(db, container)
+    val chg = changed.withColumn("__b", bucketCol(keyCols, props.buckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val strays = strayFiles(db, container)
-      val strayRows =
-        if (strays.isEmpty) None
-        else Some(keyedRows(spark.read.text(strays: _*)
-          .select(col("value").as("raw")), pkPaths, nb))
-      // bounded collects: ≤ nb bucket ids (+ stray bucket ids)
-      val affected: Set[Long] =
-        chg.select("__b").distinct().collect().map(_.getLong(0)).toSet ++
-          strayRows.toSeq.flatMap(_.select("__b").distinct().collect().map(_.getLong(0)))
-      if (affected.isEmpty) return Set.empty
-      val existingDirs = affected.toSeq.sorted
-        .map(bucketDir(db, container, _)).filter(store.isDirectory(_))
-      val existingRows =
-        if (existingDirs.isEmpty) None
-        else Some(keyedRows(spark.read.option("recursiveFileLookup", "true")
-          .text(existingDirs: _*).select(col("value").as("raw")), pkPaths, nb))
-      val survivors = (existingRows.toSeq ++ strayRows.toSeq)
-        .map(_.join(chg.select(keyCols.map(col): _*), keyCols, "left_anti"))
-      val out = (survivors :+ chg).map(_.select(col("raw"), col("__b").as("b")))
-        .reduce(_ unionAll _)
-        .localCheckpoint()
-      val outCounts: Map[Long, Long] = out.groupBy("b").count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      upsertRaw(spark, db, container, out,
-        affected.map(b => b -> outCounts.getOrElse(b, 0L)).toMap, strays)
+      val (read, affected, strays) = readWithStrays(spark, db, container, props,
+        chg.select("__b").distinct().collect().map(_.getLong(0)).toSet)
+      if (affected.isEmpty) Set.empty
+      else {
+        val survivors = read.map(RawMerge.storedKeyed(_, pkPaths, carry = Seq("__b"))
+          .join(chg.select(keyCols.map(col): _*), keyCols, "left_anti"))
+        val rows = (survivors.toSeq :+ chg)
+          .map(_.select(col("raw"), col("__b").as("b"))).reduce(_ unionAll _)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val counts: Map[Long, Long] = rows.groupBy("b").count()
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          upsertRaw(spark, db, container, rows,
+            affected.map(b => b -> counts.getOrElse(b, 0L)).toMap, strays)
+        } finally { rows.unpersist(); () }
+      }
     } finally { chg.unpersist(); () }
   }
 }

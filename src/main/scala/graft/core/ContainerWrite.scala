@@ -245,32 +245,31 @@ object ContainerMerge {
     * Sidecar: replaced buckets get fresh (count, signature); a bucket that
     * was appended to without being read (not expected from Spark's
     * rewrite, but handled) only keeps a vouched entry when its prior count
-    * was vouched too. */
+    * was vouched too. The keyed rows read staged files, never container
+    * files, so the group delete cannot pull their input away. */
   def replaceGroups(s: SparkSession, account: FileAccount, db: String,
                     container: String, readFiles: Seq[String],
                     src: DataFrame): Unit = {
     val props = account.containerProperties(db, container)
     val pkPaths = props.pkPaths
+    // layout bucket of each replacement row; null for an invalid one
     val keyed = key(s, src, pkPaths)
+      .withColumn("b", when(RawMerge.validCol(pkPaths),
+        account.bucketCol(RawMerge.keyCols(pkPaths), props.buckets)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val valid = RawMerge.validCol(pkPaths)
-      if (!keyed.filter(!valid).isEmpty)
-        deadLetter(account, db, container, keyed.filter(!valid).select("raw"))
-      // write form + layout bucket; materialized BEFORE the group delete
-      // (the lineage reads staged files, not container files, but the
-      // checkpoint keeps the commit window's reads bounded regardless)
-      val out = keyed.filter(valid)
-        .withColumn("b", account.bucketCol(RawMerge.keyCols(pkPaths), props.buckets))
-        .select(col("__w").as("raw"), col("b"))
-        .localCheckpoint()
-      val outCounts: Map[Long, Long] = out.groupBy("b").count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // one tally: replacement rows per bucket, invalid rows under null
+      val tally = keyed.groupBy("b").count().collect()
+      if (tally.exists(_.isNullAt(0)))
+        deadLetter(account, db, container, keyed.filter(col("b").isNull).select("raw"))
+      val outCounts: Map[Long, Long] = tally.filterNot(_.isNullAt(0))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val prior = account.readBucketCounts(db, container)
         .map { case (b, (n, _)) => b -> n }
       val deleted = account.deleteGroups(db, container, readFiles)
       if (outCounts.nonEmpty)
-        out.write.partitionBy("b")
+        keyed.filter(col("b").isNotNull).select(col("__w").as("raw"), col("b"))
+          .write.partitionBy("b")
           .mode(org.apache.spark.sql.SaveMode.Append)
           .text(account.dataPath(db, container))
       val touched = deleted ++ outCounts.keySet

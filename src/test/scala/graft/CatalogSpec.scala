@@ -542,6 +542,19 @@ class CatalogSpec extends AnyFunSuite {
     assert(err.getMessage.contains("maxErrors"))
   }
 
+  test("a maxErrors abort releases the cached classified frame") {
+    val src = newAccount("cat-abort-src")
+    seedContainer(src, "db", "c", Seq("/id"), Seq(
+      """{"id":"ok1","v":1}""", """{"id":"bad", truncated""", "not json at all"))
+    val tgt = newAccount("cat-abort-tgt")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[IllegalArgumentException] {
+      migrate(spark, src, tgt, Config(maxErrors = 1))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      "an aborted container run must not leave its frame cached")
+  }
+
   test("summary JSON is written with per-container counters (A25)") {
     val src = freshSource()
     val tgt = newAccount("cat-tgt5")

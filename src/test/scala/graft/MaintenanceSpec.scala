@@ -98,6 +98,24 @@ class MaintenanceSpec extends AnyFunSuite {
       "buckets outside the rewrite set must stay byte-for-byte identical")
   }
 
+  test("compactContainer: a bucket that absorbs strays is sized by its own bytes, so a second pass rewrites nothing") {
+    val acc = newAccount("compact-stray-size")
+    acc.createDatabaseIfAbsent("db")
+    acc.createContainerIfAbsent("db", "c", ContainerProps(Seq("/id"), buckets = 2))
+    upsert(acc, "db", "c", (1 to 40).map(i => s"""{"id":"d$i","v":$i}"""), parts = 1)
+    // one stray file whose rows key to both buckets
+    val strays = (1 to 40).map(i => s"""{"id":"s$i","v":-$i,"pad":"${"x" * 24}"}""")
+    Files.writeString(Paths.get(acc.root, "db", "c", "data", "external.json"),
+      strays.mkString("", "\n", "\n"))
+    val first = acc.compactContainer(spark, "db", "c", targetBytes = 400L)
+    assert(first.straysAbsorbed == 1L && first.buckets == Set(0L, 1L), first.toString)
+    val again = acc.compactContainer(spark, "db", "c", targetBytes = 400L)
+    assert(again.buckets.isEmpty,
+      s"a compacted bucket must not read as oversubscribed, got $again")
+    assert(acc.countRows(spark, "db", "c") == 80)
+    assert(acc.metadataRowCount("db", "c").contains(80L))
+  }
+
   test("autocompact: repeated small upserts keep per-bucket file counts bounded") {
     val acc = newAccount("autocompact")
     spark.conf.set("spark.sql.catalog.grafta",

@@ -176,6 +176,108 @@ class StorageSpec extends AnyFunSuite {
       .filter(col("raw").contains("\"id\":\"x\"")).count() == 1)
   }
 
+  test("key delete with a stray present: an absent key is a no-op, a real delete absorbs the stray") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val (acct, local) = newAccount()
+    graft.functions.GraftFunctions.register(spark)
+    acct.createDatabaseIfAbsent("db")
+    acct.createContainerIfAbsent("db", "c",
+      ContainerProps(Seq("/id"), buckets = 4))
+    val pk = Seq("/id")
+    val keyCols = Seq("__id", "__pk0")
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      graft.operators.RawMerge.srcKeyed(spark, df, pk)
+        .select(("raw" +: keyCols).map(col): _*)
+    // the layout bucket of an /id-pk document: its merge key is id ++ id
+    def bucketOf(id: String): Long =
+      spark.range(1).select(pmod(xxhash64(lit(id + id)), lit(4L))).head().getLong(0)
+    val ids = (0 until 24).map(i => s"d$i")
+    acct.upsertRaw(spark, "db", "c",
+      keyed(ids.map(i => s"""{"id":"$i","v":1}""").toDF("raw")), keyCols, pk)
+    val victim = ids.head
+    val vb = bucketOf(victim)
+    // the stray's rows all key to one bucket other than the victim's
+    val sb = ids.map(bucketOf).find(_ != vb).get
+    val neighbours = ids.filter(bucketOf(_) == sb)
+    val strayIds = (0 until 200).map(i => s"s$i").filter(bucketOf(_) == sb).take(2)
+    val stray = local.resolve("db/c/data/external.txt")
+    Files.writeString(stray,
+      strayIds.map(i => s"""{"id":"$i","v":2}""").mkString("", "\n", "\n"))
+    val strayBytes = Files.readAllBytes(stray)
+    val sigs0 = acct.bucketSignatures("db", "c")
+
+    assert(acct.deleteByMergeKeys(spark, "db", "c", Seq("nopenope")) == 0L)
+    assert(acct.bucketSignatures("db", "c") == sigs0,
+      "deleting an absent key must not rewrite anything")
+    assert(java.util.Arrays.equals(Files.readAllBytes(stray), strayBytes),
+      "deleting an absent key must leave the stray as it was")
+
+    assert(acct.deleteByMergeKeys(spark, "db", "c", Seq(victim + victim)) == 1L)
+    assert(!Files.exists(stray), "a real delete absorbs the stray")
+    val sigs1 = acct.bucketSignatures("db", "c")
+    assert(sigs1.keySet.filter(b => sigs0.get(b) != sigs1.get(b)) == Set(vb, sb),
+      "exactly the victim's bucket and the stray's bucket rewrite")
+    val docs = acct.readRaw(spark, "db", "c").collect().map(_.getString(0))
+    (neighbours ++ strayIds).foreach { i =>
+      assert(docs.count(_.contains(s""""id":"$i"""")) == 1, s"$i must survive once")
+    }
+    assert(!docs.exists(_.contains(s""""id":"$victim"""")))
+    val lines = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(local.resolve("db/c/data")).iterator().asScala
+        .filter(p => Files.isRegularFile(p) &&
+          !p.getFileName.toString.startsWith("_") &&
+          !p.getFileName.toString.startsWith("."))
+        .map(p => Files.readAllLines(p).size.toLong).sum
+    }
+    assert(lines == 25L)
+    assert(acct.countRows(spark, "db", "c") == lines)
+    assert(acct.metadataRowCount("db", "c").contains(lines))
+  }
+
+  test("a stored line whose key does not parse keeps its bucket through a direct load and a key delete") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val (acct, local) = newAccount()
+    graft.functions.GraftFunctions.register(spark)
+    acct.createDatabaseIfAbsent("db")
+    acct.createContainerIfAbsent("db", "c",
+      ContainerProps(Seq("/id"), buckets = 4))
+    val pk = Seq("/id")
+    val keyCols = Seq("__id", "__pk0")
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      graft.operators.RawMerge.srcKeyed(spark, df, pk)
+        .select(("raw" +: keyCols).map(col): _*)
+    def bucketOf(key: String): Long =
+      spark.range(1).select(pmod(xxhash64(lit(key)), lit(4L))).head().getLong(0)
+    val ids = (0 until 24).map(i => s"d$i")
+    acct.upsertRaw(spark, "db", "c",
+      keyed(ids.map(i => s"""{"id":"$i","v":1}""").toDF("raw")), keyCols, pk)
+    // a line with no parseable key, placed in a bucket other than the one
+    // the empty key hashes to (which holds the `sharing` documents)
+    val empty = bucketOf("")
+    val (away, sharing) = ids.partition(i => bucketOf(i + i) != empty)
+    assert(away.nonEmpty && sharing.nonEmpty)
+    val home = bucketOf(away.head + away.head)
+    Files.writeString(local.resolve(s"db/c/data/b=$home/part-external.txt"),
+      "not json\n")
+    def lines(): Seq[String] =
+      acct.readRaw(spark, "db", "c").collect().map(_.getString(0)).toSeq
+
+    acct.upsertRaw(spark, "db", "c",
+      keyed(Seq(s"""{"id":"${away.head}","v":2}""").toDF("raw")), keyCols, pk)
+    assert(lines().size == 25 && lines().count(_ == "not json") == 1,
+      "a direct load must keep every other stored line")
+    sharing.foreach(i => assert(lines().exists(_.contains(s""""id":"$i""""))))
+
+    assert(acct.deleteByMergeKeys(spark, "db", "c",
+      Seq(away.head + away.head)) == 1L)
+    assert(lines().size == 24 && lines().count(_ == "not json") == 1,
+      "a key delete must keep every other stored line")
+    assert(acct.countRows(spark, "db", "c") == 24)
+  }
+
   test("snapshot/restore route file copies through the connector's server-side copy") {
     import spark.implicits._
     spark.sparkContext.hadoopConfiguration
