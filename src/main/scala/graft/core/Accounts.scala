@@ -59,8 +59,11 @@ case class FileAccount(root: String) {
   private def p(parts: String*): String =
     parts.foldLeft(new HPath(root))((a, b) => new HPath(a, b)).toString
 
+  /** Databases and containers: hidden names and [[Storage.swapDir]] trash
+    * (an RTAS swap's trash sits beside the container it replaces) are not. */
   private def listDirs(dir: String): Seq[String] =
-    store.listDirNames(dir).filterNot(_.startsWith("_")).sorted
+    store.listDirNames(dir)
+      .filterNot(n => Storage.hidden(n) || n.contains(Storage.TrashInfix)).sorted
 
   /** A22: liveness probe — the reference calls list_databases on both
     * accounts before starting (clients.py:13-22). */
@@ -256,10 +259,7 @@ case class FileAccount(root: String) {
     val props = containerProperties(db, container)
 
     def dataFiles(dir: String): Seq[FileMeta] =
-      store.walk(dir).filterNot { f =>
-        val n = f.relPath.split('/').last
-        n.startsWith("_") || n.startsWith(".")
-      }
+      store.walk(dir).filterNot(f => Storage.hidden(f.relPath))
     def targetFileCount(bytes: Long): Long =
       math.max(1L, (bytes + targetBytes - 1L) / targetBytes)
 
@@ -313,30 +313,29 @@ case class FileAccount(root: String) {
     * buckets and incremental upserts rewrite too much per batch; too many
     * and the layout fragments. A full-container rewrite is the honest
     * cost (every row's bucket changes); it runs as ONE distributed pass
-    * into a `_rebucket` staging tree (invisible to scans), then a
-    * delete+rename swap. The swap window is the same non-atomic
-    * filesystem trade as INSERT OVERWRITE; on a crash between delete and
-    * rename, the complete staging tree still holds every row — recovery
-    * is renaming it into place. Strays are absorbed (the full read sees
-    * them); the sidecar is rebuilt with fresh counts and signatures; a
-    * catalog stream over the container re-emits everything from the new
-    * files (at-least-once per document version, the standard contract).
-    * Returns the row count. */
+    * into a `_rebucket` staging tree (invisible to scans), then
+    * [[Storage.swapDir]] replaces `data/` with it; a crashed swap heals
+    * when the next container operation starts ([[healSwaps]]), and a
+    * rerun re-keys every row from its content. Strays are absorbed (the
+    * full read sees them); the sidecar is rebuilt with fresh counts and
+    * signatures; a catalog stream over the container re-emits everything
+    * from the new files (at-least-once per document version, the standard
+    * contract). Returns the row count. */
   def rebucketContainer(spark: SparkSession, db: String, container: String,
                         newBuckets: Int): Long = {
     require(newBuckets > 0, s"bucket count must be positive, got $newBuckets")
     GraftFunctions.register(spark)
-    val props = containerProperties(db, container)
-    val pkPaths = props.pkPaths
-    val staging = p(db, container, "_rebucket")
-    store.deleteRecursive(staging)
+    healSwaps(db, container)
+    val pkPaths = containerProperties(db, container).pkPaths
     if (!hasData(db, container)) {
       setBuckets(db, container, newBuckets)
       return 0L
     }
+    val staging = p(db, container, "_rebucket")
     // one distributed pass: key every stored row (malformed rows key to
     // null → pmod(xxhash64(""), n)-style stable bucket, they stay stored
     // like the upsert path stores them), write the NEW layout to staging
+    // (the overwrite clears a leftover staging tree)
     keyedRows(readRaw(spark, db, container), pkPaths, newBuckets)
       .select(col("raw"), col("__b").as("b"))
       .write.partitionBy("b").mode(SaveMode.Overwrite).text(staging)
@@ -348,12 +347,7 @@ case class FileAccount(root: String) {
         regexp_extract(input_file_name(), "/b=(\\d+)/", 1).cast("long"))
       .groupBy("__b").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = dataDir(db, container)
-    store.deleteRecursive(dir)
-    if (!store.rename(staging, dir))
-      throw new IllegalStateException(
-        s"re-bucket swap failed: $staging holds the complete new layout; " +
-          s"rename it to $dir to recover")
+    store.swapDir(staging, dataDir(db, container))
     setBuckets(db, container, newBuckets)
     writeBucketCounts(db, container,
       counts.toSeq.sortBy(_._1).map { case (b, n) =>
@@ -384,56 +378,48 @@ case class FileAccount(root: String) {
     store.writeString(meta, out)
   }
 
+  /** The [[Storage.swapDir]] swaps that replace a container's trees, each
+    * as (live tree, its staging siblings' names): an RTAS commit swaps the
+    * whole container dir from `db/_rtas-<container>-<id>`; re-bucket and
+    * restore swap `data/` from `_rebucket` / `_restore`. The container dir
+    * comes first: `data/` and its trash live inside it. */
+  private def swaps(db: String, container: String): Seq[(String, String => Boolean)] =
+    Seq(p(db, container) -> (_.startsWith(s"_rtas-$container-")),
+      dataDir(db, container) -> Set("_rebucket", "_restore"))
+
+  /** Heal every crashed swap of the container ([[Storage.healSwap]]) —
+    * run when a re-bucket, restore or RTAS starts ([[vacuumStaging]] heals
+    * each swap too). Staging trees stay for their operation's rerun or for
+    * the vacuum. */
+  private[core] def healSwaps(db: String, container: String): Unit =
+    swaps(db, container).foreach { case (live, _) => store.healSwap(live) }
+
   /** Remove ABANDONED staging trees (`_staging/<writeId>`): a SQL/streaming
     * write that dies between staging and commit leaves its tree behind (the
     * `_` prefix keeps it invisible to scans, but the bytes linger). A tree
     * is abandoned when nothing under it was modified within `ttlMs` — the
     * TTL is the guard against sweeping a LIVE write's staging (pick it
     * above the longest plausible stage-to-commit window; in-flight writers
-    * keep their newest mtime current). Driver metadata only. Returns the
-    * deleted tree paths. */
+    * keep their newest mtime current). The staging trees of the
+    * container's swaps ([[swaps]]) follow the same TTL, after the swaps
+    * are healed, and only while the live tree they would replace exists.
+    * Driver metadata only. Returns the deleted tree paths. */
   def vacuumStaging(db: String, container: String, ttlMs: Long,
                     nowMs: Long = System.currentTimeMillis()): Seq[String] = {
     def stale(dir: String): Boolean =
       store.walk(dir).map(_.mtimeMs).maxOption.getOrElse(0L) <= nowMs - ttlMs
     val base = p(db, container, "_staging")
-    val swept =
+    val writes =
       if (!store.isDirectory(base)) Seq.empty[String]
-      else store.listDirNames(base).sorted.flatMap { w =>
-        val dir = new HPath(base, w).toString
-        if (stale(dir)) { store.deleteRecursive(dir); Some(dir) } else None
-      }
-    // a re-bucket that died BEFORE its swap leaves `_rebucket` behind;
-    // sweep it ONLY while the live data tree exists — after a mid-swap
-    // crash (data/ deleted, rename pending) the staging tree is the ONLY
-    // copy of the container and recovery renames it into place, so an
-    // absent/empty data tree makes the tree untouchable regardless of age
-    val rb = p(db, container, "_rebucket")
-    val rbSwept =
-      if (store.isDirectory(rb) && stale(rb) && hasData(db, container) &&
-          dataFilesMeta(db, container).nonEmpty) {
-        store.deleteRecursive(rb); Seq(rb)
-      } else Seq.empty[String]
-    // a restore that died before its swap leaves `_restore` behind — same
-    // rule as `_rebucket`: sweepable only while a live data tree exists
-    // (mid-swap, the staging tree is the container's current state; and
-    // unlike re-bucket the source SNAPSHOT also still holds every row)
-    val rs = p(db, container, "_restore")
-    val rsSwept =
-      if (store.isDirectory(rs) && stale(rs) && hasData(db, container) &&
-          dataFilesMeta(db, container).nonEmpty) {
-        store.deleteRecursive(rs); Seq(rs)
-      } else Seq.empty[String]
-    // an RTAS/REPLACE whose SELECT died before commit leaves its staged
-    // container at the DB level (`_rtas-<container>-<id>`): TTL-swept like
-    // write staging — a live staged write keeps its mtimes current, and a
-    // COMMITTED one was renamed away and no longer matches the prefix
-    val rtasSwept = store.listDirNames(p(db))
-      .filter(_.startsWith(s"_rtas-$container-")).sorted.flatMap { n =>
-        val dir = p(db, n)
-        if (stale(dir)) { store.deleteRecursive(dir); Some(dir) } else None
-      }
-    swept ++ rbSwept ++ rsSwept ++ rtasSwept
+      else store.listDirNames(base).sorted.map(w => new HPath(base, w).toString)
+    val swapStaging = swaps(db, container).flatMap { case (live, isStaging) =>
+      store.healSwap(live)
+      val parent = new HPath(live).getParent
+      if (!store.isDirectory(live)) Nil
+      else store.listDirNames(parent.toString).filter(isStaging).sorted
+        .map(n => new HPath(parent, n).toString)
+    }
+    (writes ++ swapStaging).filter(stale).map { dir => store.deleteRecursive(dir); dir }
   }
 
   // ---- snapshots (time travel / restore) ----
@@ -605,13 +591,15 @@ case class FileAccount(root: String) {
     * (`_meta.json` — the snapshot's bucket count governs its data), and
     * count sidecar all return to snapshot state. Copy-then-swap like
     * [[rebucketContainer]]: the full new tree lands in `_restore` first,
-    * then delete+rename; a crash mid-swap leaves the complete staging tree
-    * (rename it into place to recover) — and the snapshot itself still
-    * holds every row regardless. Returns files restored. */
+    * then [[Storage.swapDir]] replaces `data/` with it (an empty snapshot
+    * just deletes `data/`); a crashed swap heals when the next container
+    * operation starts, and the snapshot itself still holds every row.
+    * Returns files restored. */
   def restoreSnapshot(db: String, c: String, tag: String): Long = {
     requireTag(tag)
     val snap = snapshotPath(db, c, tag)
     require(store.isDirectory(snap), s"no snapshot '$tag' for $db.$c")
+    healSwaps(db, c)
     val staging = p(db, c, "_restore")
     store.deleteRecursive(staging)
     var files = 0L
@@ -622,11 +610,7 @@ case class FileAccount(root: String) {
         files += 1
       }
     val dir = dataPath(db, c)
-    store.deleteRecursive(dir)
-    if (files > 0 && !store.rename(staging, dir))
-      throw new IllegalStateException(
-        s"restore swap failed: $staging holds the complete restored tree; " +
-          s"rename it to $dir to recover")
+    if (files > 0) store.swapDir(staging, dir) else { store.deleteRecursive(dir); () }
     val metaSrc = s"$snap/_meta.json"
     if (store.exists(metaSrc)) { store.copyFile(metaSrc, p(db, c, "_meta.json")); () }
     // sidecar: counts carry over, signatures re-derive over the restored
@@ -724,10 +708,7 @@ case class FileAccount(root: String) {
     // local-FS .crc sidecars) and "_"-prefixed files are invisible to the
     // data path, so they must not enter the vouching signature either
     val parts = store.walk(dir)
-      .filterNot { f =>
-        val n = f.relPath.split('/').last
-        n.startsWith("_") || n.startsWith(".")
-      }
+      .filterNot(f => Storage.hidden(f.relPath))
       .map(f => s"${f.relPath}:${f.size}:${f.mtimeMs}")
       .sorted
     if (parts.isEmpty && !store.isDirectory(dir)) return ""
@@ -1036,11 +1017,7 @@ case class FileAccount(root: String) {
     if (!hasData(db, container)) Seq.empty
     else {
       val dir = dataDir(db, container)
-      store.walk(dir)
-        .filter { f =>
-          val base = f.relPath.substring(f.relPath.lastIndexOf('/') + 1)
-          !base.startsWith(".") && !base.startsWith("_")
-        }
+      store.walk(dir).filterNot(f => Storage.hidden(f.relPath))
         .map(f => (new HPath(dir, f.relPath).toString, f.size))
     }
 
@@ -1075,10 +1052,7 @@ case class FileAccount(root: String) {
     * documents placed by an external writer. They are absorbed into the
     * bucket layout on the next upsert that sees them. */
   private def strayFiles(db: String, container: String): Seq[String] =
-    store.listFilePaths(dataDir(db, container)).filterNot { f =>
-      val n = new HPath(f).getName
-      n.startsWith("_") || n.startsWith(".") // _SUCCESS, checksums
-    }
+    store.listFilePaths(dataDir(db, container)).filterNot(Storage.hidden)
 
   private def bucketDir(db: String, container: String, b: Long): String =
     new HPath(dataDir(db, container), s"b=$b").toString

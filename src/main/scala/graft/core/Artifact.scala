@@ -55,11 +55,7 @@ object Artifact {
     * legitimately rewrites `_SUCCESS`. [[Family.appendGuard]] compares
     * these entries exactly. */
   def corpusEntries(p: String): Seq[String] = {
-    def hidden(rel: String): Boolean = {
-      val base = rel.substring(rel.lastIndexOf('/') + 1)
-      base.startsWith("_") || base.startsWith(".")
-    }
-    val walked = store.walk(p).filterNot(f => hidden(f.relPath))
+    val walked = store.walk(p).filterNot(f => Storage.hidden(f.relPath))
     val parts =
       if (walked.nonEmpty) walked.map { f =>
         val tok = store.contentToken(sub(p, f.relPath))

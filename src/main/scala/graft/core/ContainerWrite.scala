@@ -159,7 +159,9 @@ object ContainerMerge {
     *     from this frame alone;
     *  4. target rows rank within their merge key (content hash, then
     *     bytes): a duplicate-key group, which Cosmos could never hold, keeps
-    *     its first row when its bucket is rewritten;
+    *     its first row when its bucket is rewritten. A row's bucket is its
+    *     key's, except a stored row whose key does not parse: it keeps its
+    *     directory's, as in every bucket rewrite;
     *  5. inserts/updates carry the write form, masked when `sanitize`. */
   def plan(s: SparkSession, target: FileAccount, db: String, container: String,
            keyed: DataFrame, pkPaths: Seq[String], fileCol: Option[String],
@@ -187,19 +189,24 @@ object ContainerMerge {
     val tw = Window.partitionBy(tkeys.map(col): _*)
       .orderBy(col("__t_ch"), col("__t_raw"))
     val tgtK = RawMerge.tgtKeyed(
-        tgt.withColumn("__t_stray", input_file_name().rlike(StrayFile)),
-        pkPaths, carry = Seq("__t_stray"))
+        tgt.withColumn("__t_stray", input_file_name().rlike(StrayFile))
+          .withColumn("__t_b", nullif(
+            regexp_extract(input_file_name(), "/b=(\\d+)/", 1), lit("")).cast("long")),
+        pkPaths, carry = Seq("__t_stray", "__t_b"))
       // a stored row with a missing key part is no duplicate of anything
       .withColumn("__t_rn", when(tkeys.map(col(_).isNotNull).reduce(_ && _),
         row_number().over(tw)).otherwise(lit(1)))
     val joined = RawMerge.classifyKeyed(one, invalid, tgtK, pkPaths,
-      "full_outer", carry = Seq("__n"), tgtCarry = Seq("__t_stray", "__t_rn"))
+      "full_outer", carry = Seq("__n"), tgtCarry = Seq("__t_stray", "__t_rn", "__t_b"))
     val masked =
       if (!sanitize) joined
       else joined.withColumn("raw", when(col("action").isin("insert", "update"),
         expr("mask_json(raw)")).otherwise(col("raw")))
-    val classified = masked.withColumn("__b", target.bucketCol(keys,
-      target.containerProperties(db, container).buckets))
+    // a stored row whose key does not parse keeps its directory's bucket
+    val classified = masked.withColumn("__b", coalesce(
+      when(keys.map(col(_).isNull).reduce(_ || _), col("__t_b")),
+      target.bucketCol(keys, target.containerProperties(db, container).buckets)))
+      .drop("__t_b")
     Plan(classified, pruned, tgt.inputFiles.toSeq)
   }
 

@@ -231,12 +231,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // The AS SELECT rows land in a HIDDEN staged container (`_rtas-<c>-<id>`
   // at the db level — `_`-prefixed, invisible to listings and scans)
   // through the ordinary merge-engine write path, so the staged tree has
-  // real layout, sidecars, and an error channel. Commit is ONE
-  // delete+rename swap — readers see the old table until the instant the
-  // new one is complete, and a failed SELECT aborts into a staged-tree
-  // delete, never a half-replaced table. Same crash window and recovery
-  // posture as re-bucketing (the staged tree holds the complete new
-  // state); vacuum sweeps abandoned `_rtas-*` trees by TTL.
+  // real layout, sidecars, and an error channel. Commit is ONE directory
+  // swap ([[Storage.swapDir]]) — readers see the old table until the new
+  // one is complete, and a failed SELECT aborts into a staged-tree delete,
+  // never a half-replaced table. A crashed swap heals when the next stage
+  // of the table, or its vacuum, starts (the old table is rolled back);
+  // vacuum sweeps abandoned `_rtas-*` trees by TTL while the table exists.
 
   private def stage(ident: Identifier, schema: StructType,
                     partitions: Array[Transform],
@@ -251,6 +251,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"graft containers hold raw JSON lines: declare (raw STRING), got $schema")
     require(!ident.name().contains('@'),
       s"'@' is reserved for snapshot references (c@tag): ${ident.name()}")
+    val (d, c) = split(ident)
+    account.healSwaps(d, c)
     mode match {
       case StagedContainerTable.Create =>
         if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
@@ -258,7 +260,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         if (!tableExists(ident)) throw new NoSuchTableException(ident)
       case StagedContainerTable.CreateOrReplace => ()
     }
-    val (d, c) = split(ident)
     val props = parseProps(properties)
     account.createDatabaseIfAbsent(d)
     val stagedC = s"_rtas-$c-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -375,7 +376,7 @@ object StagedContainerTable {
 /** One staged DDL operation ([[GraftCatalog.stageCreate]] family): a full
   * [[ContainerTable]] over the hidden staged container for the AS SELECT
   * write, plus the commit/abort pair — commit swaps the staged tree into
-  * the real container name in one delete+rename, abort deletes it. */
+  * the real container name ([[Storage.swapDir]]), abort deletes it. */
 final class StagedContainerTable(account: FileAccount, ident: Identifier,
                                  db: String, realC: String, stagedC: String,
                                  props: ContainerProps,
@@ -434,11 +435,7 @@ final class StagedContainerTable(account: FileAccount, ident: Identifier,
         }
       }
     }
-    store.deleteRecursive(real)
-    if (!store.rename(dir(stagedC), real))
-      throw new IllegalStateException(
-        s"staged commit failed: ${dir(stagedC)} holds the complete new " +
-          s"table; rename it to $real to recover")
+    store.swapDir(dir(stagedC), real)
   }
 
   override def abortStagedChanges(): Unit = {

@@ -109,9 +109,57 @@ trait Storage {
     * proof. Formatted `t<hex>` so listing entries carrying it are
     * self-describing (see `Artifact.corpusEntries`). */
   def contentToken(p: String): String
+
+  /** Replace the tree at `live` with the complete tree at `staging`, a
+    * sibling of it, by the trash protocol: rename live to a trash sibling
+    * (`<live>.trash-<tag>`), rename staging into live, delete the trash. A
+    * failed second rename renames the trash back, then throws. At every
+    * crash point either live or a trash [[healSwap]] finds holds the
+    * complete pre-swap tree. An absent live skips the first rename; the
+    * leftovers of an earlier crashed swap are healed first. */
+  final def swapDir(staging: String, live: String): Unit = {
+    healSwap(live)
+    val trash = s"$live${Storage.TrashInfix}${java.util.UUID.randomUUID().toString.take(8)}"
+    if (exists(live) && !rename(live, trash))
+      throw new IllegalStateException(s"swap failed: could not move $live aside")
+    if (!rename(staging, live)) {
+      if (exists(trash)) rename(trash, live)
+      throw new IllegalStateException(
+        s"swap failed: could not rename $staging to $live; the pre-swap " +
+          "tree is back in place, or in its trash for the next heal")
+    }
+    deleteRecursive(trash); ()
+  }
+
+  /** Finish or undo a crashed [[swapDir]] of `live`; run it when an
+    * operation on `live` starts. With live absent, its trash holds the
+    * complete pre-swap tree: rename it back (roll back). Once live exists,
+    * delete every trash sibling and the staging siblings whose names
+    * `staging` matches. With live and trash both absent nothing is
+    * touched. */
+  final def healSwap(live: String, staging: String => Boolean = _ => false): Unit = {
+    val hp = new Path(live)
+    val parent = hp.getParent
+    val siblings = listDirNames(parent.toString)
+    val trash = siblings.filter(_.startsWith(hp.getName + Storage.TrashInfix))
+    if (!exists(live)) trash.headOption.foreach(t => rename(new Path(parent, t).toString, live))
+    if (exists(live))
+      (trash ++ siblings.filter(staging)).foreach(n => deleteRecursive(new Path(parent, n).toString))
+  }
 }
 
 object Storage {
+  /** Infix of a [[Storage.swapDir]] trash sibling's name. */
+  private[core] val TrashInfix = ".trash-"
+
+  /** The Spark reader convention for hidden files: a `_`- or `.`-prefixed
+    * name (`_SUCCESS`, checksum sidecars, staging trees). Takes a name or
+    * a path; a path is judged by its last segment. */
+  def hidden(path: String): Boolean = {
+    val n = path.substring(path.lastIndexOf('/') + 1)
+    n.startsWith("_") || n.startsWith(".")
+  }
+
   /** Hadoop configuration of the active Spark session — the same one its
     * own readers and writers resolve paths with — or a bare default when no
     * session is up (catalog calls before the first action). */

@@ -964,23 +964,18 @@ object Streams {
     // and the compaction rewrite (mergeSchema off) could then silently
     // collapse it to whichever footer wins — dropping `reason`. Every
     // legacy row predates the fuzzy lane, so its reason IS verbatim;
-    // rewrite once through the compaction's own swap protocol
-    // ([[healGateStore]] recovers a crash at any point).
+    // rewrite once and swap it in ([[graft.core.Storage.swapDir]];
+    // [[healGateStore]] recovers a crash at any point).
     if (nVerbatim + nFuzzy > 0L && st.exists(s"$storeDir/_contam") &&
       !spark.read.parquet(s"$storeDir/_contam").columns.contains("reason")) {
       val live = s"$storeDir/_contam"
       val migrated = spark.read.parquet(live)
         .withColumn("reason", lit("verbatim"))
         .localCheckpoint(eager = true)
-      val tag = java.util.UUID.randomUUID().toString.take(8)
-      migrated.write.mode("overwrite").parquet(s"$live.compact-$tag")
+      val staging = s"$live.compact-${java.util.UUID.randomUUID().toString.take(8)}"
+      migrated.write.mode("overwrite").parquet(staging)
       migrated.unpersist()
-      if (!(st.rename(live, s"$live.trash-$tag") &&
-          st.rename(s"$live.compact-$tag", live)))
-        throw new IllegalStateException(
-          s"gate store: _contam reason migration swap failed for $live " +
-            "(heal on next entry)")
-      st.deleteRecursive(s"$live.trash-$tag")
+      st.swapDir(staging, live)
     }
     if (nVerbatim + nFuzzy > 0L)
       batch.join(verbatim, Seq("doc_id"), "left_semi")
@@ -1142,11 +1137,7 @@ object Streams {
       new org.apache.hadoop.fs.Path(corpusDir, "documents.parquet").toString
     val embCorpus =
       new org.apache.hadoop.fs.Path(corpusDir, "embeddings.parquet").toString
-    def hidden(rel: String): Boolean = {
-      val base = rel.substring(rel.lastIndexOf('/') + 1)
-      base.startsWith("_") || base.startsWith(".")
-    }
-    st.walk(deltaDir).map(_.relPath).filterNot(hidden)
+    st.walk(deltaDir).map(_.relPath).filterNot(graft.core.Storage.hidden)
       // extv/ is NOT corpus data: the ext mm lane's staged delta vectors
       // stay in the staging dir for the crash branch to finish the
       // external append, and die with it at the post-commit sweep
@@ -1270,10 +1261,8 @@ object Streams {
   def gateStats(storeDir: String): GateStats = {
     val st = graft.core.Storage.hadoop
     def files(sub: String): (Long, Long) = {
-      val fs = st.walk(s"$storeDir/$sub").filterNot { f =>
-        val n = f.relPath.split('/').last
-        n.startsWith("_") || n.startsWith(".")
-      }
+      val fs = st.walk(s"$storeDir/$sub")
+        .filterNot(f => graft.core.Storage.hidden(f.relPath))
       (fs.size.toLong, fs.map(_.size).sum)
     }
     val meta = readGateMeta(storeDir)
@@ -1379,10 +1368,8 @@ object Streams {
     val st = graft.core.Storage.hadoop
     val bandsPath = s"$storeDir/bands"
     def hasBpDirs = st.listDirNames(bandsPath).exists(_.startsWith("bp="))
-    def hasDataFiles = st.walk(bandsPath).exists { f =>
-      val n = f.relPath.split('/').last
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    def hasDataFiles =
+      st.walk(bandsPath).exists(f => !graft.core.Storage.hidden(f.relPath))
     readGateMeta(storeDir) match {
       case Some(m) =>
         require(m.layoutVersion <= GateLayoutVersion,
@@ -1412,9 +1399,8 @@ object Streams {
   }
 
   /** One-time v0→v2 band rewrite: derive `bp` from the stored band keys and
-    * swap the partitioned layout in via the compaction protocol (stage →
-    * rename away → rename in → drop trash), so [[healGateStore]] covers
-    * every crash point. */
+    * swap the partitioned layout in ([[graft.core.Storage.swapDir]]), so
+    * [[healGateStore]] covers every crash point. */
   private def migrateGateBands(spark: SparkSession, live: String,
       buckets: Int): Unit = {
     val st = graft.core.Storage.hadoop
@@ -1422,15 +1408,10 @@ object Streams {
       .withColumn("bp", pmod(xxhash64(col("bk")), lit(buckets.toLong)))
       .repartition(col("bp"))
       .localCheckpoint(eager = true) // the plan reads the files the swap replaces
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = s"$live.compact-$tag"
+    val staging = s"$live.compact-${java.util.UUID.randomUUID().toString.take(8)}"
     rows.write.mode("overwrite").partitionBy("bp").parquet(staging)
     rows.unpersist()
-    if (!(st.rename(live, s"$live.trash-$tag") && st.rename(staging, live)))
-      throw new IllegalStateException(
-        s"gate-store migration swap failed for $live (heal on next entry)")
-    st.deleteRecursive(s"$live.trash-$tag")
-    ()
+    st.swapDir(staging, live)
   }
 
   /** The pruned band-store reader — partition filters reach the parquet
@@ -1443,24 +1424,15 @@ object Streams {
     // (a cast-wrapped column can drop out of partition pruning)
     spark.read.parquet(bandsPath).where(col("bp").isin(bps.map(_.toInt): _*))
 
-  /** Finish a crashed [[compactGateStore]] swap — called at every gate
-    * entry. Invariant of the swap protocol (stage → rename away → rename
-    * in → drop trash): at any crash point either the live dir exists
-    * (leftovers are garbage) or the trash dir holds the COMPLETE original
-    * (restore by one rename). Either way no row is ever lost. */
+  /** Heal a crashed swap of each sub-store ([[compactGateStore]],
+    * [[migrateGateBands]], the `_contam` reason migration) — called at
+    * every gate entry. [[graft.core.Storage.healSwap]] rolls an absent live
+    * dir back from its trash, then drops the trash and the `.compact-`
+    * staging trees, so no row is ever lost. */
   private[graft] def healGateStore(storeDir: String): Unit = {
     val st = graft.core.Storage.hadoop
-    if (!st.exists(storeDir)) return
-    for (sub <- Seq("bands", "docs", "_contam")) {
-      val live = s"$storeDir/$sub"
-      val leftovers = st.listDirNames(storeDir)
-        .filter(n => n.startsWith(s"$sub.compact-") || n.startsWith(s"$sub.trash-"))
-        .map(n => s"$storeDir/$n")
-      if (!st.exists(live))
-        leftovers.find(_.contains(".trash-")).foreach(st.rename(_, live))
-      leftovers.filter(st.exists(_)).filterNot(_ == live)
-        .foreach(st.deleteRecursive(_))
-    }
+    for (sub <- Seq("bands", "docs", "_contam"))
+      st.healSwap(s"$storeDir/$sub", _.startsWith(s"$sub.compact-"))
   }
 
   /** Compact the gate's band/doc stores back to size-targeted files once
@@ -1469,11 +1441,11 @@ object Streams {
     * tens of thousands of tiny parquet files and the store scan dies of
     * listing + open overhead long before data volume matters).
     *
-    * Swap protocol per sub-store: rewrite into a staging dir (lineage
+    * Per sub-store: rewrite into a `.compact-` staging dir (lineage
     * TRUNCATED first — the plan reads the very files the swap replaces),
-    * rename the live dir to trash, rename staging in, drop trash. A crash
-    * anywhere leaves either the live dir or the complete original in
-    * trash; [[healGateStore]] (run at every gate entry) restores the
+    * then [[graft.core.Storage.swapDir]] swaps it in. A crash anywhere
+    * leaves either the live dir or the complete original in trash;
+    * [[healGateStore]] (run at every gate entry) restores the
     * invariant. Gate determinism is layout-independent — decisions read
     * the full row set, never file boundaries — so a compaction between
     * batches never changes an admit/reject (spec-pinned). */
@@ -1490,10 +1462,7 @@ object Streams {
     for (sub <- Seq("bands", "docs", "_contam")) {
       val live = s"$storeDir/$sub"
       if (st.exists(live)) {
-        val files = st.walk(live).filterNot { f =>
-          val n = f.relPath.split('/').last
-          n.startsWith("_") || n.startsWith(".")
-        }
+        val files = st.walk(live).filterNot(f => graft.core.Storage.hidden(f.relPath))
         before += files.size
         // the partitioned band store legitimately holds ~1 file per live
         // bp dir — the compaction trigger counts files BEYOND that floor,
@@ -1513,21 +1482,13 @@ object Streams {
             else
               spark.read.parquet(live).repartition(nOut)
                 .localCheckpoint(eager = true)
-          val tag = java.util.UUID.randomUUID().toString.take(8)
-          val staging = s"$live.compact-$tag"
+          val staging = s"$live.compact-${java.util.UUID.randomUUID().toString.take(8)}"
           if (sub == "bands")
             rows.write.mode("overwrite").partitionBy("bp").parquet(staging)
           else rows.write.mode("overwrite").parquet(staging)
           rows.unpersist()
-          if (!(st.rename(live, s"$live.trash-$tag") &&
-              st.rename(staging, live)))
-            throw new IllegalStateException(
-              s"gate-store compaction swap failed for $live (heal on next entry)")
-          st.deleteRecursive(s"$live.trash-$tag")
-          after += st.walk(live).count { f =>
-            val n = f.relPath.split('/').last
-            !n.startsWith("_") && !n.startsWith(".")
-          }
+          st.swapDir(staging, live)
+          after += st.walk(live).count(f => !graft.core.Storage.hidden(f.relPath))
         } else after += files.size
       }
     }

@@ -1317,4 +1317,35 @@ class CatalogSpec extends AnyFunSuite {
     assert(v.getAs[Int]("staging_trees_removed") >= 1)
     assert(!java.nio.file.Files.exists(staged))
   }
+
+  test("an incremental migrate keeps a stored line whose key does not parse in its bucket") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val tgt = newAccount("cat-badline-t")
+    tgt.createDatabaseIfAbsent("db")
+    tgt.createContainerIfAbsent("db", "c", ContainerProps(Seq("/id"), buckets = 4))
+    val keyCols = Seq("__id", "__pk0")
+    def bucketOf(key: String): Long =
+      spark.range(1).select(pmod(xxhash64(lit(key)), lit(4L))).head().getLong(0)
+    val ids = (0 until 24).map(i => s"d$i")
+    tgt.upsertRaw(spark, "db", "c", graft.operators.RawMerge.srcKeyed(spark,
+        ids.map(i => s"""{"id":"$i","v":1}""").toDF("raw"), Seq("/id"))
+      .select(("raw" +: keyCols).map(col): _*), keyCols, Seq("/id"))
+    // a line with no parseable key in bucket 1, which the empty key (the
+    // key of such a line) does not hash to
+    assert(bucketOf("") != 1L)
+    Files.writeString(Paths.get(tgt.root, "db", "c", "data", "b=1", "part-external.txt"),
+      "not json\n")
+    val doc = ids.find(i => bucketOf(i + i) == 1L).get
+    val src = newAccount("cat-badline-s")
+    seedContainer(src, "db", "c", Seq("/id"), Seq(s"""{"id":"$doc","v":2}"""))
+
+    val r = Orchestrator.migrateContainer(spark, src, tgt, "db", "c",
+      Config(incremental = Some(true)))
+    val lines = tgt.readRaw(spark, "db", "c").collect().map(_.getString(0)).toSeq
+    assert(lines.size == 25 && lines.count(_ == "not json") == 1,
+      s"the merge must keep every stored line: $r")
+    assert(lines.exists(l => l.contains(s""""id":"$doc"""") && l.contains("\"v\":2")))
+    assert(r.updated == 1 && r.verified && r.verifyMode == "incremental", r.toString)
+  }
 }

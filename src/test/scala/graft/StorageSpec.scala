@@ -37,6 +37,34 @@ object GraftCopyFs {
   val copies = new java.util.concurrent.atomic.AtomicLong(0)
 }
 
+/** A local filesystem whose renames and deletes fail by the name of the
+  * path they act on — the steps of [[graft.core.Storage.swapDir]]:
+  * `SwapFaultFs.fault(name)` = Some(true) throws (the process dies at that
+  * step), Some(false) refuses (the call returns false), None proceeds. */
+class SwapFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("swapfault:///")
+  override def getScheme: String = "swapfault"
+  private def proceed(p: org.apache.hadoop.fs.Path): Boolean =
+    SwapFaultFs.fault(p.getName) match {
+      case Some(true) => throw new java.io.IOException(s"crash at $p")
+      case Some(false) => false
+      case None => true
+    }
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    proceed(src) && super.rename(src, dst)
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    proceed(p) && super.delete(p, recursive)
+}
+object SwapFaultFs {
+  @volatile var fault: String => Option[Boolean] = _ => None
+  /** Run `body` with `f` armed; disarmed however it ends. */
+  def armed[T](f: String => Option[Boolean])(body: => T): T = {
+    fault = f
+    try body finally fault = _ => None
+  }
+}
+
 /** Proof of the [[graft.core.Storage]] boundary (SURVEY §2 A-storage /
   * round-5 port): the whole account surface — catalog, bucketed upsert,
   * sidecar counts, signatures, stray absorption — runs against a filesystem
@@ -362,5 +390,102 @@ class StorageSpec extends AnyFunSuite {
         case None    => sys.props.remove("graft.ivf.root")
       }
     }
+  }
+
+  private def swapFaultRoot(prefix: String): (String, java.nio.file.Path) = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.swapfault.impl", classOf[SwapFaultFs].getName)
+    val tmp = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), prefix).toAbsolutePath
+    ("swapfault:" + tmp, tmp)
+  }
+
+  private def names(dir: java.nio.file.Path): Set[String] =
+    Option(dir.toFile.list()).map(_.toSet).getOrElse(Set.empty)
+
+  test("swapDir: a crash at each step, or a refused swap rename, heals to the pre- or post-swap tree") {
+    val (root, local) = swapFaultRoot("swap-primitive")
+    val st = graft.core.Storage.hadoop
+    val live = s"$root/live"
+    val staging = s"$root/_next"
+    // (fault on the name each step acts on, crash?, tree live holds after the heal)
+    val cases = Seq(
+      ("step 1 crash: rename live aside", (n: String) => n == "live", true, "pre"),
+      ("step 2 crash: rename staging in", (n: String) => n == "_next", true, "pre"),
+      ("step 3 crash: delete the trash", (n: String) => n.startsWith("live.trash-"), true, "post"),
+      ("step 2 refused", (n: String) => n == "_next", false, "pre"))
+    for ((what, at, crash, expected) <- cases) {
+      st.deleteRecursive(live)
+      st.writeString(s"$live/part-0", "pre")
+      st.writeString(s"$live/b=1/part-0", "pre")
+      st.writeString(s"$staging/part-0", "post")
+      val e = intercept[Exception](SwapFaultFs.armed(n => if (at(n)) Some(crash) else None) {
+        st.swapDir(staging, live)
+      })
+      if (!crash) {
+        assert(e.isInstanceOf[IllegalStateException], s"$what: $e")
+        assert(st.readString(s"$live/part-0") == "pre", s"$what: swapDir must roll back")
+      }
+      st.healSwap(live, _ == "_next")
+      assert(st.readString(s"$live/part-0") == expected, what)
+      assert(st.exists(s"$live/b=1/part-0") == (expected == "pre"), what)
+      assert(names(local) == Set("live"), s"$what: leftovers ${names(local)}")
+    }
+    // a swap with no crash lands the new tree and leaves nothing behind
+    st.writeString(s"$staging/part-0", "post")
+    st.swapDir(staging, live)
+    assert(st.readString(s"$live/part-0") == "post" && names(local) == Set("live"))
+  }
+
+  test("a re-bucket whose swap rename fails keeps every row; its rerun lands the new layout") {
+    import spark.implicits._
+    val (root, local) = swapFaultRoot("swap-rebucket")
+    spark.conf.set("spark.sql.catalog.graftsfb", classOf[graft.core.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftsfb.root", root)
+    graft.functions.GraftFunctions.register(spark)
+    val acct = FileAccount(root)
+    acct.createDatabaseIfAbsent("db")
+    acct.createContainerIfAbsent("db", "c", ContainerProps(Seq("/id"), buckets = 2))
+    val keyCols = Seq("__id", "__pk0")
+    val docs = (0 until 24).map(i => s"""{"id":"d$i","v":$i}""")
+    acct.upsertRaw(spark, "db", "c",
+      graft.operators.RawMerge.srcKeyed(spark, docs.toDF("raw"), Seq("/id"))
+        .select(("raw" +: keyCols).map(col): _*), keyCols, Seq("/id"))
+    def stored(): Set[String] =
+      spark.sql("SELECT raw FROM graftsfb.db.c").collect().map(_.getString(0)).toSet
+
+    intercept[Exception](SwapFaultFs.armed(n => if (n == "_rebucket") Some(false) else None) {
+      spark.sql("CALL graftsfb.system.rebucket('db', 'c', 4)").collect()
+    })
+    assert(stored() == docs.toSet, "a failed swap must leave the container whole")
+    assert(spark.sql("CALL graftsfb.system.rebucket('db', 'c', 4)").head().getLong(0) == 24L)
+    assert(stored() == docs.toSet, "the rerun must keep every row")
+    assert(acct.containerProperties("db", "c").buckets == 4)
+    assert(acct.bucketDirList("db", "c").map(_._1).toSet.subsetOf((0L until 4L).toSet))
+    assert(acct.countRows(spark, "db", "c") == 24L)
+    assert(!names(local.resolve("db/c")).exists(_.contains(".trash-")))
+  }
+
+  test("an RTAS whose swap rename fails leaves the old table, and vacuum keeps it") {
+    val (root, local) = swapFaultRoot("swap-rtas")
+    spark.conf.set("spark.sql.catalog.graftsfr", classOf[graft.core.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftsfr.root", root)
+    spark.sql("CREATE NAMESPACE graftsfr.db")
+    spark.sql("CREATE TABLE graftsfr.db.t (raw STRING) TBLPROPERTIES ('pk'='/id', 'buckets'='2')")
+    val docs = (0 until 12).map(i => s"""{"id":"d$i","v":$i}""")
+    spark.sql("INSERT INTO graftsfr.db.t VALUES " + docs.map(d => s"('$d')").mkString(", "))
+    def stored(): Set[String] =
+      spark.sql("SELECT raw FROM graftsfr.db.t").collect().map(_.getString(0)).toSet
+    assert(stored() == docs.toSet)
+
+    intercept[Exception](SwapFaultFs.armed(n => if (n.startsWith("_rtas-t-")) Some(false) else None) {
+      spark.sql("REPLACE TABLE graftsfr.db.t TBLPROPERTIES ('pk'='/id', 'buckets'='4') " +
+        """AS SELECT '{"id":"new","v":1}' AS raw""")
+    })
+    spark.sql("CALL graftsfr.system.vacuum('db', 't', 0)").collect()
+    assert(stored() == docs.toSet, "the old table must stay readable with all its rows")
+    assert(FileAccount(root).containerProperties("db", "t").buckets == 2)
+    assert(names(local.resolve("db")) == Set("t"), names(local.resolve("db")).toString)
+    assert(spark.sql("SHOW TABLES IN graftsfr.db").collect().map(_.getString(1)).toSeq == Seq("t"))
   }
 }
