@@ -203,9 +203,9 @@ object SparkEntry {
     "q_sim21_hybrid_query" -> (Similarity.qSim21 _),
     "q_sim22_nprobe_sweep" -> (Similarity.qSim22 _),
     // merge engine (the reference's core pipeline, A9-A12)
-    "q_m1_merge_classify"  -> (Merge.qM1 _),
-    "q_m2_merge_state"     -> (Merge.qM2 _),
-    "q_m3_merge_idempotent" -> (Merge.qM3 _),
+    "q_m1_merge_classify"  -> (RawMerge.qM1 _),
+    "q_m2_merge_state"     -> (RawMerge.qM2 _),
+    "q_m3_merge_idempotent" -> (RawMerge.qM3 _),
     // schemaless raw-JSON merge (round-trip fidelity + error channel)
     "q_m4_raw_classify"    -> (RawMerge.qM4 _),
     "q_m5_raw_fidelity"    -> (RawMerge.qM5 _),
@@ -2993,7 +2993,7 @@ object SparkEntry {
 
   // ---- shared DuckDB oracle fragments (merge engine) ----
   // Deterministic source/target snapshots derived from `documents`; must
-  // mirror Merge.sourceSnapshot / Merge.targetSnapshot exactly.
+  // mirror RawMerge.sourceLines / RawMerge.targetLines exactly.
 
   private val mergeSnapshotsSql: String =
     "WITH src AS (SELECT CASE WHEN doc_id % 53 = 0 THEN NULL ELSE CAST(doc_id AS VARCHAR) END AS id, " +

@@ -805,8 +805,8 @@ case class FileAccount(root: String) {
                    container: String): Map[Long, (Long, Long)] =
     readRaw(spark, db, container)
       .withColumn("__b",
-        coalesce(regexp_extract(input_file_name(), "/b=(\\d+)/", 1)
-          .cast("long"), lit(-1L)))
+        coalesce(nullif(regexp_extract(input_file_name(), "/b=(\\d+)/", 1),
+          lit("")).cast("long"), lit(-1L)))
       .groupBy("__b")
       .agg(count(lit(1)).as("n"),
         coalesce(expr("bit_xor(xxhash64(raw))"), lit(0L)).as("h"))

@@ -190,8 +190,69 @@ object RawMerge {
 
   // ---- oracle-checked snapshot queries on the `documents` table ----
   //
-  // Deterministic raw-JSON source/target snapshots built from `documents`
-  // (the driver testdata has no raw containers). The snapshots exercise
+  // q_m1–q_m3: flat (id, pk, text) snapshots, one JSON line per row via
+  // [[docLines]] (same arithmetic in the DuckDB oracle, SparkEntry.oracleSql):
+  //   - source: id null (so absent) for doc_id%53=0 (missing-id errors, A4),
+  //             pk emptied for doc_id%71=0 (invalid-pk errors, A6)
+  //   - target: doc_id%10=3 rows absent (inserts), doc_id%10=7 rows stale
+  //             (updates), the rest identical (skips)
+
+  /** One JSON line per row of an (id, pk, text) frame. `to_json` drops null
+    * fields, so a null id or pk is an absent one (an 'error' row). */
+  private[graft] def docLines(df: DataFrame): DataFrame =
+    df.select(to_json(struct(col("id"), col("pk"), col("text"))).as("raw"))
+
+  /** Order-independent checksum of a merged state of [[docLines]] lines:
+    * row count and the sum of 32-bit md5s of `id|pk|text`. */
+  private[graft] def stateChecksum(state: DataFrame): DataFrame =
+    state.selectExpr("from_json(raw, 'id STRING, pk STRING, text STRING') AS d")
+      .selectExpr(s"${md5h32("concat(d.id, '|', d.pk, '|', d.text)")} AS h32")
+      .agg(count(lit(1)).as("n"), sum(col("h32")).as("h"))
+
+  private def actionHistogram(classified: DataFrame): DataFrame =
+    classified.groupBy("action").agg(count(lit(1)).as("c")).orderBy("action")
+
+  private def sourceLines(docs: DataFrame): DataFrame = docLines(docs.select(
+    when(col("doc_id") % 53 === 0, lit(null))
+      .otherwise(col("doc_id").cast("string")).as("id"),
+    when(col("doc_id") % 71 === 0, lit(""))
+      .otherwise(col("lang")).as("pk"),
+    col("text")))
+
+  private def targetLines(docs: DataFrame): DataFrame = docLines(docs
+    .filter(col("doc_id") % 10 =!= 3)
+    .select(
+      col("doc_id").cast("string").as("id"),
+      col("lang").as("pk"),
+      when(col("doc_id") % 10 === 7, concat(col("text"), lit(" [stale]")))
+        .otherwise(col("text")).as("text")))
+
+  /** Q-M1: action histogram of the merge classification (A9-A12 + A23). */
+  def qM1(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    actionHistogram(classify(spark, sourceLines(docs), targetLines(docs), Seq("/pk")))
+  }
+
+  /** Q-M2: order-independent checksum of the post-merge target state (the
+    * B5 fix: content parity, not just count parity). */
+  def qM2(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    stateChecksum(mergedState(spark, sourceLines(docs), targetLines(docs), Seq("/pk")))
+  }
+
+  /** Q-M3: idempotence — re-classifying the source against the merged state
+    * must yield only 'skip' (plus the unchanged 'error' rows): the
+    * reference's implicit contract that a second migration run writes
+    * nothing (migration.py:124-130 + FIXTURES.md §2.4). */
+  def qM3(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    val src = sourceLines(docs)
+    val after = mergedState(spark, src, targetLines(docs), Seq("/pk"))
+    actionHistogram(classify(spark, src, after, Seq("/pk")))
+  }
+
+  // q_m4/q_m5: deterministic raw-JSON source/target snapshots built from
+  // `documents` (the driver testdata has no raw containers). They exercise
   // exactly what schema inference destroys: key order differs between the
   // sides, numbers are value-equal but format-different (1.0 vs 1), and
   // system fields sit at top level AND inside a dict-in-array (the B2 case).
@@ -238,9 +299,7 @@ object RawMerge {
     * rows exercise the error channel. */
   def qM4(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    classify(spark, rawSource(docs), rawTarget(docs), Seq("/pk"))
-      .groupBy("action").agg(count(lit(1)).as("c"))
-      .orderBy("action")
+    actionHistogram(classify(spark, rawSource(docs), rawTarget(docs), Seq("/pk")))
   }
 
   /** Q-M5: byte-fidelity checksum of the post-merge state — skips keep the

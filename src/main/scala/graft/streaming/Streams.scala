@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.Merge
+import graft.operators.RawMerge
 
 /** Streaming surface (SURVEY.md §2 Part B, ST-1..ST-5). The reference's only
   * "streaming" is a resumable pagination cursor
@@ -290,7 +290,6 @@ object Streams {
                      sourceOptions: Map[String, String] = Map.empty,
                      onBatch: SyncBatchProgress => Unit = _ => ()):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.RawMerge
     require(dedupeTtl.isEmpty || {
       val t = trigger.getClass.getName
       !t.contains("AvailableNow") && !t.contains("OneTime")
@@ -538,21 +537,21 @@ object Streams {
   /** ST-5 (batch form): incremental MERGE equivalence — applying the merge
     * in two half-batches (foreachBatch style) must land on the same final
     * state as one full-refresh merge; the oracle pins the final state's
-    * order-independent checksum. Exercises the real [[Merge.merged]] path
-    * twice, seeded from an empty target. */
+    * order-independent checksum. Runs [[RawMerge.mergedState]], the
+    * production merge body, twice over JSON lines, seeded from an empty
+    * target. */
   def qSt5(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir).select(
       col("event_id").cast("string").as("id"),
       col("event_type").as("pk"),
       col("props").as("text"))
-    val batch1 = ev.filter(xxhash64(col("id")) % 2 === 0)
-    val batch2 = ev.filter(xxhash64(col("id")) % 2 =!= 0)
-    val empty = ev.limit(0)
-    val t1 = Merge.merged(batch1, empty, "id", Seq("pk"), Seq("text"))
-    val t2 = Merge.merged(batch2, t1, "id", Seq("pk"), Seq("text"))
-    t2.selectExpr(
-      s"${graft.functions.Hashing.md5h32("concat(id, '|', pk, '|', text)")} AS h32")
-      .agg(count(lit(1)).as("n"), sum(col("h32")).as("h"))
+    val half = xxhash64(col("id")) % 2 === 0
+    val empty = RawMerge.docLines(ev.limit(0))
+    val t1 = RawMerge.mergedState(spark, RawMerge.docLines(ev.filter(half)),
+      empty, Seq("/pk"))
+    val t2 = RawMerge.mergedState(spark, RawMerge.docLines(ev.filter(!half)),
+      t1.select("raw"), Seq("/pk"))
+    RawMerge.stateChecksum(t2)
   }
 
   // ---- ST-9: dedup-gated ingestion ----

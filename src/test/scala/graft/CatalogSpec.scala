@@ -612,6 +612,23 @@ class CatalogSpec extends AnyFunSuite {
       s"audit must localize the corrupt bucket: before=$before after=$after")
   }
 
+  test("content audit books a stray file at the data root as bucket -1 with its row count") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val acc = newAccount("cat-audit-stray")
+    acc.createDatabaseIfAbsent("db")
+    acc.createContainerIfAbsent("db", "c", ContainerProps(Seq("/pk"), buckets = 2))
+    val docs = (0 until 6).map(i => s"""{"id":"d$i","pk":"p${i % 2}","v":$i}""")
+    val keyed = docs.toDF("raw").selectExpr("raw",
+      "json_pk(raw, 'id') AS __id", "json_pk(raw, 'pk') AS __pk0")
+    acc.upsertRaw(spark, "db", "c", keyed, Seq("__id", "__pk0"), Seq("/pk"))
+    Files.writeString(Paths.get(acc.root, "db", "c", "data", "stray.json"),
+      "{\"id\":\"x1\",\"pk\":\"p9\"}\n{\"id\":\"x2\",\"pk\":\"p9\"}\n")
+    val audit = acc.auditBuckets(spark, "db", "c")
+    assert(audit.get(-1L).map(_._1).contains(2L), s"stray bucket: $audit")
+    assert(audit.values.map(_._1).sum == 8, s"every row audited once: $audit")
+  }
+
   test("SQL catalog facade: CREATE NAMESPACE / CREATE TABLE / SHOW / SELECT drive FileAccount metadata") {
     val root = Files.createTempDirectory(Paths.get("target"), "sqlcat")
     spark.conf.set("spark.sql.catalog.graftcat",

@@ -221,15 +221,7 @@ class PlanGateSpec extends AnyFunSuite {
       "upstream) under the constant q_id = 0 of a single user query"),
   )
 
-  private val mergePayload =
-    "the merge sink's payload must co-locate with its merge key: ONE " +
-      "key-hash exchange of the incoming batch (delta-sized, never the " +
-      "stored corpus), the same exchange any keyed upsert pays"
-  private val allowTextExchange: Map[String, String] = Map(
-    "q_m2_merge_state" -> mergePayload,
-    "q_m3_merge_idempotent" -> mergePayload,
-    "q_st5_incremental_merge" -> mergePayload,
-  )
+  private val allowTextExchange: Map[String, String] = Map.empty
 
   private def gate(rule: String, allow: Map[String, String],
                    hits: Seq[String]): Unit = {

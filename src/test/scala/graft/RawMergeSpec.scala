@@ -115,6 +115,7 @@ class RawMergeSpec extends AnyFunSuite {
       """{"id":"d2","owner":{"region":"emea"},"x":2}""",           // update
       """{"id":"d3","owner":{"region":"apac"},"x":1}""",           // insert
       """{"id":"","owner":{"region":"emea"}}""",                   // error: empty id
+      """{"owner":{"region":"emea"},"x":5}""",                     // error: missing id
       """{"id":"d4","owner":{"region":{"deep":1}}}""",             // error: dict pk
       """{"id":"d5","owner":{}}""",                                // error: missing pk
       "corrupt {{"                                                 // error: not JSON
@@ -123,13 +124,14 @@ class RawMergeSpec extends AnyFunSuite {
       // canonically equal to injected d1: key order + number format + system
       // fields differ, literal "owner/region" key present from a prior write
       """{"x":1,"owner":{"region":"emea"},"owner/region":"emea","id":"d1","_etag":"t"}""",
-      """{"id":"d2","owner":{"region":"emea"},"owner/region":"emea","x":3}"""
+      """{"id":"d2","owner":{"region":"emea"},"owner/region":"emea","x":3}""",
+      """{"id":"d9","owner":{"region":"emea"},"x":9}"""           // target-only: kept
     ).toDF("raw")
 
     val cls = RawMerge.classify(spark, src, tgt, Seq("/owner/region"))
     val hist = cls.groupBy("action").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(hist == Map("skip" -> 1L, "update" -> 1L, "insert" -> 1L, "error" -> 4L))
+    assert(hist == Map("skip" -> 1L, "update" -> 1L, "insert" -> 1L, "error" -> 5L))
 
     // reference injection: written docs carry the literal pk-path key
     val d3 = cls.where(col("__id") === "d3").head().getAs[String]("raw")
@@ -140,13 +142,15 @@ class RawMergeSpec extends AnyFunSuite {
     val again = RawMerge.classify(spark, src, merged, Seq("/owner/region"))
       .groupBy("action").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(again == Map("skip" -> 3L, "error" -> 4L))
+    assert(again == Map("skip" -> 3L, "error" -> 5L))
 
     // byte fidelity of the merged state: the skipped doc keeps the TARGET's
     // exact bytes; insert/update rows carry the source's injected bytes
     val mraw = merged.select("raw").collect().map(_.getString(0)).toSet
     assert(mraw.contains(
       """{"x":1,"owner":{"region":"emea"},"owner/region":"emea","id":"d1","_etag":"t"}"""))
+    // the reference never deletes: the target-only doc survives as stored
+    assert(mraw.size == 4 && mraw.contains("""{"id":"d9","owner":{"region":"emea"},"x":9}"""))
   }
 
   test("falsy ids (0, 0.0, false) classify as errors — migration.py:93 `if not item_id`") {

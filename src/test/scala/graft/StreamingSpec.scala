@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Merge
+import graft.operators.RawMerge
 import graft.streaming.Streams
 
 /** ST-1..ST-5 streaming tests (SURVEY.md §5.2 item 4): every streaming query
@@ -263,23 +263,19 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ST-5 foreachBatch incremental merge == full-refresh merge") {
-    val ev = rows.toDF().select(
+    def docLines(df: DataFrame): DataFrame = RawMerge.docLines(df.select(
       col("event_id").cast("string").as("id"),
       col("event_type").as("pk"),
-      col("value").cast("string").as("text"))
-    var state = ev.limit(0).collect().toSeq // driver-held tiny target fixture
+      col("value").cast("string").as("text")))
+    def merged(src: DataFrame, tgt: DataFrame): Seq[String] =
+      RawMerge.mergedState(spark, src, tgt, Seq("/pk")).select("raw").as[String]
+        .collect().toSeq
+    var state = Seq.empty[String] // driver-held tiny target fixture, raw lines
 
     val src = MemoryStream[Ev](spark)
     val q = src.toDF().writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select(
-          col("event_id").cast("string").as("id"),
-          col("event_type").as("pk"),
-          col("value").cast("string").as("text"))
-        val tgt = spark.createDataFrame(
-          spark.sparkContext.parallelize(state), b.schema)
-        state = Merge.merged(b, tgt, "id", Seq("pk"), Seq("text"))
-          .collect().toSeq
+        state = merged(docLines(batch), state.toDF("raw"))
         ()
       }.start()
     src.addData(rows.take(2)); q.processAllAvailable()
@@ -288,10 +284,8 @@ class StreamingSpec extends AnyFunSuite {
     src.addData(rows.take(2)); q.processAllAvailable()
     q.stop()
 
-    val incremental = state.map(_.toString).sorted
-    val fullRefresh = Merge.merged(ev, ev.limit(0), "id", Seq("pk"), Seq("text"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(incremental == fullRefresh)
+    val ev = docLines(rows.toDF())
+    assert(state.nonEmpty && state.sorted == merged(ev, ev.limit(0)).sorted)
   }
 
   test("ST-5 e2e: file source → foreachBatch raw upsert, checkpoint restart") {
