@@ -10,6 +10,10 @@ Reads the per-query rows out of BASELINE.md and a bench artifact
   - a query that recorded -1 (all bench runs errored);
   - a baseline row whose query no longer exists in the artifact.
 
+A probe artifact (`SPARK_GRAFT_BENCH_ONLY` set) carries its selection as
+"only": [...]; its audit reports GONE only for the baseline rows inside that
+selection. An artifact without "only" is a full run: every row is audited.
+
 Usage: python3 scripts/check_bench.py [bench_json] [baseline_md]
        (defaults: BENCH_RESULTS.json, BASELINE.md — the committed artifacts,
        so a bare run audits the repo as-is)
@@ -46,6 +50,11 @@ def main(bench_path: str = "BENCH_RESULTS.json",
             bench = json.loads(m.group(0))
     queries = bench["queries"]
     rows = baseline_rows(baseline_path)
+    expected = set(rows)
+    if "only" in bench:
+        expected &= set(bench["only"])
+        print(f"probe of {len(bench['only'])} selected queries: "
+              f"baseline rows outside the selection are not audited")
     bad = 0
     for name, secs in sorted(queries.items()):
         if secs < 0:
@@ -58,7 +67,7 @@ def main(bench_path: str = "BENCH_RESULTS.json",
         elif secs > 2 * rows[name]:
             print(f"SLOW   {name}: {secs:.2f}s > 2x row {rows[name]:.2f}s")
             bad += 1
-    for name in sorted(set(rows) - set(queries)):
+    for name in sorted(expected - set(queries)):
         print(f"GONE   {name}: baseline row exists but query not benched")
         bad += 1
     n = len(queries)

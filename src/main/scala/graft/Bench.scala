@@ -252,9 +252,13 @@ object Bench {
     // only where the diagnostics are persisted.
     val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+    // a probe's artifact names its selection, so the audit
+    // (scripts/check_bench.py) checks only those queries' baseline rows
+    val onlyField = only.fold("")(_ =>
+      selected.keys.toSeq.sorted.map("\"" + _ + "\"").mkString(""""only":[""", ",", "],"))
     val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""queries":$qs,"spread":$spread,"retried":$retr,""" +
-      s""""remeasured":$remeas,"errors":$errs,"sf":"$sfDir"}"""
+      s""""remeasured":$remeas,$onlyField"errors":$errs,"sf":"$sfDir"}"""
     // persist the full per-query record machine-readably so no round loses
     // data; a failed write must be VISIBLE (stderr), and fatal errors
     // propagate

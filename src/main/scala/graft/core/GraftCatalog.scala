@@ -416,26 +416,43 @@ final class StagedContainerTable(account: FileAccount, ident: Identifier,
     // STAGED `_errors` already, so when the destination exists the two
     // channels merge child-by-child (error part files carry job-unique
     // names; a pathological collision falls back to a disambiguated name
-    // rather than dropping history).
+    // rather than dropping history). Each carry rename is recorded: a
+    // refused swap leaves the old tree live, and Spark's abort then deletes
+    // the staged tree, so the carried history moves back first.
+    val carried = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def carry(from: String, to: String): Boolean = {
+      val ok = store.rename(from, to)
+      if (ok) carried += (from -> to)
+      ok
+    }
     Seq("_snapshots", "_errors").foreach { keep =>
       val src = new HPath(real, keep).toString
       val dst = new HPath(dir(stagedC), keep).toString
       if (store.isDirectory(src)) {
-        if (!store.isDirectory(dst)) { store.rename(src, dst); () }
+        if (!store.isDirectory(dst)) { carry(src, dst); () }
         else {
           val children = store.listFilePaths(src) ++
             store.listDirNames(src).map(new HPath(src, _).toString)
           children.foreach { child =>
             val name = new HPath(child).getName
-            if (!store.rename(child, new HPath(dst, name).toString)) {
-              store.rename(child,
-                new HPath(dst, s"pre-replace-$name").toString); ()
+            if (!carry(child, new HPath(dst, name).toString)) {
+              carry(child, new HPath(dst, s"pre-replace-$name").toString); ()
             }
           }
         }
       }
     }
-    store.swapDir(dir(stagedC), real)
+    try store.swapDir(dir(stagedC), real)
+    catch { case scala.util.control.NonFatal(e) =>
+      // only into a live tree: renaming into an absent one would create it
+      // and make the next heal drop the trash that holds the old table
+      if (store.isDirectory(real))
+        carried.reverseIterator.foreach { case (from, to) =>
+          try store.rename(to, from)
+          catch { case scala.util.control.NonFatal(r) => e.addSuppressed(r) }
+        }
+      throw e
+    }
   }
 
   override def abortStagedChanges(): Unit = {

@@ -2,23 +2,62 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated testdata tables (repo:TESTDATA.md /
   * repo:FIXTURES.md §1). One parquet file per table under the sf directory.
   *
   * The reference enumerates containers via its catalog
   * (/root/reference/src/containers.py:78-89); here the "catalog" is the fixed
-  * table set of the test star schema. All reads go through `spark.read.parquet`
-  * so Catalyst gets pushdown/pruning for free.
+  * table set of the test star schema. Every read is a parquet scan with an
+  * explicit schema (Catalyst keeps pushdown/pruning): [[load]] infers a
+  * table's schema once and reuses it while the table and the session's
+  * inference settings are unchanged, so a warm query starts no
+  * schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The SQL confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema")
+
+  /** At most this many inferred schemas are kept, least recently used
+    * dropped first: the ten tables of a few sf dirs plus test fixtures. */
+  private val SchemaMemoCap = 64
+
+  private val schemaMemo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, String, Seq[String]), StructType](
+      16, 0.75f, /*accessOrder=*/ true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String, Seq[String]), StructType]): Boolean =
+        size() > SchemaMemoCap
+    })
+
+  /** Read `<dir>/<name>.parquet`. Spark infers a parquet schema with a
+    * Spark job each time a DataFrame is built from bare paths; here the
+    * inferred schema is memoized and handed to the reader instead. The key
+    * is the path, its [[Artifact.fileFingerprint]] (names, sizes and mtimes
+    * of every file under it, so an overwrite or an append infers again) and
+    * the session's values of the inference confs above. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, Artifact.fileFingerprint(path),
+      InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+    Option(schemaMemo.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemaMemo.put(key, df.schema)
+        df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -29,30 +29,16 @@ import org.apache.spark.sql.types._
 case class PqEncode(child: Expression, codebook: Array[Array[Long]],
                     subspaces: Int) extends UnaryExpression {
 
-  // non-emptiness FIRST (ADVICE r10): `codebook.head` on an empty codebook
-  // would die with NoSuchElementException instead of the contract message
-  require(codebook.nonEmpty, "pq_encode: codebook must be non-empty")
-  private val dims = codebook.head.length
-  require(subspaces > 0 && dims % subspaces == 0 &&
-    codebook.forall(_.length == dims),
-    s"codebook must be rectangular with dims divisible by $subspaces")
+  private val dims = PqCodebook.dims("pq_encode", codebook, subspaces)
   private val sub = dims / subspaces
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    // BIGINT (the qSim13 quantized frame) or TINYINT (the durable
-    // `assignment_int8` serving lane, qSim14) — values are identical by
-    // the quantizer's range contract, so both encode to the same codes
-    case ArrayType(LongType, _) | ArrayType(ByteType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_encode expects ARRAY<BIGINT> or ARRAY<TINYINT>, got ${t.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    PqCodebook.checkInput("pq_encode", child.dataType)
 
-  @transient private lazy val isByte: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == ByteType
+  @transient private lazy val isByte: Boolean = PqCodebook.isByte(child.dataType)
 
   /** Flat row-major codebook (code × dim) — one JVM object per generated
     * class, indexed arithmetic in the fused loop. */
@@ -60,12 +46,7 @@ case class PqEncode(child: Expression, codebook: Array[Array[Long]],
 
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
-    // eval-time contract check (ADVICE r10): a short input must surface as
-    // the documented error, not a raw ArrayIndexOutOfBounds from the loop
-    if (arr.numElements() != dims)
-      throw new IllegalArgumentException(
-        s"pq_encode: input length ${arr.numElements()} != codebook " +
-          s"vector length $dims")
+    PqCodebook.checkLength("pq_encode", arr.numElements(), dims)
     val k = codebook.length
     val out = new Array[Int](subspaces)
     var m = 0
@@ -102,12 +83,7 @@ case class PqEncode(child: Expression, codebook: Array[Array[Long]],
       val j = ctx.freshName("j"); val d = ctx.freshName("d")
       val diff = ctx.freshName("diff")
       val bestC = ctx.freshName("bestC"); val bestD = ctx.freshName("bestD")
-      s"""
-         |if ($v.numElements() != $dims) {
-         |  throw new IllegalArgumentException(
-         |    "pq_encode: input length " + $v.numElements() +
-         |    " != codebook vector length " + $dims);
-         |}
+      s"""${PqCodebook.checkLengthCode("pq_encode", v, dims)}
          |int[] $out = new int[$subspaces];
          |for (int $m = 0; $m < $subspaces; $m++) {
          |  int $bestC = 0; long $bestD = Long.MAX_VALUE;
@@ -122,6 +98,138 @@ case class PqEncode(child: Expression, codebook: Array[Array[Long]],
          |  $out[$m] = $bestC;
          |}
          |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The codebook and input contract [[PqEncode]] and [[PqLut]] share. */
+private[functions] object PqCodebook {
+  /** Vector length of `codebook`: non-empty, rectangular, and split by
+    * `subspaces` into equal slices; `fn` names the kernel in the message. */
+  def dims(fn: String, codebook: Array[Array[Long]], subspaces: Int): Int = {
+    // non-emptiness FIRST (ADVICE r10): `codebook.head` on an empty codebook
+    // would die with NoSuchElementException instead of the contract message
+    require(codebook.nonEmpty, s"$fn: codebook must be non-empty")
+    val d = codebook.head.length
+    require(subspaces > 0 && d % subspaces == 0 && codebook.forall(_.length == d),
+      s"codebook must be rectangular with dims divisible by $subspaces")
+    d
+  }
+
+  /** BIGINT (the qSim13 quantized frame) or TINYINT (the durable
+    * `assignment_int8` serving lane, qSim14) input: values are identical by
+    * the quantizer's range contract, so both give the same result. */
+  def checkInput(fn: String, t: DataType): TypeCheckResult = t match {
+    case ArrayType(LongType, _) | ArrayType(ByteType, _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$fn expects ARRAY<BIGINT> or ARRAY<TINYINT>, got ${other.sql}")
+  }
+
+  def isByte(t: DataType): Boolean = t.asInstanceOf[ArrayType].elementType == ByteType
+
+  /** The eval-time length check (ADVICE r10): a short input surfaces as the
+    * documented error, not a raw ArrayIndexOutOfBounds from the loop. */
+  def checkLength(fn: String, n: Int, dims: Int): Unit =
+    if (n != dims) throw new IllegalArgumentException(
+      s"$fn: input length $n != codebook vector length $dims")
+
+  /** The same check as Java source for a generated loop over `v`. */
+  def checkLengthCode(fn: String, v: String, dims: Int): String =
+    s"""
+       |if ($v.numElements() != $dims) {
+       |  throw new IllegalArgumentException(
+       |    "$fn: input length " + $v.numElements() +
+       |    " != codebook vector length " + $dims);
+       |}""".stripMargin
+}
+
+/** Native PQ asymmetric-distance LOOKUP TABLE: per quantized probe vector
+  * `qq`, `lut[m][c]` = Σ_j qq[m·sub + j] · codebook[c][m·sub + j], the
+  * integer dot of the probe's m-th slice with code c's m-th slice, for
+  * every subspace m < `subspaces` and code c (`sub` = dims / subspaces).
+  * [[PqLutSum]] then scores a candidate as Σ_m lut[m][codes[m]].
+  *
+  * Identical to the HOF form PlanAuditSpec pins it to, `transform(sequence(0,
+  * subspaces-1), m -> transform(sequence(0, k-1), cc -> aggregate(sequence(1,
+  * sub), 0L, (acc, j) -> acc + CAST(element_at(qq, m*sub+j) AS BIGINT) *
+  * element_at(element_at(cb, cc+1), m*sub+j))))`, in exact BIGINT, but
+  * codegen'd: the HOF ran subspaces × k × sub interpreted lambda steps per
+  * probe row. Same discipline as [[PqEncode]]: the codebook is bound through
+  * `addReferenceObj` as a flat `long[]` (plan text stays O(1)), input is
+  * ARRAY<BIGINT> or ARRAY<TINYINT>, null input → null, and an input whose
+  * length differs from the codebook's vector length raises
+  * `pq_lut: input length N != codebook vector length D`. */
+case class PqLut(child: Expression, codebook: Array[Array[Long]],
+                 subspaces: Int) extends UnaryExpression {
+
+  private val dims = PqCodebook.dims("pq_lut", codebook, subspaces)
+  private val sub = dims / subspaces
+
+  override def dataType: DataType =
+    ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
+  override def nullable: Boolean = child.nullable
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    PqCodebook.checkInput("pq_lut", child.dataType)
+
+  @transient private lazy val isByte: Boolean = PqCodebook.isByte(child.dataType)
+  @transient private lazy val flat: Array[Long] = codebook.flatten
+
+  override def nullSafeEval(v: Any): Any = {
+    val arr = v.asInstanceOf[ArrayData]
+    PqCodebook.checkLength("pq_lut", arr.numElements(), dims)
+    val k = codebook.length
+    val rows = new Array[Any](subspaces)
+    var m = 0
+    while (m < subspaces) {
+      val row = new Array[Long](k)
+      var c = 0
+      while (c < k) {
+        var d = 0L
+        var j = 0
+        while (j < sub) {
+          val x = if (isByte) arr.getByte(m * sub + j).toLong
+                  else arr.getLong(m * sub + j)
+          d += x * flat(c * dims + m * sub + j)
+          j += 1
+        }
+        row(c) = d
+        c += 1
+      }
+      rows(m) = UnsafeArrayData.fromPrimitiveArray(row)
+      m += 1
+    }
+    new GenericArrayData(rows)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("pqCodebook", flat, "long[]")
+    val k = codebook.length
+    val get = if (isByte) "getByte" else "getLong"
+    nullSafeCodeGen(ctx, ev, v => {
+      val rows = ctx.freshName("lutRows"); val row = ctx.freshName("lutRow")
+      val m = ctx.freshName("m"); val c = ctx.freshName("c")
+      val j = ctx.freshName("j"); val d = ctx.freshName("d")
+      s"""${PqCodebook.checkLengthCode("pq_lut", v, dims)}
+         |Object[] $rows = new Object[$subspaces];
+         |for (int $m = 0; $m < $subspaces; $m++) {
+         |  long[] $row = new long[$k];
+         |  for (int $c = 0; $c < $k; $c++) {
+         |    long $d = 0L;
+         |    for (int $j = 0; $j < $sub; $j++) {
+         |      $d += (long) $v.$get($m * $sub + $j) * $cb[$c * $dims + $m * $sub + $j];
+         |    }
+         |    $row[$c] = $d;
+         |  }
+         |  $rows[$m] = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |    .fromPrimitiveArray($row);
+         |}
+         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($rows);
        """.stripMargin
     })
   }
@@ -208,9 +316,8 @@ case class IntDot(left: Expression, right: Expression) extends BinaryExpression 
   * element_at(element_at(lut, m+1), CAST(element_at(codes, m+1) + 1 AS
   * INT)))`, but codegen'd: 8 array reads per candidate instead of 8
   * interpreted lambda rounds (each building a sequence iterator and boxing
-  * every index). The LUT build itself stays a HOF — it runs once per
-  * PROBE row, not per candidate. Null if either side is null; the code
-  * count must match the LUT's subspace count. */
+  * every index). The LUT it reads is built by [[PqLut]]. Null if either
+  * side is null; the code count must match the LUT's subspace count. */
 case class PqLutSum(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = LongType

@@ -501,7 +501,7 @@ object Similarity {
       * 8×16 (the [[Similarity.qSim13]] recipe over the index's OWN int8
       * lane — the [[graft.functions.PqEncode]] codegen'd argmin, codes
       * directly off the durable TINYINT assignment); each probe builds
-      * its 8×16 LUT once (probe-count rows, HOF is fine there) and every
+      * its 8×16 LUT once ([[graft.functions.PqLut]]) and every
       * candidate costs 8 table lookups — at 100 TB the candidate read is
       * 8 bytes of codes instead of 64 floats, the memory-bandwidth
       * endgame of the int8 lane's 4× (this is 32×). Exact ranking order:
@@ -515,24 +515,18 @@ object Similarity {
         org.apache.spark.sql.GraftColumn.of(graft.functions.PqEncode(
           org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("qv"),
           cb, 8)).as("codes"))
-      val cbCol = typedLit(cb.map(_.toSeq).toSeq)
       val probes = Tables.embeddings(s, dir).where(col("vec_id") < 10)
         .selectExpr("vec_id AS q_id",
           quantizeExpr("embedding", idx.scale) + " AS qq",
           s"explode(${idx.fn}(embedding, $nprobe)) AS cell")
-        .withColumn("cb", cbCol)
-        .selectExpr("q_id", "cell",
-          """transform(sequence(0, 7), m ->
-            |  transform(sequence(0, 15), cc ->
-            |    aggregate(sequence(1, 8), 0L, (acc, j) ->
-            |      acc + CAST(element_at(qq, m*8+j) AS BIGINT)
-            |          * element_at(element_at(cb, cc+1), m*8+j)))) AS lut""".stripMargin)
+        .select(col("q_id"), col("cell"),
+          org.apache.spark.sql.GraftColumn.of(graft.functions.PqLut(
+            org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("qq"),
+            cb, 8)).as("lut"))
       val w = Window.partitionBy("q_id").orderBy(desc("adot"), col("n_id"))
       broadcast(probes).join(codes, "cell")
         .where(col("n_id") =!= col("q_id"))
-        // pq_lut_sum == the aggregate/element_at fold, codegen'd — this is
-        // the per-CANDIDATE ADC loop (the LUT build above stays a HOF: it
-        // runs once per probe row only)
+        // the per-CANDIDATE ADC loop: 8 lookups into the probe's LUT
         .withColumn("adot", expr("pq_lut_sum(lut, codes)"))
         .withColumn("rank", row_number().over(w))
         .where(col("rank") <= topK)
@@ -1344,12 +1338,12 @@ object Similarity {
     * exact BIGINT, rankings tiebreak on n_id.
     *
     * Scale: the codebook is 16×64 BIGINTs of driver metadata (bounded
-    * collect, the qSim7 pattern) bound as a LITERAL, so ENCODING IS
+    * collect, the qSim7 pattern) bound into the kernels, so ENCODING IS
     * MAP-ONLY — the corpus streams once, no join, no shuffle; each probe
-    * computes its 8×16 LUT inside its own row; scoring is the qSim1
-    * broadcast shape where the corpus side carries 8 codes instead of 64
-    * floats, and ADC is 8 array lookups per candidate instead of 64
-    * multiplies. */
+    * computes its 8×16 LUT inside its own row ([[graft.functions.PqLut]]);
+    * scoring is the qSim1 broadcast shape where the corpus side carries 8
+    * codes instead of 64 floats, and ADC is 8 array lookups per candidate
+    * instead of 64 multiplies. */
   def qSim13(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
@@ -1365,7 +1359,6 @@ object Similarity {
       // codebook: the 16 int8 seed vectors — bounded driver metadata
       val cb: Array[Array[Long]] = qz.where(col("vec_id") < 16).orderBy("vec_id")
         .select("qv").collect().map(_.getSeq[Long](0).toArray)
-      val cbCol = typedLit(cb.map(_.toSeq).toSeq)
       val w = Window.partitionBy("q_id")
       // ROUND-20 (guide §2.4, the q_sim22 lesson): the three rankings —
       // ADC, float-cosine truth, int8 exact — were three separate
@@ -1385,12 +1378,10 @@ object Similarity {
         e.where(col("vec_id") < 10).crossJoin(broadcast(mx))
           .selectExpr("vec_id AS q_id", "embedding AS eq",
             "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127.0 / mx + 0.5) AS BIGINT)) AS qq")
-          .withColumn("cb", cbCol)
-          .selectExpr("q_id", "eq", "qq",
-            """transform(sequence(0, 7), m ->
-              |  transform(sequence(0, 15), cc ->
-              |    aggregate(sequence(1, 8), 0L, (acc, j) ->
-              |      acc + element_at(qq, m*8+j) * element_at(element_at(cb, cc+1), m*8+j)))) AS lut""".stripMargin))
+          .select(col("q_id"), col("eq"), col("qq"),
+            org.apache.spark.sql.GraftColumn.of(graft.functions.PqLut(
+              org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("qq"),
+              cb, 8)).as("lut")))
       val corpusSide = e.crossJoin(broadcast(mx))
         .selectExpr("vec_id AS n_id", "embedding AS en",
           "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127.0 / mx + 0.5) AS BIGINT)) AS qn")
@@ -1401,8 +1392,7 @@ object Similarity {
       val scored = probeSide
         .join(corpusSide, col("q_id") =!= col("n_id"))
         .selectExpr("q_id", "n_id",
-          "aggregate(sequence(0, 7), 0L, (acc, m) -> " +
-            "acc + element_at(element_at(lut, m+1), CAST(element_at(codes, m+1) + 1 AS INT))) AS adot",
+          "pq_lut_sum(lut, codes) AS adot",
           "cosine_sim(eq, en) AS sim",
           "int_dot(qq, qn) AS dot")
       scored

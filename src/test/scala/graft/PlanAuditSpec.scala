@@ -200,6 +200,75 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(ok == Seq(1, 1))
   }
 
+  test("pq_lut / pq_lut_sum match their HOF formulations on TINYINT and BIGINT input and stay in codegen") {
+    import org.apache.spark.sql.{DataFrame, GraftColumn}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.functions.{col, typedLit}
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val rnd = new scala.util.Random(20261019L)
+    def vec(): Seq[Long] = Seq.fill(64)((rnd.nextInt(255) - 127).toLong)
+    val cb: Array[Array[Long]] = Array.fill(16)(vec().toArray)
+    // materialized below the kernels (the probe shape: the quantize HOF runs
+    // upstream), so projection collapse cannot pull a lambda into their node
+    val base = (0 until 40).map(i => (i.toLong, vec(), Seq.fill(8)(rnd.nextInt(16))))
+      .toDF("id", "qv", "codes")
+      .selectExpr("id", "qv", "transform(qv, x -> CAST(x AS TINYINT)) AS qb", "codes")
+      .localCheckpoint(true)
+    def lut(input: String) = GraftColumn.of(
+      graft.functions.PqLut(UnresolvedAttribute(input), cb, 8)).as("lut")
+    def luts(df: DataFrame): Seq[(Long, Seq[Seq[Long]])] =
+      df.orderBy("id").collect().map(r => r.getLong(0) -> r.getSeq[Seq[Long]](1)).toSeq
+    val hof = base.withColumn("cb", typedLit(cb.map(_.toSeq).toSeq)).selectExpr("id",
+      """transform(sequence(0, 7), m ->
+        |  transform(sequence(0, 15), cc ->
+        |    aggregate(sequence(1, 8), 0L, (acc, j) ->
+        |      acc + CAST(element_at(qv, m*8+j) AS BIGINT)
+        |          * element_at(element_at(cb, cc+1), m*8+j)))) AS lut""".stripMargin)
+    val expected = luts(hof)
+    for (input <- Seq("qv", "qb")) {
+      val native = base.select(col("id"), lut(input))
+      assert(luts(native) == expected, s"PqLut over $input must replay the HOF LUT exactly")
+      val plan = native.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains("pqlut") && l.contains("*(")),
+        s"PqLut fell out of codegen:\n$plan")
+    }
+    // pq_lut_sum against the aggregate/element_at fold it replaced
+    val withLut = base.select(col("id"), lut("qv"), col("codes")).localCheckpoint(true)
+    val sums = (df: DataFrame) =>
+      df.orderBy("id").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    val ns = withLut.selectExpr("id", "pq_lut_sum(lut, codes) AS s")
+    val hs = withLut.selectExpr("id", "aggregate(sequence(0, 7), 0L, (acc, m) -> " +
+      "acc + element_at(element_at(lut, m+1), CAST(element_at(codes, m+1) + 1 AS INT))) AS s")
+    assert(sums(ns) == sums(hs), "PqLutSum must replay the aggregate fold exactly")
+    val splan = ns.queryExecution.executedPlan.toString
+    assert(splan.linesIterator.exists(l => l.contains("pqlutsum") && l.contains("*(")),
+      s"PqLutSum fell out of codegen:\n$splan")
+  }
+
+  test("pq_lut contract error: a wrong-length input, interpreted and codegen'd") {
+    import org.apache.spark.sql.GraftColumn
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import spark.implicits._
+    val cb = Array(Array(0L, 0L, 0L, 0L), Array(1L, 1L, 1L, 1L))
+    val message = "pq_lut: input length 2 != codebook vector length 4"
+    val interpreted = intercept[IllegalArgumentException] {
+      graft.functions.PqLut(Literal.create(Seq(1L, 2L), ArrayType(LongType)), cb, 2).eval()
+    }
+    assert(interpreted.getMessage == message)
+    val thrown = intercept[Throwable] {
+      Seq((1L, Seq(1L, 2L))).toDF("id", "qq").localCheckpoint(true)
+        .select(GraftColumn.of(graft.functions.PqLut(UnresolvedAttribute("qq"), cb, 2)))
+        .collect()
+    }
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Seq.empty else t +: chain(t.getCause)
+    assert(chain(thrown).exists(c => c.getMessage != null && c.getMessage.contains(message)),
+      s"expected the contract message in: ${chain(thrown).map(_.getMessage)}")
+  }
+
   test("lsh_band_sig matches the HOF formulation bit-for-bit and stays in codegen") {
     import org.apache.spark.sql.functions._
     graft.functions.GraftFunctions.register(spark)

@@ -488,4 +488,24 @@ class StorageSpec extends AnyFunSuite {
     assert(names(local.resolve("db")) == Set("t"), names(local.resolve("db")).toString)
     assert(spark.sql("SHOW TABLES IN graftsfr.db").collect().map(_.getString(1)).toSeq == Seq("t"))
   }
+
+  test("an RTAS whose swap rename is refused keeps the table's snapshots") {
+    val (root, _) = swapFaultRoot("swap-rtas-history")
+    spark.conf.set("spark.sql.catalog.graftsfh", classOf[graft.core.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftsfh.root", root)
+    spark.sql("CREATE NAMESPACE graftsfh.db")
+    spark.sql("CREATE TABLE graftsfh.db.t (raw STRING) TBLPROPERTIES ('pk'='/id', 'buckets'='2')")
+    val doc = """{"id":"d0","v":0}"""
+    spark.sql(s"INSERT INTO graftsfh.db.t VALUES ('$doc')")
+    val acct = FileAccount(root)
+    acct.snapshotContainer("db", "t", "v1")
+
+    intercept[Exception](SwapFaultFs.armed(n => if (n.startsWith("_rtas-t-")) Some(false) else None) {
+      spark.sql("REPLACE TABLE graftsfh.db.t TBLPROPERTIES ('pk'='/id', 'buckets'='2') " +
+        """AS SELECT '{"id":"new","v":1}' AS raw""")
+    })
+    assert(acct.listSnapshots("db", "t").map(_.tag) == Seq("v1"),
+      "a refused swap must leave the table's published snapshots in place")
+    assert(spark.sql("SELECT raw FROM graftsfh.db.t").collect().map(_.getString(0)).toSeq == Seq(doc))
+  }
 }
