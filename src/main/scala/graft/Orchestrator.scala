@@ -22,11 +22,15 @@ import graft.core.{ContainerMerge, FileAccount}
   * migration.py:124-130), then verify. Counters, the expected state and
   * the rewrite set come from one aggregation over the classified frame (the
   * reference increments Python ints per document, migration.py:130-146). Corrupt or
-  * invalid documents land in the error counter and a per-container
-  * dead-letter file (A13) — never a task failure; `maxErrors` bounds how
-  * many before the container aborts. Verification fixes the reference's B5
-  * wart: count parity AND an order-independent content hash, not counts
-  * alone.
+  * invalid documents land in the error counter and the per-container
+  * dead-letter channel `_errors` (A13) — never a task failure; `maxErrors`
+  * bounds how many before the container aborts. Like the reference's
+  * per-document error write, the dead-letter costs no Spark job: the tally
+  * collect carries the error lines up to a declared bound (256 lines of at
+  * most 16 KiB each) and the driver writes them as one file, replacing
+  * the channel's earlier files; past the bound one text write job lands
+  * them. Verification fixes the reference's B5 wart: count parity AND an
+  * order-independent content hash, not counts alone.
   *
   * Duplicate keys: Cosmos holds one document per `(id, pk)`, so of several
   * source lines for one merge key ONE is merged — the line from the
@@ -78,7 +82,17 @@ object Orchestrator {
     database: String, container: String,
     inserted: Long, updated: Long, skipped: Long, errors: Long,
     sourceCount: Long, targetCount: Long, verified: Boolean,
-    verifyMode: String = "full")
+    verifyMode: String = "full", phases: PhaseMs = PhaseMs())
+
+  /** Driver wall milliseconds of one container run's phases, read off
+    * `System.nanoTime` (no Spark job): `key` — everything before the
+    * tally: the container set-up, the target listing, keying the source
+    * and planning the merge, the pruned read's bucket collect included;
+    * `classifyTally` — the tally collect over the classified frame;
+    * `deadletter`; `sink`; `verify` — the post-commit listing and the
+    * checks. */
+  case class PhaseMs(key: Double = 0, classifyTally: Double = 0,
+                     deadletter: Double = 0, sink: Double = 0, verify: Double = 0)
 
   case class Summary(results: Seq[ContainerResult], durationSec: Double) {
     def ok: Boolean = results.forall(_.verified)
@@ -98,6 +112,14 @@ object Orchestrator {
   def migrateContainer(spark: SparkSession, source: FileAccount,
                        target: FileAccount, db: String, container: String,
                        cfg: Config): ContainerResult = {
+    // phase timer: milliseconds since the previous lap
+    var mark = System.nanoTime()
+    def lap(): Double = {
+      val now = System.nanoTime()
+      val ms = (now - mark) / 1e6
+      mark = now
+      ms
+    }
     val props = source.containerProperties(db, container)
     target.createDatabaseIfAbsent(db)
     target.createContainerIfAbsent(db, container, props)
@@ -105,18 +127,15 @@ object Orchestrator {
       target.containerProperties(db, container).pkPaths, db, container)
     val pkPaths = props.pkPaths
 
+    // one walk of the target tree before the sink: the mode rule's bytes,
+    // the pre-merge bucket signatures and the pruned read's dirs and strays
+    val pre = target.listData(db, container)
     // Incremental mode (the point-read analogue): when the source delta is
     // small against a large target, read — and canonical-hash, and verify —
     // only the bucket directories the source keys hash to. Classification is
     // unaffected: a matching target row always lives in its key's bucket.
-    val incremental = target.hasData(db, container) && cfg.incremental.getOrElse(
-      source.dataBytes(db, container) * 4 <= target.dataBytes(db, container))
-    // incremental mode: capture the pre-merge listing signatures (driver
-    // metadata, no data read) so verification can prove the unaffected
-    // buckets were untouched — this replaces the full-container line count
-    // the old count-parity invariant needed
-    val preSigs: Map[Long, String] =
-      if (incremental) target.bucketSignatures(db, container) else Map.empty
+    val incremental = pre.exists && cfg.incremental.getOrElse(
+      source.dataBytes(db, container) * 4 <= pre.bytes)
     // ONE full-outer src⋈tgt join for the whole container run: counters,
     // dead-letter, the expected post-merge state AND the sink input all
     // derive from this cached frame — it holds every target row of the
@@ -125,40 +144,40 @@ object Orchestrator {
     val keyed = ContainerMerge.key(spark, source.readRaw(spark, db, container)
       .withColumn("__f", input_file_name()), pkPaths, Some("__f"))
     val plan = ContainerMerge.plan(spark, target, db, container, keyed,
-      pkPaths, Some("__f"), prune = incremental, sanitize = cfg.sanitize)
+      pkPaths, Some("__f"), prune = incremental, sanitize = cfg.sanitize,
+      listing = Some(pre))
+    val keyMs = lap()
     plan.classified.cache()
-    // one collect: counters, source count, expected state, rewrite set and
-    // its sidecar counts; the frame is released however the span ends
-    val tally = try {
+    // one collect: counters, source count, expected state, rewrite set, its
+    // sidecar counts and the dead-letter lines; the frame is released
+    // however the span ends
+    var tallyMs, deadMs, sinkMs = 0.0
+    val (tally, sunk) = try {
       val t = ContainerMerge.Tally.of(plan.tally.collect())
+      tallyMs = lap()
       val errors = t.actions("error")
 
       // A13 dead-letter: corrupt/invalid documents land next to the data,
       // and the run aborts only past the configured bound
-      if (errors > 0)
-        plan.errors.write.mode("overwrite").text(target.errorsPath(db, container))
+      ContainerMerge.deadLetter(target, db, container, errors, t.dead,
+        plan.errors, overwrite = true)
+      deadMs = lap()
       require(errors <= cfg.maxErrors,
         s"$db/$container: $errors error documents exceed maxErrors=${cfg.maxErrors}")
 
       // A11/A12: only buckets with an insert, an update, a stray or a
       // duplicate key are rewritten (write elision for skips)
-      target.upsertRaw(spark, db, container, plan.rows(t), t.rewrite, plan.strays)
-      t
+      val sunk = target.upsertRaw(spark, db, container, plan.rows(t), t.rewrite,
+        plan.strays, listAfter = true)
+      sinkMs = lap()
+      (t, sunk)
     } finally { plan.classified.unpersist(); () }
     val counts = tally.actions
 
     // A15 + B5 fix: count parity and content-hash parity of what landed vs
     // the intended merged state (byte-level: the raw lines themselves). The
     // expected side came with the tally, BEFORE the sink mutated the
-    // target; the landed side is one aggregation per check — a single pass
-    // over a container re-read. bit_xor, not sum: ANSI mode errors on
-    // 64-bit hash-sum overflow
-    def stateStats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val r = df.select(xxhash64(col("raw")).as("h"))
-        .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
+    // target; the landed side is one pass over a container re-read
     val (verified, targetCount, verifyMode) = plan.pruned match {
       case Some(buckets) =>
         // incremental verify, O(delta + affected buckets) — no full scan:
@@ -171,16 +190,19 @@ object Orchestrator {
         // Together these imply the old global invariant post = pre + inserts
         // without re-reading the container. The reported targetCount is the
         // sidecar sum (upsertRaw maintains per-bucket counts) — metadata,
-        // not a scan.
-        val back = target.readRawBuckets(spark, db, container, buckets)
-        val postSigs = target.bucketSignatures(db, container)
+        // not a scan. One walk after the commit (the sink's, or one here
+        // when it wrote nothing) feeds the read, the signatures and the
+        // sidecar vouching.
+        val post = sunk.getOrElse(target.listData(db, container))
+        val back = target.readRawBuckets(spark, db, container, buckets, Some(post))
+        val (preSigs, postSigs) = (pre.signatures, post.signatures)
         val untouched =
           (postSigs.keySet -- buckets) == (preSigs.keySet -- buckets) &&
             (postSigs.keySet -- buckets).forall(b => postSigs(b) == preSigs(b))
         val (backCount, backHash) = stateStats(back)
         val ok = backCount == tally.expectedCount &&
           backHash == tally.expectedHash && untouched
-        (ok, target.countRows(spark, db, container), "incremental")
+        (ok, target.countRows(spark, db, container, post), "incremental")
       case None =>
         val (writtenCount, writtenHash) = stateStats(
           target.readRaw(spark, db, container))
@@ -193,7 +215,23 @@ object Orchestrator {
     // row (`__n`), so the source count is free — no extra scan
     ContainerResult(db, container,
       counts("insert"), counts("update"), counts("skip"), counts("error"),
-      tally.sourceCount, targetCount, verified, verifyMode)
+      tally.sourceCount, targetCount, verified, verifyMode,
+      PhaseMs(keyMs, tallyMs, deadMs, sinkMs, lap()))
+  }
+
+  /** Row count and `bit_xor(xxhash64(raw))` of a raw-lines frame in ONE
+    * job with no exchange: each partition folds its rows to one
+    * (count, xor) pair and the driver folds the pairs (a collect of one
+    * pair per partition). XOR, not a sum: order-independent and free of
+    * 64-bit overflow. */
+  private def stateStats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    import df.sparkSession.implicits._
+    df.select(xxhash64(col("raw"))).as[Long].mapPartitions { hs =>
+      var n = 0L
+      var x = 0L
+      hs.foreach { h => n += 1; x ^= h }
+      Iterator((n, x))
+    }.collect().foldLeft((0L, 0L)) { case ((n, x), (pn, px)) => (n + pn, x ^ px) }
   }
 
   /** A26 top loop with scoping; `--container` requires `--database`
@@ -285,14 +323,18 @@ object Orchestrator {
   private def jsonString(v: String): String = "\"" + new String(
     com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
 
-  /** A25: nested JSON run report (main.py:154-160); names are escaped. */
+  /** A25: nested JSON run report (main.py:154-160); names are escaped.
+    * Each container also reports its [[PhaseMs]] as `phase_ms`. */
   def writeSummary(s: Summary, path: String): Unit = {
     val rows = s.results.map { r =>
       s"""    {"database": ${jsonString(r.database)}, "container": ${jsonString(r.container)},
          |     "inserted": ${r.inserted}, "updated": ${r.updated},
          |     "skipped": ${r.skipped}, "errors": ${r.errors},
          |     "source_count": ${r.sourceCount}, "target_count": ${r.targetCount},
-         |     "verified": ${r.verified}, "verify_mode": "${r.verifyMode}"}""".stripMargin
+         |     "verified": ${r.verified}, "verify_mode": "${r.verifyMode}",
+         |     "phase_ms": {"key": ${r.phases.key}, "classify_tally": ${r.phases.classifyTally},
+         |       "deadletter": ${r.phases.deadletter}, "sink": ${r.phases.sink},
+         |       "verify": ${r.phases.verify}}}""".stripMargin
     }.mkString(",\n")
     graft.core.Storage.hadoop.writeString(path,
       s"""{\n  "duration_sec": ${s.durationSec},\n  "rate_docs_per_sec": ${s.ratePerSec},\n  "ok": ${s.ok},\n  "containers": [\n$rows\n  ]\n}\n""")

@@ -28,6 +28,57 @@ final case class CompactionStats(buckets: Set[Long], filesBefore: Long,
 final case class SnapshotInfo(tag: String, createdMs: Long,
                               files: Long, bytes: Long)
 
+/** One walk of a container's `data/` tree ([[FileAccount.listData]]);
+  * `tree` is None when there is no `data/`. A migrate call lists its
+  * target once before the sink and once after it, and reads the mode
+  * rule's bytes, the bucket dirs, their signatures and the strays off those
+  * two listings instead of walking the tree per bucket. */
+final case class DataListing(dataDir: String, tree: Option[FileTree]) {
+  private def files: Seq[FileMeta] = tree.fold(Seq.empty[FileMeta])(_.files)
+  def exists: Boolean = tree.isDefined
+  /** Bytes of every file under `data/`, hidden ones included. */
+  def bytes: Long = files.map(_.size).sum
+  /** The buckets that have a `b=<k>` directory. */
+  lazy val buckets: Set[Long] =
+    tree.fold(Set.empty[Long])(_.dirs.flatMap(DataListing.bucketId).toSet)
+  /** Visible files directly under `data/`: strays. */
+  def strays: Seq[String] = files.map(_.relPath)
+    .filter(r => !r.contains('/') && !Storage.hidden(r))
+    .map(r => new HPath(dataDir, r).toString)
+  /** The listing signature of every bucket directory. */
+  lazy val signatures: Map[Long, String] = {
+    val inBucket = files.flatMap { f =>
+      val i = f.relPath.indexOf('/')
+      if (i < 0) None
+      else DataListing.bucketId(f.relPath.take(i))
+        .map(_ -> f.copy(relPath = f.relPath.drop(i + 1)))
+    }.groupMap(_._1)(_._2)
+    buckets.iterator.map(b => b -> DataListing.signature(inBucket.getOrElse(b, Nil))).toMap
+  }
+}
+
+object DataListing {
+  private val BucketName = "b=(\\d+)".r
+
+  /** The bucket id of a `b=<k>` directory name. */
+  def bucketId(name: String): Option[Long] = name match {
+    case BucketName(k) => Some(k.toLong)
+    case _ => None
+  }
+
+  /** Listing signature of one bucket directory's files (paths relative to
+    * it): md5 over the sorted (name, size, mtime) triples of its data
+    * files. The filter matches what Spark's readers scan: hidden
+    * ("."-prefixed, e.g. local-FS .crc sidecars) and "_"-prefixed files
+    * are invisible to the data path, so they do not enter it either. */
+  def signature(files: Seq[FileMeta]): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(files.filterNot(f => Storage.hidden(f.relPath))
+        .map(f => s"${f.relPath}:${f.size}:${f.mtimeMs}").sorted
+        .mkString(";").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+}
+
 /** Outcome of one [[FileAccount.distinctKeys]] pass. */
 final case class DistinctStats(estimate: Long, buckets: Int,
                                vouched: Int, resketched: Int)
@@ -161,6 +212,27 @@ case class FileAccount(root: String) {
   def errorsPath(db: String, container: String): String =
     p(db, container, "_errors")
 
+  /** Land dead-letter `lines` in `_errors` as one new file, with no Spark
+    * job: written under a hidden name, then renamed to a unique visible
+    * `part-<uuid>.txt`, so no reader sees a partial file. With `replace`
+    * the channel's other visible files are deleted after the rename. */
+  private[core] def writeErrors(db: String, container: String, lines: Seq[String],
+                  replace: Boolean): Unit = {
+    val dir = errorsPath(db, container)
+    val name = s"part-${java.util.UUID.randomUUID()}.txt"
+    val tmp = new HPath(dir, s".$name").toString
+    store.writeString(tmp, lines.map(_ + "\n").mkString)
+    if (!store.rename(tmp, new HPath(dir, name).toString)) {
+      store.delete(tmp)
+      throw new IllegalStateException(s"dead-letter publish failed: $tmp -> $name")
+    }
+    if (replace)
+      store.listFilePaths(dir).filter { f =>
+        val n = new HPath(f).getName
+        n != name && !Storage.hidden(n)
+      }.foreach(store.delete(_))
+  }
+
   /** Staging directory for one SQL/streaming write (inside the container,
     * `_`-prefixed so scans and signature walks never see it). */
   def stagingPath(db: String, container: String, writeId: String): String =
@@ -227,6 +299,12 @@ case class FileAccount(root: String) {
     * metadata, used to pick full vs incremental merge mode. */
   def dataBytes(db: String, container: String): Long =
     store.walk(p(db, container, "data")).map(_.size).sum
+
+  /** One walk of the container's data tree ([[DataListing]]). */
+  private[graft] def listData(db: String, container: String): DataListing = {
+    val dir = dataDir(db, container)
+    DataListing(dir, store.tree(dir))
+  }
 
   /** Bucket compaction (the engine's OPTIMIZE): every incremental upsert
     * rewrites its affected buckets with FRESH part files sized by the
@@ -684,13 +762,8 @@ case class FileAccount(root: String) {
   /** Existing `data/b=<k>` bucket directories (id → path). */
   private[graft] def bucketDirList(db: String, container: String): Seq[(Long, String)] = {
     val d = dataDir(db, container)
-    store.listDirNames(d).flatMap { name =>
-      "b=(\\d+)".r.findFirstMatchIn(name) match {
-        case Some(m) if s"b=${m.group(1)}" == name =>
-          Some(m.group(1).toLong -> new HPath(d, name).toString)
-        case _ => None
-      }
-    }.sortBy(_._1)
+    store.listDirNames(d).flatMap(name =>
+      DataListing.bucketId(name).map(_ -> new HPath(d, name).toString)).sortBy(_._1)
   }
 
   /** Driver-metadata listing signature of one bucket directory: md5 over the
@@ -703,25 +776,15 @@ case class FileAccount(root: String) {
     * makes it for cache validity); a deployment that needs stronger vouching
     * should version files instead of rewriting them in place — which is what
     * the upsert sink does (fresh part files per rewrite). */
-  private def dirSignature(dir: String): String = {
-    // filter matches what Spark's readers scan: hidden ("."-prefixed, e.g.
-    // local-FS .crc sidecars) and "_"-prefixed files are invisible to the
-    // data path, so they must not enter the vouching signature either
-    val parts = store.walk(dir)
-      .filterNot(f => Storage.hidden(f.relPath))
-      .map(f => s"${f.relPath}:${f.size}:${f.mtimeMs}")
-      .sorted
-    if (parts.isEmpty && !store.isDirectory(dir)) return ""
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.mkString(";").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
+  private def dirSignature(dir: String): String =
+    store.tree(dir).fold("")(t => DataListing.signature(t.files))
 
-  /** Listing signatures of every bucket directory — pure driver metadata.
-    * Used by incremental verification to prove unaffected buckets were left
-    * byte-for-byte untouched, without scanning them. */
+  /** Listing signatures of every bucket directory — pure driver metadata,
+    * one walk of the data tree. Used by incremental verification to prove
+    * unaffected buckets were left byte-for-byte untouched, without
+    * scanning them. */
   def bucketSignatures(db: String, container: String): Map[Long, String] =
-    bucketDirList(db, container).map { case (b, dir) => b -> dirSignature(dir) }.toMap
+    listData(db, container).signatures
 
   /** Sidecar entries: bucket → (rowCount, listing signature at write time). */
   private[graft] def readBucketCounts(db: String, container: String): Map[Long, (Long, String)] = {
@@ -749,12 +812,12 @@ case class FileAccount(root: String) {
     * This is the `SELECT count(*)` fast path: at 100 TB the difference
     * between a listing walk and reading every byte of the container. */
   def metadataRowCount(db: String, container: String): Option[Long] = {
-    if (strayFiles(db, container).nonEmpty) return None
+    val listing = listData(db, container)
+    if (listing.strays.nonEmpty) return None
     val sidecar = readBucketCounts(db, container)
-    val dirs = bucketDirList(db, container)
-    val allVouched = dirs.forall { case (b, dir) =>
-      sidecar.get(b).exists(_._2 == dirSignature(dir)) }
-    if (allVouched) Some(dirs.map { case (b, _) => sidecar(b)._1 }.sum)
+    val sigs = listing.signatures
+    if (sigs.forall { case (b, sig) => sidecar.get(b).exists(_._2 == sig) })
+      Some(sigs.keys.toSeq.map(sidecar(_)._1).sum)
     else None
   }
 
@@ -763,19 +826,25 @@ case class FileAccount(root: String) {
     * count for free; buckets the sidecar can't vouch for (external writes,
     * missing sidecar) are scanned — and only those — plus any stray files.
     * Self-healing: recounted buckets are written back to the sidecar. */
-  def countRows(spark: SparkSession, db: String, container: String): Long = {
+  def countRows(spark: SparkSession, db: String, container: String): Long =
+    countRows(spark, db, container, listData(db, container))
+
+  /** [[countRows]] off a `listing` of the data tree taken since its last
+    * write: the listing's signatures vouch the sidecar and name the
+    * strays, so no walk of its own. */
+  private[graft] def countRows(spark: SparkSession, db: String, container: String,
+                               listing: DataListing): Long = {
     val sidecar = readBucketCounts(db, container)
-    val dirs = bucketDirList(db, container)
-    val sigs = dirs.map { case (b, dir) => b -> dirSignature(dir) }.toMap
-    val (vouched, unvouched) = dirs.partition { case (b, _) =>
-      sidecar.get(b).exists(_._2 == sigs(b)) }
-    val vouchedSum = vouched.map { case (b, _) => sidecar(b)._1 }.sum
+    val sigs = listing.signatures
+    val (vouched, unvouched) = sigs.keys.toSeq.sorted.partition(b =>
+      sidecar.get(b).exists(_._2 == sigs(b)))
+    val vouchedSum = vouched.map(sidecar(_)._1).sum
     val recounted: Map[Long, Long] =
       if (unvouched.isEmpty) Map.empty
       else {
-        val perBucket = unvouched.map { case (b, dir) =>
+        val perBucket = unvouched.map { b =>
           b -> spark.read.option("recursiveFileLookup", "true")
-            .text(dir).count()
+            .text(bucketDir(db, container, b)).count()
         }.toMap
         // repair the sidecar so the next call is metadata-only
         writeBucketCounts(db, container,
@@ -783,7 +852,7 @@ case class FileAccount(root: String) {
             perBucket.map { case (b, n) => b -> (n, sigs(b)) })
         perBucket
       }
-    val strays = strayFiles(db, container)
+    val strays = listing.strays
     val strayCount =
       if (strays.isEmpty) 0L
       else spark.read.text(strays: _*).count()
@@ -939,11 +1008,14 @@ case class FileAccount(root: String) {
     * (plus any stray files at the data/ root, which can hold any key). This
     * is the engine's analogue of the reference's per-document point-read
     * (migration.py:119-122): target work scales with the buckets a batch
-    * touches, not with the container. */
+    * touches, not with the container. A `listing` of the data tree taken
+    * since its last write answers which dirs exist and what is stray
+    * instead of per-bucket calls. */
   def readRawBuckets(spark: SparkSession, db: String, container: String,
-                     buckets: Set[Long]): DataFrame = {
-    val paths = buckets.toSeq.sorted.map(bucketDir(db, container, _))
-      .filter(store.isDirectory(_)) ++ strayFiles(db, container)
+                     buckets: Set[Long],
+                     listing: Option[DataListing] = None): DataFrame = {
+    val paths = bucketDirs(db, container, buckets, listing) ++
+      straysOf(db, container, listing)
     if (paths.isEmpty)
       spark.range(0).select(lit(null).cast("string").as("raw"))
     else
@@ -957,16 +1029,28 @@ case class FileAccount(root: String) {
     * buckets any stray (out-of-layout) files hash to, so a subsequent
     * verification over the returned bucket set covers everything the upsert
     * may rewrite. `keys` carries the `keyCols` columns of the batch's VALID
-    * documents; the distinct-bucket collect is bounded by the container's
-    * bucket count. Returns (pruned raw frame, affected bucket ids). */
+    * documents. The source buckets come from one job with no exchange:
+    * each partition sets its keys' buckets in a bitset of the bucket
+    * count's width and the driver ORs them, so the collect is bounded by
+    * partitions × buckets / 8 bytes. `listing` as in [[readRawBuckets]].
+    * Returns (pruned raw frame, affected bucket ids). */
   def readRawBucketsFor(spark: SparkSession, db: String, container: String,
-                        keys: DataFrame, keyCols: Seq[String]): (DataFrame, Set[Long]) = {
+                        keys: DataFrame, keyCols: Seq[String],
+                        listing: Option[DataListing] = None): (DataFrame, Set[Long]) = {
     GraftFunctions.register(spark)
     val props = containerProperties(db, container)
-    val srcBuckets: Set[Long] = keys
-      .select(bucketCol(keyCols, props.buckets).as("__b")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val (read, affected, _) = readWithStrays(spark, db, container, props, srcBuckets)
+    import spark.implicits._
+    val srcBuckets: Set[Long] = keys.select(bucketCol(keyCols, props.buckets))
+      .as[Long].mapPartitions { bs =>
+        val bits = new java.util.BitSet
+        bs.foreach(b => bits.set(b.toInt))
+        Iterator(bits.toLongArray)
+      }.collect()
+      .foldLeft(new java.util.BitSet) { (acc, words) =>
+        acc.or(java.util.BitSet.valueOf(words)); acc }
+      .stream().toArray.map(_.toLong).toSet
+    val (read, affected, _) =
+      readWithStrays(spark, db, container, props, srcBuckets, listing)
     (read.fold(spark.range(0).select(lit(null).cast("string").as("raw")))(
       _.select("raw")), affected)
   }
@@ -977,23 +1061,24 @@ case class FileAccount(root: String) {
     * rewrite that absorbs it must read the bucket its rows land in. Rows:
     * `raw`, `__b` (a bucketed row's directory, so stored rows are never
     * parsed; a stray row's key bucket) and `__stray`. One bounded collect,
-    * only when strays exist. Returns (the rows, None when nothing is
-    * stored there; the buckets read; the strays read). */
+    * only when strays exist. `listing` as in [[readRawBuckets]]. Returns
+    * (the rows, None when nothing is stored there; the buckets read; the
+    * strays read). */
   private def readWithStrays(spark: SparkSession, db: String, container: String,
-                             props: ContainerProps, buckets: Set[Long])
+                             props: ContainerProps, buckets: Set[Long],
+                             listing: Option[DataListing] = None)
       : (Option[DataFrame], Set[Long], Seq[String]) = {
     def lines(paths: Seq[String]): DataFrame =
       spark.read.option("recursiveFileLookup", "true").text(paths: _*)
         .select(col("value").as("raw"))
-    val strays = strayFiles(db, container)
+    val strays = straysOf(db, container, listing)
     val strayRows =
       if (strays.isEmpty) None
       else Some(keyedRows(lines(strays), props.pkPaths, props.buckets)
         .select(col("raw"), col("__b"), lit(true).as("__stray")))
     val all = buckets ++ strayRows.fold(Set.empty[Long])(
       _.select("__b").distinct().collect().map(_.getLong(0)).toSet)
-    val dirs = all.toSeq.sorted.map(bucketDir(db, container, _))
-      .filter(store.isDirectory(_))
+    val dirs = bucketDirs(db, container, all, listing)
     val bucketRows =
       if (dirs.isEmpty) None
       else Some(lines(dirs).select(col("raw"),
@@ -1035,16 +1120,20 @@ case class FileAccount(root: String) {
   }
 
   /** Recount + re-sign `touched` buckets into the sidecar after a
-    * row-level group replacement; buckets that ended empty drop out. */
+    * row-level group replacement; buckets that ended empty drop out. The
+    * signatures come off `listing` (taken after the write) when the caller
+    * has one, else from a walk of each touched bucket. */
   private[core] def resignBuckets(db: String, container: String,
                                   touched: Set[Long],
-                                  counts: Map[Long, Long]): Unit = {
+                                  counts: Map[Long, Long],
+                                  listing: Option[DataListing] = None): Unit = {
     val prior = readBucketCounts(db, container)
     writeBucketCounts(db, container,
       (prior -- touched) ++ touched.toSeq.sorted.flatMap { b =>
         val n = counts.getOrElse(b, 0L)
         if (n == 0L) None
-        else Some(b -> (n, dirSignature(bucketDir(db, container, b))))
+        else Some(b -> (n, listing.fold(dirSignature(bucketDir(db, container, b)))(
+          _.signatures.getOrElse(b, ""))))
       })
   }
 
@@ -1053,6 +1142,19 @@ case class FileAccount(root: String) {
     * bucket layout on the next upsert that sees them. */
   private def strayFiles(db: String, container: String): Seq[String] =
     store.listFilePaths(dataDir(db, container)).filterNot(Storage.hidden)
+
+  /** The strays: off `listing` when the caller has one, else listed. */
+  private def straysOf(db: String, container: String,
+                       listing: Option[DataListing]): Seq[String] =
+    listing.fold(strayFiles(db, container))(_.strays)
+
+  /** The dirs of the `buckets` that exist: off `listing` when the caller
+    * has one, else probed one by one. */
+  private def bucketDirs(db: String, container: String, buckets: Set[Long],
+                         listing: Option[DataListing]): Seq[String] =
+    buckets.toSeq.sorted.filter(b =>
+      listing.fold(store.isDirectory(bucketDir(db, container, b)))(_.buckets(b)))
+      .map(bucketDir(db, container, _))
 
   private def bucketDir(db: String, container: String, b: Long): String =
     new HPath(dataDir(db, container), s"b=$b").toString
@@ -1078,10 +1180,14 @@ case class FileAccount(root: String) {
     * follows every task, so a recomputed block of the caller's persisted
     * input reads the files before the swap; `counts` (and any expected
     * figure) were aggregated before the write; and nothing reads the input
-    * after the commit — the caller unpersists it then. */
+    * after the commit — the caller unpersists it then.
+    *
+    * With `listAfter`, one walk of the whole data tree after the commit
+    * signs the sidecar and is returned, for a caller that checks every
+    * bucket next; without, only the rewritten buckets are walked. */
   private def rewriteBuckets(db: String, container: String, out: DataFrame,
-                             counts: Map[Long, Long],
-                             strays: Seq[String]): Unit = {
+                             counts: Map[Long, Long], strays: Seq[String],
+                             listAfter: Boolean = false): Option[DataListing] = {
     if (counts.values.exists(_ > 0L))
       out.write.partitionBy("b")
         .option("partitionOverwriteMode", "dynamic")
@@ -1090,7 +1196,9 @@ case class FileAccount(root: String) {
     counts.collect { case (b, 0L) => b }
       .foreach(b => store.deleteRecursive(bucketDir(db, container, b)))
     strays.foreach(store.delete(_))
-    resignBuckets(db, container, counts.keySet, counts)
+    val after = if (listAfter) Some(listData(db, container)) else None
+    resignBuckets(db, container, counts.keySet, counts, after)
+    after
   }
 
   /** The merge sink (A11/A12): land the post-merge rows of the buckets a
@@ -1105,18 +1213,23 @@ case class FileAccount(root: String) {
     *
     * Shape: one dynamic-partition-overwrite write job and the
     * [[rewriteBuckets]] tail; no re-read, no re-count. With nothing to
-    * rewrite (an all-skip rerun) it returns before any Spark action. At
-    * 100 TB with a 1% change rate and a well-chosen bucket count this
-    * rewrites ~1% of the container instead of 100%. `rows` reads the
-    * bucket files the write replaces; the caller keeps the commit-safety
-    * condition [[rewriteBuckets]] states. Returns the bucket ids
-    * rewritten. */
+    * rewrite (an all-skip rerun) it returns before any Spark action. The
+    * copy-on-write grain is the bucket: a delta of d changed keys over B
+    * buckets rewrites about 1 − (1 − 1/B)^d of the container, since merge
+    * keys hash uniformly (migrate_delta's 21 changed documents over 16
+    * buckets rewrite ~80% of its rows, `write_amp` ~57); only a delta
+    * whose keys cluster in few buckets rewrites a small share. `rows`
+    * reads the bucket files the write replaces; the caller keeps the
+    * commit-safety condition [[rewriteBuckets]] states. With `listAfter`
+    * it returns a listing of the data tree after the commit (Some when it
+    * rewrote anything), which signed the sidecar ([[rewriteBuckets]]). */
   def upsertRaw(spark: SparkSession, db: String, container: String,
                 rows: DataFrame, counts: Map[Long, Long],
-                strays: Seq[String]): Set[Long] = {
+                strays: Seq[String],
+                listAfter: Boolean = false): Option[DataListing] = {
     store.mkdirs(dataDir(db, container))
-    if (counts.isEmpty) return Set.empty
-    rewriteBuckets(db, container, rows, counts, strays)
+    if (counts.isEmpty) return None
+    val after = rewriteBuckets(db, container, rows, counts, strays, listAfter)
     // AUTO-COMPACTION (opt-in via the container's "autocompact" metadata /
     // TBLPROPERTIES): every upsert writes fresh part files into its
     // affected buckets, so a container fed by many small merges can grow
@@ -1127,11 +1240,11 @@ case class FileAccount(root: String) {
     // buckets are never examined, and the post-compaction sidecar re-sign
     // keeps verification metadata-only. Write amplification is bounded:
     // each upsert rewrites at most its own buckets one extra time.
-    containerProperties(db, container).autocompactFiles.foreach { thr =>
+    containerProperties(db, container).autocompactFiles.fold(after) { thr =>
       compactContainer(spark, db, container,
         only = Some(counts.keySet), fileThreshold = thr)
+      after.map(_ => listData(db, container))
     }
-    counts.keySet
   }
 
   /** Direct load: land `changed` documents (columns: `raw` + the key
@@ -1165,6 +1278,7 @@ case class FileAccount(root: String) {
             .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
           upsertRaw(spark, db, container, rows,
             affected.map(b => b -> counts.getOrElse(b, 0L)).toMap, strays)
+          affected
         } finally { rows.unpersist(); () }
       }
     } finally { chg.unpersist(); () }

@@ -3,7 +3,7 @@ package graft.core
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
@@ -79,15 +79,20 @@ object ContainerMerge {
       * what a key group leaves in the container. */
     private def first = col("__t_rn").isNull || col("__t_rn") === 1
 
-    /** One row per (action, bucket) — collect it and read it with
-      * [[Tally.of]]: counters, expected state, rewrite set, sidecar counts. */
-    lazy val tally: DataFrame = classified.groupBy("action", "__b").agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(when(first, col("__n"))), lit(0L)).as("src"),
-      coalesce(expr("bit_xor(xxhash64(raw))"), lit(0L)).as("h"),
-      count(when(first, lit(1))).as("kept"),
-      count(when(col("__t_stray"), lit(1))).as("stray"),
-      count(when(col("__t_rn") > 1, lit(1))).as("dup"))
+    /** One row per (action, bucket), the error rows in one group under a
+      * null bucket — collect it and read it with [[Tally.of]]: counters,
+      * expected state, rewrite set, sidecar counts and, up to the
+      * [[deadLines]] bound, the error lines themselves. */
+    lazy val tally: DataFrame = classified
+      .groupBy(col("action"), when(col("action") =!= "error", col("__b")).as("__b"))
+      .agg(
+        count(lit(1)).as("n"),
+        coalesce(sum(when(first, col("__n"))), lit(0L)).as("src"),
+        coalesce(expr("bit_xor(xxhash64(raw))"), lit(0L)).as("h"),
+        count(when(first, lit(1))).as("kept"),
+        count(when(col("__t_stray"), lit(1))).as("stray"),
+        count(when(col("__t_rn") > 1, lit(1))).as("dup"),
+        deadLines(col("action") === "error").as("dead"))
 
     /** The invalid source lines, for the dead-letter channel. */
     def errors: DataFrame =
@@ -114,10 +119,12 @@ object ContainerMerge {
     * `bit_xor(xxhash64(raw))` of the expected post-merge state (every
     * non-error row, duplicate target keys NOT collapsed, so a duplicate-key
     * target never verifies); `rewrite`: the buckets holding a changed,
-    * stray-file or duplicate-key row, each with the row count it keeps. */
+    * stray-file or duplicate-key row, each with the row count it keeps;
+    * `dead`: the error lines within the [[deadLines]] bound. */
   final case class Tally(actions: Map[String, Long], sourceCount: Long,
                          mergedKeys: Long, expectedCount: Long,
-                         expectedHash: Long, rewrite: Map[Long, Long])
+                         expectedHash: Long, rewrite: Map[Long, Long],
+                         dead: Seq[String])
 
   object Tally {
     def of(rows: Array[Row]): Tally = {
@@ -135,9 +142,43 @@ object ContainerMerge {
         state.map(n(_, "n")).sum,
         state.map(n(_, "h")).foldLeft(0L)(_ ^ _),
         state.filter(r => rewrite(n(r, "__b")))
-          .groupMapReduce(n(_, "__b"))(n(_, "kept"))(_ + _))
+          .groupMapReduce(n(_, "__b"))(n(_, "kept"))(_ + _),
+        rows.toSeq.flatMap(r => r.getSeq[String](r.fieldIndex("dead"))))
     }
   }
+
+  /** A tally carries at most [[DeadLines]] error lines of at most
+    * [[DeadLineBytes]] UTF-8 bytes each, so one partial aggregation buffer,
+    * and the driver collect, hold at most 4 MiB of them. */
+  private val DeadLines = 256
+  private val DeadLineBytes = 16 << 10
+
+  /** The bounded collect of the `raw` lines of the rows `isError` selects,
+    * for the dead-letter: `collect_top_k` keeps at most [[DeadLines]]
+    * values per buffer (`collect_list` would grow with the errors), and a
+    * line longer than [[DeadLineBytes]] is left out. [[deadLetter]] lands
+    * them only when none was left out. */
+  private def deadLines(isError: Column): Column =
+    GraftColumn.internalFn("collect_top_k",
+      when(isError && octet_length(col("raw")) <= DeadLineBytes, col("raw")),
+      lit(DeadLines), lit(false))
+
+  /** A13 dead-letter: land the `errors` invalid lines in the container's
+    * `_errors` — appended (SQL INSERT, streaming commit, sync, group
+    * replace), or replacing the channel with `overwrite` (the
+    * orchestrator). When `collected` holds every one of them (the tally's
+    * bounded collect) they land as one file with no Spark job
+    * ([[FileAccount.writeErrors]]); past the bound, `lines` is written by
+    * one text write job. */
+  private[graft] def deadLetter(account: FileAccount, db: String, container: String,
+                                errors: Long, collected: Seq[String],
+                                lines: => DataFrame, overwrite: Boolean): Unit =
+    if (errors > 0) {
+      if (collected.size == errors)
+        account.writeErrors(db, container, collected, replace = overwrite)
+      else lines.write.mode(if (overwrite) "overwrite" else "append")
+        .text(account.errorsPath(db, container))
+    }
 
   /** Key a raw-lines source once ([[RawMerge.srcKeyed]]); `fileCol`, when
     * the caller has one, rides along for the duplicate rule. */
@@ -165,7 +206,8 @@ object ContainerMerge {
     *  5. inserts/updates carry the write form, masked when `sanitize`. */
   def plan(s: SparkSession, target: FileAccount, db: String, container: String,
            keyed: DataFrame, pkPaths: Seq[String], fileCol: Option[String],
-           prune: Boolean, sanitize: Boolean): Plan = {
+           prune: Boolean, sanitize: Boolean,
+           listing: Option[DataListing] = None): Plan = {
     val keys = RawMerge.keyCols(pkPaths)
     val tkeys = RawMerge.tgtKeyCols(pkPaths)
     val valid = RawMerge.validCol(pkPaths)
@@ -179,11 +221,11 @@ object ContainerMerge {
       .filter(col("__rn") === 1)
     val invalid = keyed.filter(!valid).withColumn("__n", lit(1L))
     val (tgt, pruned) =
-      if (!target.hasData(db, container))
+      if (!listing.fold(target.hasData(db, container))(_.exists))
         (s.range(0).select(lit(null).cast("string").as("raw")), None)
       else if (prune) {
         val (df, buckets) = target.readRawBucketsFor(s, db, container,
-          keyed.filter(valid).select(keys.map(col): _*), keys)
+          keyed.filter(valid).select(keys.map(col): _*), keys, listing)
         (df, Some(buckets))
       } else (target.readRaw(s, db, container), None)
     val tw = Window.partitionBy(tkeys.map(col): _*)
@@ -210,11 +252,6 @@ object ContainerMerge {
     Plan(classified, pruned, tgt.inputFiles.toSeq)
   }
 
-  /** A13 dead-letter: append invalid lines to the container's `_errors`. */
-  private def deadLetter(account: FileAccount, db: String, container: String,
-                         lines: DataFrame): Unit =
-    lines.write.mode("append").text(account.errorsPath(db, container))
-
   /** Merge a raw-lines frame (a `raw` string column, plus `fileCol` when
     * the caller has one) into the container through [[plan]] → upsert,
     * against the pruned target: the SQL batch and streaming commits and
@@ -233,10 +270,9 @@ object ContainerMerge {
     try {
       val t = Tally.of(p.tally.collect())
       val errorRows = t.actions("error")
-      if (errorRows > 0) deadLetter(account, db, container, p.errors)
-      val rewritten = account.upsertRaw(s, db, container, p.rows(t), t.rewrite,
-        p.strays)
-      (Stats(t.sourceCount, t.mergedKeys, errorRows, rewritten), p)
+      deadLetter(account, db, container, errorRows, t.dead, p.errors, overwrite = false)
+      account.upsertRaw(s, db, container, p.rows(t), t.rewrite, p.strays)
+      (Stats(t.sourceCount, t.mergedKeys, errorRows, t.rewrite.keySet), p)
     } finally { p.classified.unpersist(); () }
   }
 
@@ -265,10 +301,13 @@ object ContainerMerge {
         account.bucketCol(RawMerge.keyCols(pkPaths), props.buckets)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // one tally: replacement rows per bucket, invalid rows under null
-      val tally = keyed.groupBy("b").count().collect()
-      if (tally.exists(_.isNullAt(0)))
-        deadLetter(account, db, container, keyed.filter(col("b").isNull).select("raw"))
+      // one tally: replacement rows per bucket, invalid rows (and their
+      // lines, up to the dead-letter bound) under null
+      val tally = keyed.groupBy("b")
+        .agg(count(lit(1)), deadLines(col("b").isNull)).collect()
+      tally.find(_.isNullAt(0)).foreach(r => deadLetter(account, db, container,
+        r.getLong(1), r.getSeq[String](2), keyed.filter(col("b").isNull).select("raw"),
+        overwrite = false))
       val outCounts: Map[Long, Long] = tally.filterNot(_.isNullAt(0))
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val prior = account.readBucketCounts(db, container)

@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * corpus/bucket fingerprints — never data bytes. */
 final case class FileMeta(relPath: String, size: Long, mtimeMs: Long)
 
+/** One recursive listing ([[Storage.tree]]): every file and every directory
+  * under a root, paths relative to it. */
+final case class FileTree(files: Seq[FileMeta], dirs: Seq[String])
+
 /** Capability hook for stores that can copy a file WITHOUT streaming its
   * bytes through this JVM (S3 CopyObject, GCS rewrite, Azure server-side
   * copy). A deployment's custom `fs.<scheme>.impl` implements this
@@ -71,7 +75,10 @@ trait Storage {
   /** Recursive file metadata under a tree, paths relative to `p`.
     * Empty if `p` is a file or absent — callers that accept single-file
     * roots use [[fileMeta]]. */
-  def walk(p: String): Seq[FileMeta]
+  final def walk(p: String): Seq[FileMeta] = tree(p).fold(Seq.empty[FileMeta])(_.files)
+  /** [[walk]] with the directories it passed: one `listStatus` per
+    * directory. None if `p` is a file or absent. */
+  def tree(p: String): Option[FileTree]
   /** Metadata of one file, if it exists. */
   def fileMeta(p: String): Option[FileMeta]
   def readString(p: String): String
@@ -271,25 +278,26 @@ final class HadoopStorage(conf: () => Configuration) extends Storage {
     if (!f.exists(hp) || f.getFileStatus(hp).isFile) Seq.empty
     else f.listStatus(hp).toSeq.filter(_.isFile).map(_.getPath.toString)
   }
-  override def walk(p: String): Seq[FileMeta] = {
+  override def tree(p: String): Option[FileTree] = {
     val hp = new Path(p)
     val f = fs(hp)
-    if (!f.exists(hp) || f.getFileStatus(hp).isFile) Seq.empty
+    val root =
+      try f.getFileStatus(hp) catch { case _: java.io.FileNotFoundException => null }
+    if (root == null || root.isFile) None
     else {
       // plain listStatus recursion, NOT listFiles(recursive): the latter
       // materializes LocatedFileStatus, whose eager permission load breaks
       // on custom local-backed schemes and buys nothing for metadata walks
-      val base = f.getFileStatus(hp).getPath.toUri.getPath // normalized
-      val out = Seq.newBuilder[FileMeta]
+      val base = root.getPath.toUri.getPath // normalized
+      val files = Seq.newBuilder[FileMeta]
+      val dirs = Seq.newBuilder[String]
       def rec(dir: Path): Unit = f.listStatus(dir).foreach { st =>
-        if (st.isDirectory) rec(st.getPath)
-        else {
-          val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-          out += FileMeta(rel, st.getLen, st.getModificationTime)
-        }
+        val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
+        if (st.isDirectory) { dirs += rel; rec(st.getPath) }
+        else files += FileMeta(rel, st.getLen, st.getModificationTime)
       }
       rec(hp)
-      out.result()
+      Some(FileTree(files.result(), dirs.result()))
     }
   }
   override def fileMeta(p: String): Option[FileMeta] = {

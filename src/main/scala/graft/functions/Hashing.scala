@@ -23,10 +23,4 @@ object Hashing {
   val MinhashPrime = 4294967311L
   val MinhashParams: Seq[(Long, Long)] =
     Seq((1000003L, 12345L), (2000003L, 54321L), (3000017L, 98765L), (4000037L, 13579L))
-
-  /** SQL fragment: i-th minhash permutation applied to hash expression `h`. */
-  def minhashPerm(i: Int, h: String): String = {
-    val (a, b) = MinhashParams(i)
-    s"(($a * $h + $b) % $MinhashPrime)"
-  }
 }

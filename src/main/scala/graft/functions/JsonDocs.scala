@@ -299,7 +299,6 @@ object JsonDocs {
     } else if (v.isBoolean) { if (v.booleanValue()) "true" else "false" }
     else v.toString
 
-  private def jstr(s: String): String = s
   private def first(s: String) = "Fn" + hex(s, 6)
   private def last(s: String) = "Ln" + hex(s, 6)
   private def full(s: String) = first(s) + " " + last(s)

@@ -147,8 +147,6 @@ object TextAnalysis {
     * ([[graft.functions.LangHits.StopWords]]). */
   val StopWords: Seq[(String, Seq[String])] = graft.functions.LangHits.StopWords
 
-  private def inList(ws: Seq[String]): String = ws.map(w => s"'$w'").mkString(", ")
-
   /** Language-ID: count function-word hits per language over the token
     * stream (duplicates count — frequency matters) via the fused
     * [[graft.functions.LangHits]] kernel (one pass; the composable form ran

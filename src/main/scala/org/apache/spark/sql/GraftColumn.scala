@@ -1,9 +1,10 @@
 /*
- * Bridge into Spark's private[sql] Column constructor. This file is the ONLY
- * one in the repo living outside the graft package, and it exists for exactly
- * one reason: wrapping an already-constructed Catalyst Expression (with
+ * Bridge into Spark's private[sql] Column constructors. This file is the
+ * ONLY one in the repo living outside the graft package, and it exists for
+ * two reasons: wrapping an already-constructed Catalyst Expression (with
  * non-literal bound state, e.g. a serialized bloom filter's Array[Byte]) in a
- * user-facing Column WITHOUT round-tripping it through SQL text.
+ * user-facing Column WITHOUT round-tripping it through SQL text, and calling
+ * a Spark-internal function (`Column.internalFn`) by name.
  *
  * Spark 4 made `Column(node)` / `ExpressionUtils.column(e)` private[sql] as
  * part of the Connect-compatible column-node refactor, so libraries that ship
@@ -27,4 +28,10 @@ import org.apache.spark.sql.classic.ExpressionColumnNode
   */
 object GraftColumn {
   def of(e: Expression): Column = Column(ExpressionColumnNode(e))
+
+  /** A Spark-internal SQL function by name, one the public `functions`
+    * object does not expose: [[graft.core.ContainerMerge]]'s tally calls
+    * `collect_top_k`, a collect whose buffer is bounded by its `n`. */
+  def internalFn(name: String, args: Column*): Column =
+    Column.internalFn(name, args: _*)
 }

@@ -383,6 +383,104 @@ class CatalogSpec extends AnyFunSuite {
     assert(jobSites(assert(migrate(spark, src, tgt).ok)).exists(_.contains("upsertRaw")))
   }
 
+  /** The visible lines of a container's dead-letter channel. */
+  private def deadLines(acc: FileAccount, db: String, c: String): Seq[String] = {
+    val dir = Paths.get(acc.errorsPath(db, c))
+    if (!Files.isDirectory(dir)) Nil
+    else Files.list(dir).iterator().asScala.toSeq
+      .filterNot(p => Seq("_", ".").exists(p.getFileName.toString.startsWith))
+      .flatMap(p => Files.readAllLines(p).asScala)
+  }
+
+  /** A 16-bucket target of 64 documents plus one dead-lettered line, and a
+    * delta source: 3 updates, 2 inserts and the given invalid lines. */
+  private def seededDelta(name: String, invalid: Seq[String]): (FileAccount, FileAccount) = {
+    val seed = newAccount(s"$name-seed")
+    seedContainer(seed, "db", "c", Seq("/id"),
+      (0 until 64).map(i => s"""{"id":"d$i","v":$i}""") :+ "seed-dead")
+    val tgt = newAccount(s"$name-tgt")
+    assert(migrate(spark, seed, tgt).ok)
+    assert(deadLines(tgt, "db", "c") == Seq("seed-dead"))
+    val src = newAccount(s"$name-src")
+    seedContainer(src, "db", "c", Seq("/id"),
+      Seq("""{"id":"d1","v":-1}""", """{"id":"d2","v":-2}""", """{"id":"d3","v":-3}""",
+        """{"id":"n1","v":1}""", """{"id":"n2","v":2}""") ++ invalid)
+    (src, tgt)
+  }
+
+  test("an incremental migrate runs at most 8 Spark jobs and dead-letters without a write job") {
+    val invalid = Seq("""{"id":"bad", truncated""", """{"v":"no id"}""")
+    val (src, tgt) = seededDelta("cat-jobs", invalid)
+    var r: Orchestrator.ContainerResult = null
+    val sites = jobSites {
+      r = migrate(spark, src, tgt, Config(incremental = Some(true))).results.head
+    }
+    assert(r.verified && r.verifyMode == "incremental" && r.errors == 2 &&
+      r.updated == 3 && r.inserted == 2, r.toString)
+    assert(sites.nonEmpty && sites.size <= 8,
+      s"a migrate call runs at most 8 jobs, got ${sites.size}:\n${sites.mkString("\n---\n")}")
+    // the sink's bucket write is the call's only write job
+    val writes = sites.filter(_.contains("DataFrameWriter"))
+    assert(writes.size == 1 && writes.forall(_.contains("upsertRaw")),
+      s"the dead-letter must start no write job: $writes")
+    // the channel holds exactly this run's invalid lines (overwrite mode)
+    assert(deadLines(tgt, "db", "c").sorted == invalid.sorted)
+  }
+
+  test("dead-letters past the inline bound land every line through the write job") {
+    // more invalid lines than the tally carries, and one line over its
+    // byte cap: each run falls back to the text write and loses nothing
+    for (invalid <- Seq((0 until 300).map(i => s"bad-$i"),
+                        Seq("short-bad", "x" * (20 << 10)))) {
+      val (src, tgt) = seededDelta("cat-deadcap", invalid)
+      var r: Orchestrator.ContainerResult = null
+      val sites = jobSites {
+        r = migrate(spark, src, tgt, Config(incremental = Some(true))).results.head
+      }
+      assert(r.verified && r.errors == invalid.size, r.toString)
+      assert(sites.exists(s => s.contains("DataFrameWriter") && !s.contains("upsertRaw")),
+        "past the bound the dead-letter is a write job")
+      assert(deadLines(tgt, "db", "c").sorted == invalid.sorted)
+    }
+  }
+
+  test("an SQL INSERT of a corrupt line appends to the error channel and keeps its files") {
+    val root = Files.createTempDirectory(Paths.get("target"), "sqlerr")
+    spark.conf.set("spark.sql.catalog.grafterr", classOf[graft.core.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.grafterr.root", root.toString)
+    spark.sql("CREATE NAMESPACE grafterr.db")
+    spark.sql("CREATE TABLE grafterr.db.c (raw STRING) TBLPROPERTIES ('pk'='/id')")
+    val acc = FileAccount(root.toString)
+    val dir = Paths.get(acc.errorsPath("db", "c"))
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("part-0.jsonl"), "prior-dead\n")
+    spark.sql("""INSERT INTO grafterr.db.c VALUES ('{"id":"a","v":1}'), ('corrupt-1')""")
+    spark.sql("""INSERT INTO grafterr.db.c VALUES ('corrupt-2')""")
+    assert(Files.exists(dir.resolve("part-0.jsonl")), "the prior dead-letter file must stay")
+    assert(deadLines(acc, "db", "c").sorted == Seq("corrupt-1", "corrupt-2", "prior-dead"))
+    assert(spark.table("grafterr.db.c").count() == 1)
+  }
+
+  test("the CLI summary reports per-phase milliseconds after the existing fields") {
+    spark.sparkContext
+    val src = freshSource()
+    val tgt = newAccount("cat-phase-t")
+    val summary = Files.createTempFile(Paths.get("target"), "phase-sum", ".json")
+    assert(Orchestrator.run(Array(src.root, tgt.root, "--summary", summary.toString)) == 0)
+    val js = new com.fasterxml.jackson.databind.ObjectMapper().readTree(summary.toFile)
+    val cs = js.get("containers").elements().asScala.toSeq
+    assert(cs.size == 3)
+    for (c <- cs) {
+      assert(c.fieldNames().asScala.toSeq == Seq("database", "container", "inserted",
+        "updated", "skipped", "errors", "source_count", "target_count", "verified",
+        "verify_mode", "phase_ms"), c.toString)
+      val ph = c.get("phase_ms")
+      assert(ph.fieldNames().asScala.toSeq ==
+        Seq("key", "classify_tally", "deadletter", "sink", "verify"), ph.toString)
+      assert(ph.elements().asScala.forall(v => v.isNumber && v.asDouble >= 0), ph.toString)
+    }
+  }
+
   test("duplicate merge keys in the source merge ONE document, from the last file") {
     // two lines for one (id, pk) in two source files: Cosmos could never
     // hold both, so the merge keeps the lexicographically last file's line

@@ -65,6 +65,36 @@ object SwapFaultFs {
   }
 }
 
+/** A local filesystem that counts the metadata calls (`listStatus`,
+  * `getFileStatus`) the engine's own code makes: calls whose nearest
+  * caller outside Hadoop, the JDK and Scala is in `graft.core`. Spark's
+  * file index and commit protocol are not counted. */
+class ListCountFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("listcount:///")
+  override def getScheme: String = "listcount"
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (ListCountFs.tick()) ListCountFs.listed.add(p.getName)
+    super.listStatus(p)
+  }
+  override def getFileStatus(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
+    ListCountFs.tick(); super.getFileStatus(p)
+  }
+}
+object ListCountFs {
+  val calls = new java.util.concurrent.atomic.AtomicLong
+  /** Names of the directories the engine listed, once per listing. */
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  private val skipped = Seq("org.apache.hadoop.", "java.", "jdk.", "scala.", "graft.ListCountFs")
+  def reset(): Unit = { calls.set(0); listed.clear() }
+  /** Count the call when the engine made it; true when it did. */
+  def tick(): Boolean = {
+    val engine = Thread.currentThread.getStackTrace.iterator.map(_.getClassName)
+      .find(c => !skipped.exists(c.startsWith)).exists(_.startsWith("graft.core."))
+    if (engine) calls.incrementAndGet()
+    engine
+  }
+}
+
 /** Proof of the [[graft.core.Storage]] boundary (SURVEY §2 A-storage /
   * round-5 port): the whole account surface — catalog, bucketed upsert,
   * sidecar counts, signatures, stray absorption — runs against a filesystem
@@ -507,5 +537,37 @@ class StorageSpec extends AnyFunSuite {
     assert(acct.listSnapshots("db", "t").map(_.tag) == Seq("v1"),
       "a refused swap must leave the table's published snapshots in place")
     assert(spark.sql("SELECT raw FROM graftsfh.db.t").collect().map(_.getString(0)).toSeq == Seq(doc))
+  }
+
+  test("an incremental migrate lists the target once before its sink and once after") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.listcount.impl", classOf[ListCountFs].getName)
+    val local = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "listcount").toAbsolutePath
+    def account(name: String, docs: Seq[String]): FileAccount = {
+      val data = local.resolve(s"$name/db/c/data")
+      java.nio.file.Files.createDirectories(data)
+      java.nio.file.Files.writeString(data.resolve("part-0.json"), docs.mkString("\n"))
+      FileAccount(s"listcount:${local.resolve(name)}")
+    }
+    val full = account("full", (0 until 64).map(i => s"""{"id":"d$i","v":$i}"""))
+    val delta = account("delta", Seq("""{"id":"d1","v":-1}""", """{"id":"n1","v":1}""", "bad"))
+    val tgt = FileAccount(s"listcount:${local.resolve("tgt")}")
+    assert(Orchestrator.migrateContainer(spark, full, tgt, "db", "c", Orchestrator.Config()).verified)
+    assert(tgt.bucketDirList("db", "c").size == 16)
+    ListCountFs.reset()
+    val r = Orchestrator.migrateContainer(spark, delta, tgt, "db", "c", Orchestrator.Config())
+    val calls = ListCountFs.calls.get
+    import scala.jdk.CollectionConverters._
+    val perBucket = ListCountFs.listed.asScala.toSeq.filter(_.startsWith("b="))
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(r.verified && r.verifyMode == "incremental" && r.updated == 1 &&
+      r.inserted == 1 && r.errors == 1, r.toString)
+    // one walk before the sink and one after list each bucket dir twice;
+    // a walk per bucket (pre-signatures, re-sign, post-signatures, the
+    // sidecar vouching) lists it again and adds 3 or more calls per bucket
+    assert(perBucket.size == 16 && perBucket.values.forall(_ == 2),
+      s"engine listings per bucket dir: $perBucket")
+    assert(calls <= 162, s"metadata calls from graft.core: $calls")
   }
 }
