@@ -19,10 +19,16 @@ import graft.core.{ContainerMerge, FileAccount}
   * buckets holding inserts/updates through the bucketed upsert sink
   * ([[FileAccount.upsertRaw]], fed from the classified frame — the skip
   * branch costs zero writes, like the reference's RU-saving skip,
-  * migration.py:124-130), then verify. Counters, the expected state and
-  * the rewrite set come from one aggregation over the classified frame (the
-  * reference increments Python ints per document, migration.py:130-146). Corrupt or
-  * invalid documents land in the error counter and the per-container
+  * migration.py:124-130), then verify. The classified frame is clustered
+  * by bucket, so each rewritten bucket lands as ONE file, or one per
+  * slice when the container has fewer buckets than the session has cores
+  * or a bucket reads over 128 MB (the reference writes one document per
+  * call; a file create is this sink's unit of cost, as a PUT is on an
+  * object store). Counters, the expected state and the rewrite set come
+  * from one aggregation over the classified frame (the reference
+  * increments Python ints per document, migration.py:130-146), which
+  * reuses the bucket clustering and shuffles nothing. Corrupt or invalid
+  * documents land in the error counter and the per-container
   * dead-letter channel `_errors` (A13) — never a task failure; `maxErrors`
   * bounds how many before the container aborts. Like the reference's
   * per-document error write, the dead-letter costs no Spark job: the tally
@@ -123,8 +129,10 @@ object Orchestrator {
     val props = source.containerProperties(db, container)
     target.createDatabaseIfAbsent(db)
     target.createContainerIfAbsent(db, container, props)
-    assertPkAligned(props.pkPaths,
-      target.containerProperties(db, container).pkPaths, db, container)
+    // the target's `_meta.json` is read once: the plan and its pruned read
+    // take these
+    val tprops = target.containerProperties(db, container)
+    assertPkAligned(props.pkPaths, tprops.pkPaths, db, container)
     val pkPaths = props.pkPaths
 
     // one walk of the target tree before the sink: the mode rule's bytes,
@@ -144,7 +152,7 @@ object Orchestrator {
     val keyed = ContainerMerge.key(spark, source.readRaw(spark, db, container)
       .withColumn("__f", input_file_name()), pkPaths, Some("__f"))
     val plan = ContainerMerge.plan(spark, target, db, container, keyed,
-      pkPaths, Some("__f"), prune = incremental, sanitize = cfg.sanitize,
+      tprops, Some("__f"), prune = incremental, sanitize = cfg.sanitize,
       listing = Some(pre))
     val keyMs = lap()
     plan.classified.cache()

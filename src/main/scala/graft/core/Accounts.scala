@@ -1032,13 +1032,13 @@ case class FileAccount(root: String) {
     * documents. The source buckets come from one job with no exchange:
     * each partition sets its keys' buckets in a bitset of the bucket
     * count's width and the driver ORs them, so the collect is bounded by
-    * partitions × buckets / 8 bytes. `listing` as in [[readRawBuckets]].
+    * partitions × buckets / 8 bytes. `props` are the container's, as the
+    * caller read them; `listing` as in [[readRawBuckets]].
     * Returns (pruned raw frame, affected bucket ids). */
   def readRawBucketsFor(spark: SparkSession, db: String, container: String,
-                        keys: DataFrame, keyCols: Seq[String],
+                        props: ContainerProps, keys: DataFrame, keyCols: Seq[String],
                         listing: Option[DataListing] = None): (DataFrame, Set[Long]) = {
     GraftFunctions.register(spark)
-    val props = containerProperties(db, container)
     import spark.implicits._
     val srcBuckets: Set[Long] = keys.select(bucketCol(keyCols, props.buckets))
       .as[Long].mapPartitions { bs =>
@@ -1172,7 +1172,13 @@ case class FileAccount(root: String) {
     * ended empty (the overwrite only replaces partitions PRESENT in the
     * output), delete the stray files whose rows `out` absorbed, and re-sign
     * the sidecar. `counts` holds every rewritten bucket with its row count
-    * in `out`.
+    * in `out`. Each write task lands one file per bucket it holds rows of:
+    * the merge sink's input is clustered by bucket, so each rewritten
+    * bucket lands as one file (one per slice on a container with fewer
+    * buckets than cores or buckets read from over
+    * [[ContainerMerge.SliceBytes]]); the direct load and the key delete keep
+    * their input's partitioning (one file per task × bucket), compaction
+    * its size slices.
     *
     * Commit safety: `out` may read the very bucket files the write
     * replaces, and needs no lineage checkpoint, on one condition every
@@ -1212,8 +1218,13 @@ case class FileAccount(root: String) {
     * read it is not in `strays` and survives.
     *
     * Shape: one dynamic-partition-overwrite write job and the
-    * [[rewriteBuckets]] tail; no re-read, no re-count. With nothing to
-    * rewrite (an all-skip rerun) it returns before any Spark action. The
+    * [[rewriteBuckets]] tail; no re-read, no re-count. `rows` from a
+    * merge plan is clustered by bucket, so each rewritten bucket lands as
+    * one file (one per slice on a container with fewer buckets than
+    * cores or buckets read from over [[ContainerMerge.SliceBytes]],
+    * [[ContainerMerge.clustering]]); the direct load below still
+    * writes one per task × bucket. With nothing to rewrite (an all-skip
+    * rerun) it returns before any Spark action. The
     * copy-on-write grain is the bucket: a delta of d changed keys over B
     * buckets rewrites about 1 − (1 − 1/B)^d of the container, since merge
     * keys hash uniformly (migrate_delta's 21 changed documents over 16
@@ -1228,23 +1239,8 @@ case class FileAccount(root: String) {
                 strays: Seq[String],
                 listAfter: Boolean = false): Option[DataListing] = {
     store.mkdirs(dataDir(db, container))
-    if (counts.isEmpty) return None
-    val after = rewriteBuckets(db, container, rows, counts, strays, listAfter)
-    // AUTO-COMPACTION (opt-in via the container's "autocompact" metadata /
-    // TBLPROPERTIES): every upsert writes fresh part files into its
-    // affected buckets, so a container fed by many small merges can grow
-    // its per-bucket file count. With a threshold N set, any
-    // JUST-REWRITTEN bucket that ended with more than max(N, size-target)
-    // files is compacted inline — upkeep stays O(affected buckets) per
-    // write (the restriction bounds the metadata walk too), untouched
-    // buckets are never examined, and the post-compaction sidecar re-sign
-    // keeps verification metadata-only. Write amplification is bounded:
-    // each upsert rewrites at most its own buckets one extra time.
-    containerProperties(db, container).autocompactFiles.fold(after) { thr =>
-      compactContainer(spark, db, container,
-        only = Some(counts.keySet), fileThreshold = thr)
-      after.map(_ => listData(db, container))
-    }
+    if (counts.isEmpty) None
+    else rewriteBuckets(db, container, rows, counts, strays, listAfter)
   }
 
   /** Direct load: land `changed` documents (columns: `raw` + the key
@@ -1278,6 +1274,24 @@ case class FileAccount(root: String) {
             .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
           upsertRaw(spark, db, container, rows,
             affected.map(b => b -> counts.getOrElse(b, 0L)).toMap, strays)
+          // AUTO-COMPACTION (opt-in via the container's "autocompact"
+          // metadata / TBLPROPERTIES): this load writes one part file per
+          // write task into each affected bucket, so a container fed by
+          // many small loads can grow its per-bucket file count. With a
+          // threshold N set, any JUST-REWRITTEN bucket that ended with more
+          // than max(N, size-target) files is compacted inline — upkeep
+          // stays O(affected buckets) per write (the restriction bounds the
+          // metadata walk too), untouched buckets are never examined, and
+          // the post-compaction sidecar re-sign keeps verification
+          // metadata-only. Write amplification is bounded: each load
+          // rewrites at most its own buckets one extra time. (The merge
+          // sink needs no such hook: it replaces each rewritten bucket
+          // with one file, or one per slice of its cores or its bytes, no
+          // more than compaction's size target asks for.)
+          props.autocompactFiles.foreach { thr =>
+            compactContainer(spark, db, container,
+              only = Some(affected), fileThreshold = thr)
+          }
           affected
         } finally { rows.unpersist(); () }
       }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
@@ -67,24 +68,31 @@ object ContainerMerge {
     * classification: every source row with its action plus every target
     * row the plan read, `raw` in post-merge form (masked on inserts and
     * updates under `sanitize`), `__n` (source lines behind the row), `__b`
-    * (the row's bucket), `__t_rn` (rank of the target row within its merge
-    * key, null when no target row joined), `__t_stray` (read from a stray
-    * file). `pruned` is the bucket set a pruned target side reads (`None`
-    * for a whole-container or absent target); `targetFiles` are the files
-    * the target side reads. Callers persist `classified` for the [[tally]]
-    * collect and the sink write, and unpersist it after the sink. */
+    * (the row's bucket; null on an error row), `__t_rn` (rank of the
+    * target row within its merge key, null when no target row joined),
+    * `__t_stray` (read from a stray file), `__p` (its partition). It is
+    * partitioned by `__p` ([[clustering]]): each bucket's rows sit in one
+    * partition, or in one per slice when the session has more cores than
+    * the container has buckets or a bucket reads over [[SliceBytes]].
+    * `pruned` is the bucket set a pruned
+    * target side reads (`None` for a whole-container or absent target);
+    * `targetFiles` are the files the target side reads. Callers persist
+    * `classified` for the [[tally]] collect and the sink write, and
+    * unpersist it after the sink. */
   final case class Plan(classified: DataFrame, pruned: Option[Set[Long]],
                         targetFiles: Seq[String]) {
     /** Per merge key, the first target row (or the unmatched source row):
       * what a key group leaves in the container. */
     private def first = col("__t_rn").isNull || col("__t_rn") === 1
 
-    /** One row per (action, bucket), the error rows in one group under a
-      * null bucket — collect it and read it with [[Tally.of]]: counters,
-      * expected state, rewrite set, sidecar counts and, up to the
-      * [[deadLines]] bound, the error lines themselves. */
+    /** One row per (partition, bucket, action); the error rows carry a
+      * null `__b`, so they form one group — collect it and read it with
+      * [[Tally.of]]: counters, expected state, rewrite set, sidecar counts
+      * and, up to the [[deadLines]] bound, the error lines themselves.
+      * Grouped by `__p` first, it needs no exchange of its own: AQE reads
+      * the cached frame's `__p` partitioning. */
     lazy val tally: DataFrame = classified
-      .groupBy(col("action"), when(col("action") =!= "error", col("__b")).as("__b"))
+      .groupBy(col("__p"), col("__b"), col("action"))
       .agg(
         count(lit(1)).as("n"),
         coalesce(sum(when(first, col("__n"))), lit(0L)).as("src"),
@@ -203,11 +211,23 @@ object ContainerMerge {
     *     its first row when its bucket is rewritten. A row's bucket is its
     *     key's, except a stored row whose key does not parse: it keeps its
     *     directory's, as in every bucket rewrite;
-    *  5. inserts/updates carry the write form, masked when `sanitize`. */
+    *  5. inserts/updates carry the write form, masked when `sanitize`;
+    *  6. the classified rows are clustered by bucket (one exchange on
+    *     the partition id [[clustering]] deals), so the tally groups them
+    *     with no further exchange and the sink lands each rewritten
+    *     bucket as ONE file per slice: one file when the container has at
+    *     least as many buckets as the session has cores and its buckets
+    *     read under [[SliceBytes]] each, the small rewritten buckets the
+    *     gain needs. The costs: one task writes all of a bucket slice, so
+    *     a bucket far larger than the others makes a straggler; the error
+    *     rows sit in partition 0; and the classified rows cross one more
+    *     exchange.
+    * `props` are the target's, read once by the caller. */
   def plan(s: SparkSession, target: FileAccount, db: String, container: String,
-           keyed: DataFrame, pkPaths: Seq[String], fileCol: Option[String],
+           keyed: DataFrame, props: ContainerProps, fileCol: Option[String],
            prune: Boolean, sanitize: Boolean,
            listing: Option[DataListing] = None): Plan = {
+    val pkPaths = props.pkPaths
     val keys = RawMerge.keyCols(pkPaths)
     val tkeys = RawMerge.tgtKeyCols(pkPaths)
     val valid = RawMerge.validCol(pkPaths)
@@ -224,7 +244,7 @@ object ContainerMerge {
       if (!listing.fold(target.hasData(db, container))(_.exists))
         (s.range(0).select(lit(null).cast("string").as("raw")), None)
       else if (prune) {
-        val (df, buckets) = target.readRawBucketsFor(s, db, container,
+        val (df, buckets) = target.readRawBucketsFor(s, db, container, props,
           keyed.filter(valid).select(keys.map(col): _*), keys, listing)
         (df, Some(buckets))
       } else (target.readRaw(s, db, container), None)
@@ -244,13 +264,56 @@ object ContainerMerge {
       if (!sanitize) joined
       else joined.withColumn("raw", when(col("action").isin("insert", "update"),
         expr("mask_json(raw)")).otherwise(col("raw")))
+    // the input bytes per bucket read: a pruned read's source keys all
+    // hash to its buckets
+    val bucketBytes = (fileBytes(keyed) + fileBytes(tgt)) /
+      math.max(1, pruned.fold(props.buckets)(_.size))
+    val (width, part) = clustering(s, props.buckets, bucketBytes)
     // a stored row whose key does not parse keeps its directory's bucket
-    val classified = masked.withColumn("__b", coalesce(
-      when(keys.map(col(_).isNull).reduce(_ || _), col("__t_b")),
-      target.bucketCol(keys, target.containerProperties(db, container).buckets)))
+    val classified = masked.withColumn("__b", when(col("action") =!= "error",
+        coalesce(when(keys.map(col(_).isNull).reduce(_ || _), col("__t_b")),
+          target.bucketCol(keys, props.buckets))))
       .drop("__t_b")
+      .withColumn("__p", part)
+      .repartitionById(width, col("__p"))
     Plan(classified, pruned, tgt.inputFiles.toSeq)
   }
+
+  /** The input bytes per bucket slice a merge aims at: compaction's
+    * default target file size ([[FileAccount.compactContainer]]). */
+  val SliceBytes: Long = 128L << 20
+
+  /** The bucket clustering of [[plan]] for a container of `buckets`
+    * buckets, each read from about `bucketBytes` of input: the partition
+    * count and each row's partition id (`__p`). A bucket splits into
+    * `slices` content-hash slices: enough that every core of the session
+    * writes when the container has fewer buckets than cores, and that no
+    * slice reads more than about [[SliceBytes]] (AQE neither splits nor
+    * coalesces a cached plan's partitions, so the clustering alone sizes
+    * the tally and sink tasks). The (bucket, slice) groups are dealt
+    * round-robin onto the partitions, at most the session's shuffle
+    * partition count of them, so each partition holds as many groups as
+    * the next, give or take one (a hash of the bucket id would not:
+    * Spark's murmur3 lands 16 buckets on 4 partitions 6/6/3/1). Error
+    * rows, bucket null, go to partition 0. */
+  private[graft] def clustering(s: SparkSession, buckets: Int,
+                                bucketBytes: Long): (Int, Column) = {
+    val slices = Seq(1L, (s.sparkContext.defaultParallelism + buckets - 1L) / buckets,
+      (bucketBytes + SliceBytes - 1L) / SliceBytes).max
+    val groups = buckets * slices
+    val width = math.max(1L, math.min(groups,
+      s.conf.get("spark.sql.shuffle.partitions").toLong)).toInt
+    val group = if (slices == 1) col("__b")
+      else col("__b") * slices + pmod(xxhash64(col("raw")), lit(slices))
+    (width, pmod(coalesce(group, lit(0L)), lit(width.toLong)).cast("int"))
+  }
+
+  /** Bytes of the files behind `df`'s file-source leaves; other leaves (a
+    * local relation, a stream's batch, an empty range) count 0. The file
+    * index holds the sizes already: no file-system call. */
+  private def fileBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case l: LogicalRelation => l.relation.sizeInBytes }.sum
 
   /** Merge a raw-lines frame (a `raw` string column, plus `fileCol` when
     * the caller has one) into the container through [[plan]] → upsert,
@@ -263,9 +326,9 @@ object ContainerMerge {
                container: String, src: DataFrame,
                fileCol: Option[String] = None,
                sanitize: Boolean = false): (Stats, Plan) = {
-    val pkPaths = account.containerProperties(db, container).pkPaths
-    val p = plan(s, account, db, container, key(s, src, pkPaths, fileCol),
-      pkPaths, fileCol, prune = true, sanitize = sanitize)
+    val props = account.containerProperties(db, container)
+    val p = plan(s, account, db, container, key(s, src, props.pkPaths, fileCol),
+      props, fileCol, prune = true, sanitize = sanitize)
     p.classified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val t = Tally.of(p.tally.collect())
@@ -326,7 +389,7 @@ object ContainerMerge {
       account.resignBuckets(db, container, touched, counts)
       // a row-level rewrite lands one part file per write task per bucket,
       // so a wide MERGE/UPDATE leaves batch-shaped small files exactly
-      // like the upsert path — the same opt-in inline compaction bounds
+      // like the direct load — the same opt-in inline compaction bounds
       // them (O(touched buckets) upkeep, untouched buckets never examined)
       props.autocompactFiles.foreach { thr =>
         account.compactContainer(s, db, container,

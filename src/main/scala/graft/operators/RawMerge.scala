@@ -25,10 +25,16 @@ import graft.functions.Hashing.md5h32
   * dead-letter file, never as a task failure.
   *
   * Scale shape: key extraction and canonical hashing are map-side projections
-  * inside whole-stage codegen; the single shuffle is the (id ++ pk) equi-join
-  * against the target snapshot, and the join payload carries the 32-char
-  * canonical md5 instead of re-shipping parsed documents. AQE broadcasts a
-  * small target and splits skewed keys.
+  * inside whole-stage codegen, and the join payload carries the 32-char
+  * canonical md5 instead of re-shipping parsed documents. A container merge
+  * ([[graft.core.ContainerMerge.plan]]) crosses three exchanges: the
+  * full-outer (id ++ pk) equi-join, which Spark never broadcasts, shuffles
+  * the source and the target once each on the merge key (the dedup and
+  * rank windows reuse those partitionings), and the classified rows are
+  * clustered by bucket, dealt evenly onto the partitions. Its tally groups
+  * by that partition id first and needs no exchange of its own. AQE
+  * coalesces small partitions and splits skewed keys; only the left-outer
+  * [[classify]] may broadcast a small target.
   */
 object RawMerge {
 

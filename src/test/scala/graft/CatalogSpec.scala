@@ -184,8 +184,8 @@ class CatalogSpec extends AnyFunSuite {
     // no full-container listing) back the incremental target side
     graft.functions.GraftFunctions.register(spark)
     val keys = spark.range(1).selectExpr("'e2' AS __id", "'eng' AS __pk0")
-    val (pruned, buckets) = tgtInc.readRawBucketsFor(
-      spark, "hr", "employees", keys, Seq("__id", "__pk0"))
+    val (pruned, buckets) = tgtInc.readRawBucketsFor(spark, "hr", "employees",
+      tgtInc.containerProperties("hr", "employees"), keys, Seq("__id", "__pk0"))
     assert(buckets.size == 1)
     assert(pruned.inputFiles.nonEmpty && pruned.inputFiles.forall(f =>
       buckets.exists(b => f.contains(s"b=$b"))),
@@ -425,6 +425,93 @@ class CatalogSpec extends AnyFunSuite {
       s"the dead-letter must start no write job: $writes")
     // the channel holds exactly this run's invalid lines (overwrite mode)
     assert(deadLines(tgt, "db", "c").sorted == invalid.sorted)
+  }
+
+  /** The data file names of each bucket dir (hidden files excluded). */
+  private def bucketFiles(acc: FileAccount, db: String, c: String): Map[Long, Seq[String]] =
+    acc.bucketDirList(db, c).map { case (b, dir) =>
+      b -> Files.list(Paths.get(dir)).iterator().asScala.toSeq
+        .map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+    }.toMap
+
+  test("a merge lands each rewritten bucket as one data file") {
+    val (src, tgt) = seededDelta("cat-onefile", Nil)
+    // the buckets whose files a merge replaced, with their files
+    def rewritten(pre: Map[Long, Seq[String]], post: Map[Long, Seq[String]]) =
+      post.filter { case (b, fs) => !pre.get(b).contains(fs) }
+    val seeded = bucketFiles(tgt, "db", "c")
+    assert(seeded.size == 16 && seeded.values.forall(_.size == 1),
+      s"the seeding migrate is a merge too: $seeded")
+
+    val r = migrate(spark, src, tgt, Config(incremental = Some(true))).results.head
+    assert(r.verified && r.updated == 3 && r.inserted == 2, r.toString)
+    val migrated = bucketFiles(tgt, "db", "c")
+    val byMigrate = rewritten(seeded, migrated)
+    assert(byMigrate.nonEmpty && byMigrate.values.forall(_.size == 1),
+      s"an incremental migrate: $byMigrate")
+
+    // an SQL INSERT commits through mergeRaw
+    spark.conf.set("spark.sql.catalog.graftone", classOf[graft.core.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftone.root", tgt.root)
+    val values = (0 until 32).map(i => s"""('{"id":"s$i","v":$i}')""").mkString(", ")
+    spark.sql(s"INSERT INTO graftone.db.c VALUES $values")
+    val byInsert = rewritten(migrated, bucketFiles(tgt, "db", "c"))
+    assert(byInsert.nonEmpty && byInsert.values.forall(_.size == 1),
+      s"an SQL INSERT: $byInsert")
+    assert(spark.table("graftone.db.c").count() == 64 + 2 + 32)
+  }
+
+  test("the merge spreads buckets evenly over the partitions and slices a container with fewer buckets than cores") {
+    // the session may be one an earlier suite built: read its shape
+    val cores = spark.sparkContext.defaultParallelism
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val docs = (0 until 256).map(i => s"""{"id":"d$i","v":$i}""")
+    // the (partition, bucket) pairs of a plan's classified rows
+    def layout(acc: FileAccount, buckets: Int): Seq[(Int, Long)] = {
+      val props = ContainerProps(Seq("/id"), buckets)
+      val src = spark.createDataset(docs)(org.apache.spark.sql.Encoders.STRING).toDF("raw")
+      val p = graft.core.ContainerMerge.plan(spark, acc, "db", "c",
+        graft.core.ContainerMerge.key(spark, src, props.pkPaths), props,
+        None, prune = false, sanitize = false)
+      p.classified.select(spark_partition_id(), col("__b")).distinct().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toSeq
+    }
+    // 16 buckets: each in one partition, every partition holding as many
+    // as the next give or take one
+    val even = layout(newAccount("cat-even"), 16)
+    val perPart = even.groupBy(_._1).values.map(_.size)
+    assert(even.map(_._2).distinct.size == 16 && even.size == 16 &&
+      perPart.size == math.min(16, width) && perPart.max - perPart.min <= 1,
+      s"16 buckets on $width partitions: $even")
+    // one bucket, more cores than buckets: a slice per core
+    val spread = math.min(cores, width)
+    val sliced = layout(newAccount("cat-sliced"), 1)
+    assert(spread > 1 && sliced.map(_._1).distinct.size == spread,
+      s"1 bucket on $cores cores: $sliced")
+    // buckets read from over twice SliceBytes each: three slices a bucket
+    val (w3, p3) = graft.core.ContainerMerge.clustering(spark, 2,
+      2 * graft.core.ContainerMerge.SliceBytes + 1)
+    val big = spark.createDataset(docs)(org.apache.spark.sql.Encoders.STRING).toDF("raw")
+      .withColumn("__b", pmod(hash(col("raw")), lit(2)).cast("long"))
+      .select(col("__b"), p3.as("__p")).distinct().collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toSeq
+    assert(w3 == math.min(6, width) && big.groupBy(_._1).values
+      .forall(_.map(_._2).distinct.size == math.min(3, w3)) && big.map(_._1).distinct.size == 2,
+      s"2 large buckets on $width partitions: $big")
+
+    // a migrate into that target lands the bucket as one file per slice
+    val src = newAccount("cat-few-src")
+    src.createDatabaseIfAbsent("db")
+    src.createContainerIfAbsent("db", "c", ContainerProps(Seq("/id"), 1))
+    Files.createDirectories(Paths.get(src.root, "db", "c", "data"))
+    Files.writeString(Paths.get(src.root, "db", "c", "data", "part-0.json"),
+      docs.mkString("\n"))
+    val tgt = newAccount("cat-few-tgt")
+    assert(migrate(spark, src, tgt).ok)
+    val files = bucketFiles(tgt, "db", "c")
+    assert(files.size == 1 && files.values.forall(_.size == spread), s"$files")
+    assert(tgt.readRaw(spark, "db", "c").count() == 256)
   }
 
   test("dead-letters past the inline bound land every line through the write job") {

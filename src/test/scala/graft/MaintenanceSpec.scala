@@ -141,11 +141,12 @@ class MaintenanceSpec extends AnyFunSuite {
             !p.getFileName.toString.startsWith("."))
       }.maxOption.getOrElse(0)
 
+    // fed through the direct load, which fans out one file per write task
+    // and bucket (a merge lands each rewritten bucket as one file)
     for (batch <- 0 until 8) {
-      val values = (0 until 8).map(i =>
-        s"""('{"id":"b$batch-$i","v":$i}')""").mkString(", ")
-      spark.sql(s"INSERT INTO grafta.db.bounded VALUES $values")
-      spark.sql(s"INSERT INTO grafta.db.control VALUES $values")
+      val docs = (0 until 8).map(i => s"""{"id":"b$batch-$i","v":$i}""")
+      upsert(acc, "db", "bounded", docs, parts = 8)
+      upsert(acc, "db", "control", docs, parts = 8)
     }
     val bounded = maxFilesPerBucket("bounded")
     val control = maxFilesPerBucket("control")

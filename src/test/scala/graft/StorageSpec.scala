@@ -66,9 +66,10 @@ object SwapFaultFs {
 }
 
 /** A local filesystem that counts the metadata calls (`listStatus`,
-  * `getFileStatus`) the engine's own code makes: calls whose nearest
-  * caller outside Hadoop, the JDK and Scala is in `graft.core`. Spark's
-  * file index and commit protocol are not counted. */
+  * `getFileStatus`) and the `_meta.json` reads the engine's own code
+  * makes: calls whose nearest caller outside Hadoop, the JDK and Scala is
+  * in `graft.core`. Spark's file index and commit protocol are not
+  * counted. */
 class ListCountFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("listcount:///")
   override def getScheme: String = "listcount"
@@ -79,17 +80,25 @@ class ListCountFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getFileStatus(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
     ListCountFs.tick(); super.getFileStatus(p)
   }
+  override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (p.getName == "_meta.json" && ListCountFs.byEngine) ListCountFs.metaReads.incrementAndGet()
+    super.open(p, bufferSize)
+  }
 }
 object ListCountFs {
   val calls = new java.util.concurrent.atomic.AtomicLong
+  /** Opens of a `_meta.json` by the engine. */
+  val metaReads = new java.util.concurrent.atomic.AtomicLong
   /** Names of the directories the engine listed, once per listing. */
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]
   private val skipped = Seq("org.apache.hadoop.", "java.", "jdk.", "scala.", "graft.ListCountFs")
-  def reset(): Unit = { calls.set(0); listed.clear() }
+  def reset(): Unit = { calls.set(0); metaReads.set(0); listed.clear() }
+  /** True when the engine made the current call. */
+  def byEngine: Boolean = Thread.currentThread.getStackTrace.iterator.map(_.getClassName)
+    .find(c => !skipped.exists(c.startsWith)).exists(_.startsWith("graft.core."))
   /** Count the call when the engine made it; true when it did. */
   def tick(): Boolean = {
-    val engine = Thread.currentThread.getStackTrace.iterator.map(_.getClassName)
-      .find(c => !skipped.exists(c.startsWith)).exists(_.startsWith("graft.core."))
+    val engine = byEngine
     if (engine) calls.incrementAndGet()
     engine
   }
@@ -569,5 +578,8 @@ class StorageSpec extends AnyFunSuite {
     assert(perBucket.size == 16 && perBucket.values.forall(_ == 2),
       s"engine listings per bucket dir: $perBucket")
     assert(calls <= 162, s"metadata calls from graft.core: $calls")
+    // the target's container properties are read once and passed down
+    assert(ListCountFs.metaReads.get == 1,
+      s"_meta.json reads per call: ${ListCountFs.metaReads.get}")
   }
 }
